@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from gotsdb_spark.operators.registry import GATED_QUERIES, query
 from gotsdb_spark.scratch import scratch_dir as _scratch_dir
 from gotsdb_spark.sources.registry import load_table
-from gotsdb_spark.storage.engine import Engine
+from gotsdb_spark.storage.engine import Engine, write_parquet_atomic
 from gotsdb_spark.streaming import (
     read_events_stream,
     run_stream_to_memory,
@@ -62,20 +62,16 @@ def _append_sentinel_rows(path: str, df: DataFrame) -> None:
     """Append a HANDFUL of watermark-advance sentinel rows to a replay
     dir driver-side (pyarrow) instead of through a Spark write job.
 
-    Every `1-row-frame.repartition(1).write.parquet` wave cost
-    0.7–1.8 s of pure job overhead (shuffle + task launch + commit
-    protocol) per call — measured at sf0.1 on the left-outer interval
-    join, whose two sentinel waves × two sides paid it four times.
     The sentinel frames are 1–2 literal or 1-row-aggregate rows by
     construction (they exist only to push the watermark), so the
-    driver-side write is O(1); timestamps cross as epoch micros to
-    stay timezone-exact, and the file matches EVENT_SCHEMA so the
-    schema-pinned file-source stream reads it like any other wave.
+    driver-side write is O(1) and avoids a whole Spark write job per
+    wave. Timestamps cross as epoch micros and are written as
+    timestamp("us", tz="UTC") to stay timezone-exact; the file matches
+    EVENT_SCHEMA so the schema-pinned file-source stream reads it like
+    any other wave. `write_parquet_atomic` renames the file into place,
+    so a running file-stream source never lists a partial file.
     """
-    import uuid
-
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     rows = df.select(
         F.col("event_id").cast("long"),
@@ -88,7 +84,9 @@ def _append_sentinel_rows(path: str, df: DataFrame) -> None:
     tbl = pa.table(
         {
             "event_id": pa.array([r["event_id"] for r in rows], pa.int64()),
-            "ts": pa.array([r["ts_us"] for r in rows], pa.timestamp("us")),
+            "ts": pa.array(
+                [r["ts_us"] for r in rows], pa.timestamp("us", tz="UTC")
+            ),
             "user_id": pa.array([r["user_id"] for r in rows], pa.int64()),
             "event_type": pa.array(
                 [r["event_type"] for r in rows], pa.string()
@@ -97,7 +95,7 @@ def _append_sentinel_rows(path: str, df: DataFrame) -> None:
             "props": pa.array([r["props"] for r in rows], pa.string()),
         }
     )
-    pq.write_table(tbl, os.path.join(path, f"sentinel-{uuid.uuid4().hex}.parquet"))
+    write_parquet_atomic(path, tbl)
 
 
 @query(

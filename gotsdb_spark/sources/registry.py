@@ -13,6 +13,7 @@ for free — none of which the reference has.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
@@ -260,6 +261,20 @@ def ensure_lineitem_range_partitioned(spark: SparkSession, sf_dir: str) -> str |
 # exactly once per run.
 
 
+_BYTE_UNITS = {"": 1, "k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40, "p": 2**50}
+_BYTE_SIZE_RE = re.compile(r"^\s*(\d+)([kmgtp]?)b?\s*$", re.IGNORECASE)
+
+
+def _parse_bytes(text: str) -> int:
+    """A Spark byte-size conf string in bytes, with Spark's units: plain
+    bytes (``134217728``, ``134217728b``) or a binary k/m/g/t/p suffix
+    with an optional ``b`` (``64k``, ``128m``, ``128mb``, ``1g``)."""
+    m = _BYTE_SIZE_RE.match(text)
+    if m is None:
+        raise ValueError(f"not a byte size: {text!r}")
+    return int(m[1]) * _BYTE_UNITS[m[2].lower()]
+
+
 def fan_out(df: DataFrame, n: int | None = None) -> DataFrame:
     """Round-robin repartition to the session's default parallelism —
     but ONLY when the frame is under-partitioned.
@@ -300,8 +315,8 @@ def fan_out(df: DataFrame, n: int | None = None) -> DataFrame:
     if 0 < n_files < 10_000:  # stat() only sane counts
         try:
             conf = df.sparkSession.conf
-            max_bytes = int(conf.get("spark.sql.files.maxPartitionBytes", "134217728").rstrip("b"))
-            open_cost = int(conf.get("spark.sql.files.openCostInBytes", "4194304").rstrip("b"))
+            max_bytes = _parse_bytes(conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
+            open_cost = _parse_bytes(conf.get("spark.sql.files.openCostInBytes", "4194304"))
             total = sum(
                 os.path.getsize(p.removeprefix("file:")) for p in files
             )

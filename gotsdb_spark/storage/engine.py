@@ -1,7 +1,7 @@
 """KV-parity storage engine: the reference's two-tier hot/cold collection
 store re-expressed Spark-first.
 
-Reference model (j0shgrant/gotsdb, all citations into /root/reference):
+Reference model (j0shgrant/gotsdb; file:line citations are into it):
 - Collection = map[string]string (internal/storage/types.go:3).
 - Hot tier = process-local maps (hot.go:8-10); cold tier = one
   whole-blob gob file per collection (cold.go:14-16, 111-154).
@@ -22,10 +22,17 @@ Spark-native design (SURVEY.md §1.3) — not a translation:
   .unpersist() (engine.go:121). A driver-side overlay dict holds
   unflushed writes so read-your-writes holds without re-shuffling the
   cached view on every point write.
-- Flush appends only the pending delta as a new log segment instead of
-  rewriting the collection (cold.go:136-154 rewrites everything) —
-  at 100 TB a flush is O(delta), and `compact()` is the explicit
-  log-rewrite maintenance job.
+- Flush appends only the pending delta as one new log segment instead
+  of rewriting the collection (cold.go:136-154 rewrites everything), so
+  a flush is O(delta). The delta already lives in the driver, so the
+  segment is written there with pyarrow (no Spark job): one
+  ``part-<uuid>.snappy.parquet`` file, written under a hidden
+  ``.``-prefixed name and renamed into place, so a reader of the dir
+  (Spark skips ``.``/``_`` names) sees the whole segment or none of it.
+  The engine therefore needs a data dir the driver can reach as a local
+  (POSIX) path, as `_recover`, `compact` and `list_cold` already do.
+  `compact()` is the explicit log-rewrite maintenance job and stays a
+  Spark write.
 
 Deliberately NOT replicated (reference bugs/gaps, SURVEY.md §1.1):
 unsynchronized concurrent map access, flush-only-on-crash durability,
@@ -41,10 +48,15 @@ import os
 import re
 import shutil
 import threading
+import uuid
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.window import Window as W
 
 LOG_SCHEMA = T.StructType(
@@ -56,9 +68,39 @@ LOG_SCHEMA = T.StructType(
     ]
 )
 
+# The same schema on the driver-side write path: TimestampType becomes
+# timestamp("us", tz="UTC"), so Spark reads both kinds of segment alike.
+_LOG_ARROW_SCHEMA = to_arrow_schema(LOG_SCHEMA)
+# Within one flush segment keys are unique, seqs consecutive and
+# write_ts constant: a dictionary only adds a page, while delta encoding
+# stores seq and write_ts in a few bytes per page.
+_SEGMENT_ENCODING = {
+    "use_dictionary": False,
+    "column_encoding": {
+        "seq": "DELTA_BINARY_PACKED",
+        "write_ts": "DELTA_BINARY_PACKED",
+    },
+}
+
 # Collection ids: alphanumeric, per the cold-listing regex (cold.go:72) —
 # but anchored, unlike the reference's buggy unanchored pattern.
 _ID_RE = re.compile(r"^[a-zA-Z0-9]+$")
+
+
+def write_parquet_atomic(directory: str, table: pa.Table, **options) -> None:
+    """Write ``table`` into ``directory`` as one new
+    ``part-<uuid>.snappy.parquet`` file.
+
+    The file is written under a hidden ``.``-prefixed name in the same
+    directory and renamed into place, so Spark readers and file-stream
+    sources (which skip ``.``/``_`` names) never see a partial file;
+    a crash before the rename leaves only a hidden leftover. ``options``
+    go to `pyarrow.parquet.write_table`."""
+    name = f"part-{uuid.uuid4().hex}.snappy.parquet"
+    tmp = os.path.join(directory, f".{name}.tmp")
+    final = os.path.join(directory, name)
+    pq.write_table(table, tmp, compression="snappy", **options)
+    os.rename(tmp, final)
 
 
 class CollectionNotFoundError(KeyError):
@@ -253,18 +295,13 @@ class Engine:
             .drop("_rn")
         )
 
-    def _overlay_df(self, id: str, start_seq: int = 0) -> DataFrame | None:
-        """Pending (unflushed) writes as a DataFrame, or None.
-
-        ``start_seq`` is the durable floor: persisted overlay rows get
-        seqs strictly above every seq already in the log, keeping the
-        (write_ts, seq) LWW tie-break valid across flush segments and
-        engine generations."""
+    def _overlay_df(self, id: str) -> DataFrame | None:
+        """Pending (unflushed) writes as a DataFrame, or None."""
         pending = self._pending.get(id)
         if not pending:
             return None
         rows = [
-            Row(key=k, value=v, write_ts=None, seq=start_seq + 1 + i)
+            Row(key=k, value=v, write_ts=None, seq=i + 1)
             for i, (k, v) in enumerate(pending.items())
         ]
         return self.spark.createDataFrame(rows, LOG_SCHEMA).withColumn(
@@ -340,27 +377,35 @@ class Engine:
         """Hot → cold + evict (engine.go:111-126).
 
         Unlike the reference's whole-collection rewrite (cold.go:140),
-        this appends only the pending delta as a new log segment —
-        O(unflushed writes), not O(collection). Eviction unpersists the
-        cached base (engine.go:121 ≙ unpersist)."""
+        this appends only the pending delta as one new log segment —
+        O(unflushed writes), not O(collection) — written driver-side by
+        `write_parquet_atomic`, with no Spark job once the seq floor is
+        known. The segment's seqs continue strictly above every seq in
+        the log, and all its rows share one ``write_ts``. An empty
+        auto-created collection is persisted as a zero-row segment.
+        Eviction unpersists the cached base (engine.go:121 ≙
+        unpersist)."""
         with self._lock:
             if id not in self._hot_base:
                 raise _err_not_found_hot(id)
             base = self._hot_base[id]
             path = self._path(id)
-            overlay = None
-            if self._pending.get(id):
+            pending = self._pending[id]
+            if pending or (base is None and not os.path.isdir(path)):
                 floor = self._log_seq_floor(id)
-                overlay = self._overlay_df(id, start_seq=floor)
-                self._seq_floor[id] = floor + len(self._pending[id])
-            if overlay is not None:
-                overlay.write.mode("append").parquet(path)
-            elif base is None and not os.path.isdir(path):
-                # Empty auto-created collection: materialize an empty log
-                # so the collection exists cold (flush must persist it).
-                self.spark.createDataFrame([], LOG_SCHEMA).write.mode(
-                    "append"
-                ).parquet(path)
+                n = len(pending)
+                segment = pa.Table.from_pydict(
+                    {
+                        "key": list(pending),
+                        "value": list(pending.values()),
+                        "write_ts": [datetime.now(timezone.utc)] * n,
+                        "seq": range(floor + 1, floor + 1 + n),
+                    },
+                    schema=_LOG_ARROW_SCHEMA,
+                )
+                os.makedirs(path, exist_ok=True)
+                write_parquet_atomic(path, segment, **_SEGMENT_ENCODING)
+                self._seq_floor[id] = floor + n
             if base is not None:
                 base.unpersist()
             del self._hot_base[id]

@@ -1,6 +1,7 @@
 """Source/sink tests: CSV/JSON round-trips and the partitioned event
 layout with partition pruning."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from gotsdb_spark.plans import formatted_plan
@@ -230,3 +231,48 @@ def test_events_load_pins_utc_even_with_existing_copy(spark):
         assert dict(df.dtypes)["ts"] == "timestamp"
     finally:
         spark.conf.set("spark.sql.session.timeZone", old)
+
+
+@pytest.mark.parametrize(
+    "text, expected",
+    [
+        ("134217728", 134217728),  # plain bytes
+        ("4194304b", 4194304),  # trailing b
+        ("64k", 64 * 2**10),
+        ("128m", 128 * 2**20),
+        ("128mb", 128 * 2**20),
+        ("1g", 2**30),
+        ("2G", 2 * 2**30),
+    ],
+)
+def test_parse_bytes_matches_spark(spark, text, expected):
+    from gotsdb_spark.sources.registry import _parse_bytes
+
+    assert _parse_bytes(text) == expected
+    java_utils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+    assert java_utils.byteStringAsBytes(text) == expected
+
+
+def test_parse_bytes_rejects_garbage():
+    from gotsdb_spark.sources.registry import _parse_bytes
+
+    with pytest.raises(ValueError):
+        _parse_bytes("1.5g")
+
+
+@pytest.mark.parametrize("max_bytes", ["134217728", "128m", "131072k", "134217728b"])
+def test_fan_out_reads_suffixed_split_size(spark, tmp_path, max_bytes):
+    """Eight tiny files pack into one 128 MiB split, so fan_out must
+    repartition, whichever form the split size is written in."""
+    from gotsdb_spark.sources.registry import fan_out
+
+    path = str(tmp_path / "small")
+    spark.range(64).repartition(8).write.parquet(path)
+    df = spark.read.parquet(path)
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, max_bytes)
+    try:
+        assert fan_out(df, n=8) is not df
+    finally:
+        spark.conf.set(key, prev)

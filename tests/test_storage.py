@@ -208,7 +208,9 @@ def test_compact_crash_recovery_restores_original(spark, tmp_path):
     # Crash with a COMPLETE tmp (has _SUCCESS): tmp is promoted instead.
     e2.write_key("c", "k", "v2")
     e2.flush_collection("c")
-    shutil.copytree(path, path + ".compact.tmp")
+    # A complete tmp is a finished Spark write of the log, as compact()
+    # makes it (flush segments are driver-written and leave no marker).
+    spark.read.parquet(path).write.parquet(path + ".compact.tmp")
     shutil.rmtree(path)
     e3 = Engine(spark, data)
     assert e3.read_key("c", "k") == "v2"
@@ -231,3 +233,126 @@ def test_compact_crash_incomplete_tmp_rolled_back(spark, tmp_path):
     e2 = Engine(spark, data)
     assert e2.read_key("c", "k") == "good"
     assert not os.path.isdir(path + ".compact.tmp")
+
+
+def _segments(path):
+    import os
+
+    names = os.listdir(path)
+    return (
+        sorted(n for n in names if n.endswith(".parquet")),
+        sorted(n for n in names if n.startswith(".")),
+    )
+
+
+def test_flush_runs_no_spark_job_once_seq_floor_known(spark, tmp_path):
+    """The pending delta is written driver-side: once the seq floor is
+    known (here: a new collection, so no log to scan), flush starts no
+    Spark job."""
+    e = Engine(spark, str(tmp_path / "data"))
+    tracker = spark.sparkContext.statusTracker()
+    for i in range(3):
+        e.write_key("c", f"k{i}", f"v{i}")
+        before = set(tracker.getJobIdsForGroup())
+        e.flush_collection("c")
+        assert set(tracker.getJobIdsForGroup()) == before
+    assert {e.read_key("c", f"k{i}") for i in range(3)} == {"v0", "v1", "v2"}
+
+
+def test_each_flush_adds_one_segment_and_no_temp_file(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    data = tmp_path / "data"
+    e = Engine(spark, str(data))
+    e.create_collection("empty")
+    e.flush_collection("empty")
+    files, hidden = _segments(data / "empty")
+    assert len(files) == 1 and hidden == []
+    assert pq.read_table(data / "empty" / files[0]).num_rows == 0
+
+    for n in range(1, 4):
+        for i in range(5):
+            e.write_key("c", f"k{i}", f"v{n}.{i}")
+        e.flush_collection("c")
+        files, hidden = _segments(data / "c")
+        assert len(files) == n and hidden == []
+    seg = pq.read_table(data / "c" / files[-1])
+    assert seg.schema.field("write_ts").type == pa.timestamp("us", tz="UTC")
+    assert seg.schema.field("seq").type == pa.int64()
+    assert len(set(seg.column("write_ts").to_pylist())) == 1  # one ts per segment
+    assert Engine(spark, str(data)).list_cold() == ["c", "empty"]
+
+
+def test_stray_temp_segment_is_invisible(spark, tmp_path, monkeypatch):
+    """A crash between write and rename leaves the segment under its
+    hidden ``.``-prefixed temp name; it must not reach promotion, reads
+    or the seq floor."""
+    import os
+
+    data = tmp_path / "data"
+    e1 = Engine(spark, str(data))
+    e1.write_key("c", "k", "durable")
+    e1.flush_collection("c")
+    e1.write_key("c", "k", "never-renamed")
+
+    def crash(src, dst):
+        raise OSError("simulated crash before rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", crash)
+        with pytest.raises(OSError, match="simulated crash"):
+            e1.flush_collection("c")
+    files, hidden = _segments(data / "c")
+    assert len(files) == 1 and len(hidden) == 1
+
+    e2 = Engine(spark, str(data))
+    e2.load_collection("c")
+    assert e2.read_key("c", "k") == "durable"
+    assert e2.snapshot("c").count() == 1
+    assert e2._log_seq_floor("c") == 1
+
+
+def test_last_writer_wins_over_spark_and_driver_segments(spark, tmp_path):
+    """LWW through a fresh Engine over a log mixing Spark-written
+    segments (a streaming KV-sink batch and compact() output) with
+    driver-written flush segments."""
+    import datetime as dt
+    import os
+    import re
+
+    from gotsdb_spark.streaming import read_events_stream, stream_into_collection_log
+    from gotsdb_spark.streaming.ingest import EVENT_SCHEMA
+
+    src, data = str(tmp_path / "events"), tmp_path / "data"
+    ts = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    spark.createDataFrame(
+        [(i, ts, 1, "view", 1.0, f"stream-{i}") for i in (1, 2, 3)], EVENT_SCHEMA
+    ).write.parquet(src)
+    q = stream_into_collection_log(
+        read_events_stream(spark, src), str(data / "mix"), str(tmp_path / "ckpt")
+    ).trigger(availableNow=True).start()
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        q.stop()
+
+    e1 = Engine(spark, str(data))
+    e1.write_key("mix", "1", "driver-1")
+    e1.flush_collection("mix")
+    e1.compact("mix")
+    e1.write_key("mix", "2", "driver-2")
+    e1.write_key("mix", "4", "driver-4")
+    e1.flush_collection("mix")
+    e2 = Engine(spark, str(data))
+    e2.write_key("mix", "1", "gen2")
+    e2.flush_collection("mix")
+
+    names = os.listdir(data / "mix")
+    assert any(n.endswith("-c000.snappy.parquet") for n in names)  # Spark-written
+    driver = [n for n in names if re.fullmatch(r"part-[0-9a-f]{32}\.snappy\.parquet", n)]
+    assert len(driver) == 2
+    want = {"1": "gen2", "2": "driver-2", "3": "stream-3", "4": "driver-4"}
+    e3 = Engine(spark, str(data))
+    assert {k: e3.read_key("mix", k) for k in want} == want
+    assert {r["key"]: r["value"] for r in e3.snapshot("mix").collect()} == want

@@ -354,3 +354,27 @@ def test_progress_metrics_account_for_all_input_rows(spark, tmp_path):
         assert last_state["numRowsTotal"] == got_rows
     finally:
         q.stop()
+
+
+def test_sentinel_rows_land_as_one_utc_file(spark, tmp_path):
+    """Watermark sentinels are appended driver-side as one complete
+    parquet file (no temp file left) with a UTC-adjusted timestamp, and
+    read back through EVENT_SCHEMA unchanged."""
+    import datetime as dt
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gotsdb_spark.operators.integration import _append_sentinel_rows
+    from gotsdb_spark.streaming.ingest import EVENT_SCHEMA
+
+    ts = dt.datetime(2024, 1, 1, 12, 30, tzinfo=dt.timezone.utc)
+    rows = spark.createDataFrame([(7, ts, 3, "view", 1.5, "p")], EVENT_SCHEMA)
+    _append_sentinel_rows(str(tmp_path), rows)
+    (name,) = os.listdir(tmp_path)
+    assert name.startswith("part-") and name.endswith(".parquet")
+    ts_type = pq.read_schema(tmp_path / name).field("ts").type
+    assert ts_type == pa.timestamp("us", tz="UTC")
+    back = spark.read.schema(EVENT_SCHEMA).parquet(str(tmp_path)).collect()
+    assert back == rows.collect()
