@@ -36,13 +36,13 @@ def scalar_subquery_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst plans the subquery as a broadcast of one row — the fact
     side is scanned once; no per-row re-evaluation.
     """
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(
         """
         SELECT c_custkey, c_name, c_acctbal
-        FROM customer
-        WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer)
-        """
+        FROM {customer}
+        WHERE c_acctbal > (SELECT avg(c_acctbal) FROM {customer})
+        """,
+        customer=_t(spark, sf_dir, "customer"),
     )
 
 
@@ -67,20 +67,20 @@ def correlated_exists_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst decorrelates both subqueries into aggregates + joins — the
     rewrite the reference has no machinery for (SURVEY.md §4.2).
     """
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
         """
         SELECT c_custkey, c_name
-        FROM customer c
+        FROM {customer} c
         WHERE EXISTS (
-          SELECT 1 FROM orders o
+          SELECT 1 FROM {orders} o
           WHERE o.o_custkey = c.c_custkey
             AND o.o_totalprice > 2 * (
-              SELECT avg(o_totalprice) FROM orders oo WHERE oo.o_custkey = o.o_custkey
+              SELECT avg(o_totalprice) FROM {orders} oo WHERE oo.o_custkey = o.o_custkey
             )
         )
-        """
+        """,
+        customer=_t(spark, sf_dir, "customer"),
+        orders=_t(spark, sf_dir, "orders"),
     )
 
 
@@ -522,16 +522,16 @@ def setop_intersect_all_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def in_subquery_building_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN-subquery (Catalyst rewrites to a left-semi join)."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
         """
         SELECT o_orderkey, o_totalprice
-        FROM orders
+        FROM {orders}
         WHERE o_custkey IN (
-          SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
+          SELECT c_custkey FROM {customer} WHERE c_mktsegment = 'BUILDING'
         )
-        """
+        """,
+        customer=_t(spark, sf_dir, "customer"),
+        orders=_t(spark, sf_dir, "orders"),
     )
 
 

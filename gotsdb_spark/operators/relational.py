@@ -344,16 +344,16 @@ def cube_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def grouping_sets_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS via Spark SQL."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
         """
         SELECT coalesce(o_orderstatus, 'ALL')   AS orderstatus,
                coalesce(o_orderpriority, 'ALL') AS orderpriority,
                count(*) AS n_orders,
                sum(o_totalprice) AS total
-        FROM orders
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        """
+        """,
+        orders=_t(spark, sf_dir, "orders"),
     )
 
 

@@ -469,10 +469,10 @@ def stats_mad_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LATERAL_SQL = """
     SELECT n.n_name, s.s_name, s.s_acctbal
-    FROM nation n,
+    FROM {nation} n,
     LATERAL (
       SELECT s_name, s_acctbal
-      FROM supplier
+      FROM {supplier}
       WHERE s_nationkey = n.n_nationkey
       ORDER BY s_acctbal DESC, s_name
       LIMIT 3
@@ -482,7 +482,7 @@ _LATERAL_SQL = """
 
 @query(
     "lateral_top_suppliers_per_nation",
-    oracle=_LATERAL_SQL.replace("LATERAL", "LATERAL"),
+    oracle=_LATERAL_SQL.format(nation="nation", supplier="supplier"),
 )
 def lateral_top_suppliers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery: top-3 suppliers by balance per
@@ -497,10 +497,11 @@ def lateral_top_suppliers_per_nation(spark: SparkSession, sf_dir: str) -> DataFr
     Total order inside the LATERAL (balance desc, name) keeps the
     LIMIT deterministic in both engines.
     """
-    from gotsdb_spark.sources.registry import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_LATERAL_SQL)
+    return spark.sql(
+        _LATERAL_SQL,
+        nation=load_table(spark, "nation", sf_dir),
+        supplier=load_table(spark, "supplier", sf_dir),
+    )
 
 
 @query(

@@ -17,11 +17,14 @@ Spark-native design (SURVEY.md §1.3) — not a translation:
   (cold.go:140,152). Last-writer-wins upsert (hot.go:53) becomes
   log-compaction: row_number() over (partitionBy key, orderBy
   write_ts/seq desc) == 1 — the idiomatic immutable-storage upsert.
-- The hot tier is Spark's block manager: promotion = read + compact +
-  .cache() (engine.go:100-109 ≙ lazy cache materialization), eviction =
-  .unpersist() (engine.go:121). A driver-side overlay dict holds
-  unflushed writes so read-your-writes holds without re-shuffling the
-  cached view on every point write.
+- Promotion (engine.go:100-109) depends on the log's size. A log of at
+  most ``materialize_threshold`` rows (counted from the Parquet footers)
+  is folded on the driver with pyarrow into a key → value dict, as the
+  reference decodes its blob into process memory: no Spark job, nothing
+  cached. A larger log is compacted and cached executor-side in Spark's
+  block manager, and eviction unpersists it (engine.go:121). A
+  driver-side overlay dict holds unflushed writes so read-your-writes
+  holds without re-shuffling the base on every point write.
 - Flush appends only the pending delta as one new log segment instead
   of rewriting the collection (cold.go:136-154 rewrites everything), so
   a flush is O(delta). The delta already lives in the driver, so the
@@ -52,6 +55,7 @@ import uuid
 from datetime import datetime, timezone
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -101,6 +105,66 @@ def write_parquet_atomic(directory: str, table: pa.Table, **options) -> None:
     final = os.path.join(directory, name)
     pq.write_table(table, tmp, compression="snappy", **options)
     os.rename(tmp, final)
+
+
+def _log_files(path: str) -> list[str]:
+    """The files a Spark read of the collection dir ``path`` covers:
+    regular files directly in it whose names are not hidden (``.``/``_``
+    prefix), so a crash leftover of `write_parquet_atomic` stays
+    invisible."""
+    return sorted(
+        e.path
+        for e in os.scandir(path)
+        if e.is_file() and not e.name.startswith((".", "_"))
+    )
+
+
+def _fold_log(files: list[str], max_rows: int) -> tuple[dict[str, str], int] | None:
+    """Fold the log in ``files`` on the driver: (latest value per key,
+    max seq or 0), or None if the files hold more than ``max_rows`` rows.
+
+    Row counts come from the Parquet footers, and counting stops once
+    past ``max_rows``, so a large log costs a few footer reads. Every
+    segment is read as `_LOG_ARROW_SCHEMA`; a missing column reads as
+    nulls, as under Spark's schema-on-read. Rows are applied in
+    ascending (write_ts, seq) order with nulls first, so the last
+    assignment per key is the row `Engine._compacted` keeps (``DESC
+    NULLS LAST``)."""
+    footers = []
+    rows = 0
+    for f in files:
+        meta = pq.read_metadata(f)
+        rows += meta.num_rows
+        if rows > max_rows:
+            return None
+        footers.append((f, meta))
+    tables = []
+    for f, meta in footers:
+        present = [n for n in _LOG_ARROW_SCHEMA.names if n in meta.schema.names]
+        with pq.ParquetFile(f, metadata=meta, coerce_int96_timestamp_unit="us") as pf:
+            t = pf.read(columns=present)
+        tables.append(
+            pa.table(
+                [
+                    t.column(c.name).cast(c.type)
+                    if c.name in present
+                    else pa.nulls(t.num_rows, c.type)
+                    for c in _LOG_ARROW_SCHEMA
+                ],
+                names=_LOG_ARROW_SCHEMA.names,
+            )
+        )
+    if not tables:
+        return {}, 0
+    log = pa.concat_tables(tables)
+    order = pc.sort_indices(
+        log,
+        sort_keys=[("write_ts", "ascending"), ("seq", "ascending")],
+        null_placement="at_start",
+    )
+    keys = log.column("key").take(order).to_pylist()
+    values = log.column("value").take(order).to_pylist()
+    return dict(zip(keys, values)), pc.max(log.column("seq")).as_py() or 0
 
 
 class CollectionNotFoundError(KeyError):
@@ -153,17 +217,22 @@ class Engine:
         self.spark = spark
         self.data_dir = os.path.abspath(data_dir)
         self.auto_create = auto_create_collection
-        # Collections up to this many compacted keys are ALSO pulled into
-        # a driver-side dict on promotion, giving O(1) point reads — the
-        # reference's own semantics (it gob-decodes the whole collection
-        # into process memory, engine.go:100-109). Larger collections
-        # stay executor-side and point reads run as filters on the
-        # cached view; at 100 TB that's the only possible mode.
+        # A collection with at most this many compacted keys is held in a
+        # driver-side dict, giving O(1) point reads — the reference's own
+        # semantics (it gob-decodes the whole collection into process
+        # memory, engine.go:100-109). A log of at most this many rows is
+        # folded into that dict on the driver; a larger log is cached
+        # executor-side, and without a dict point reads run as filters
+        # on the cached view; at 100 TB that's the only possible mode.
         self.materialize_threshold = materialize_threshold
         os.makedirs(self.data_dir, exist_ok=True)  # cold.go:27-38
-        # Hot tier: compacted base view (cached DataFrame or None for
-        # empty/new collections) + unflushed-write overlay.
+        # Hot tier: compacted base view (a cached DataFrame for a log
+        # folded executor-side; None for driver-folded, empty or new
+        # collections) + unflushed-write overlay. A driver-folded
+        # collection keeps the segment files listed at promotion, which
+        # snapshot() reads on demand.
         self._hot_base: dict[str, DataFrame | None] = {}
+        self._hot_files: dict[str, list[str]] = {}
         self._hot_dict: dict[str, dict[str, str] | None] = {}
         self._pending: dict[str, dict[str, str]] = {}
         # Durable per-collection sequence floor: the max `seq` present in
@@ -318,7 +387,10 @@ class Engine:
             if id not in self._hot_base:
                 self.load_collection_if_not_present(id)
             base = self._hot_base[id]
+            files = self._hot_files.get(id)
             overlay = self._overlay_df(id)
+        if files:
+            base = self._compacted(self.spark.read.schema(LOG_SCHEMA).parquet(*files))
         parts = [p for p in (base, overlay) if p is not None]
         if not parts:
             return self.spark.createDataFrame([], LOG_SCHEMA)
@@ -334,20 +406,30 @@ class Engine:
     # -- load / flush (promotion / demotion) ----------------------------
 
     def load_collection(self, id: str) -> None:
-        """Cold → hot promotion (engine.go:100-109): read the log,
-        compact, cache. The cache materializes lazily on first action —
-        the same read-through shape as the reference's load-on-miss."""
+        """Cold → hot promotion (engine.go:100-109).
+
+        A log of at most ``materialize_threshold`` rows is folded on the
+        driver into the hot dict (`_fold_log`): no Spark job and no
+        cached view. A larger log is read, compacted and cached
+        executor-side; it still gets a dict when it has at most the
+        threshold's keys."""
         if not self._cold_exists(id):
             raise _err_not_found_any(id)
         path = self._path(id)
         with self._lock:
+            files = _log_files(path)
+            folded = _fold_log(files, self.materialize_threshold)
+            self._pending.setdefault(id, {})
+            if folded is not None:
+                self._hot_dict[id], max_seq = folded
+                self._hot_base[id] = None
+                self._hot_files[id] = files
+                self._seq_floor.setdefault(id, max_seq)
+                return
+            self._hot_files.pop(id, None)
             df = self._compacted(self.spark.read.schema(LOG_SCHEMA).parquet(path))
             df = df.cache()
             self._hot_base[id] = df
-            self._pending.setdefault(id, {})
-            # Reference-parity fast path: small collections live fully in
-            # driver memory (as the reference's hot map does) → O(1)
-            # reads with no per-read Spark job.
             sample = df.select("key", "value").limit(self.materialize_threshold + 1)
             rows = sample.collect()
             if len(rows) <= self.materialize_threshold:
@@ -383,8 +465,7 @@ class Engine:
         known. The segment's seqs continue strictly above every seq in
         the log, and all its rows share one ``write_ts``. An empty
         auto-created collection is persisted as a zero-row segment.
-        Eviction unpersists the cached base (engine.go:121 ≙
-        unpersist)."""
+        Eviction (engine.go:121) unpersists a cached base."""
         with self._lock:
             if id not in self._hot_base:
                 raise _err_not_found_hot(id)
@@ -406,11 +487,16 @@ class Engine:
                 os.makedirs(path, exist_ok=True)
                 write_parquet_atomic(path, segment, **_SEGMENT_ENCODING)
                 self._seq_floor[id] = floor + n
-            if base is not None:
-                base.unpersist()
-            del self._hot_base[id]
-            del self._pending[id]
-            self._hot_dict.pop(id, None)
+            self._evict(id)
+
+    def _evict(self, id: str) -> None:
+        """Drop a hot collection's state, unpersisting a cached base."""
+        base = self._hot_base.pop(id)
+        if base is not None:
+            base.unpersist()
+        del self._pending[id]
+        self._hot_dict.pop(id, None)
+        self._hot_files.pop(id, None)
 
     def flush_all_collections(self) -> list[Exception]:
         """engine.go:128-137 — collects errors, never short-circuits."""
@@ -443,7 +529,7 @@ class Engine:
             os.rename(path, bak)
             os.rename(tmp, path)
             shutil.rmtree(bak)
-            if id in self._hot_base:  # refresh the cached view
+            if id in self._hot_base:  # refresh the hot state
                 base = self._hot_base[id]
                 if base is not None:
                     base.unpersist()
@@ -454,8 +540,8 @@ class Engine:
     def read_key(self, id: str, key: str) -> str:
         """Read-through point lookup (engine.go:139-173).
 
-        Hot overlay (read-your-writes) → cached base filter → cold
-        promotion on miss → error parity: missing key in a hot
+        Hot overlay (read-your-writes) → hot dict or cached base filter
+        → cold promotion on miss → error parity: missing key in a hot
         collection vs missing collection are distinct (hot.go:43 vs
         engine.go:172).
 
@@ -487,9 +573,11 @@ class Engine:
                 )
             base = self._hot_base.get(id)
         if base is not None:
-            row = base.where(F.col("key") == F.lit(key)).select("value").first()
-            if row is not None:
-                return row[0]
+            # At most one row per key; collect() is one job where
+            # first() (take(1)) scans one partition, then scales up.
+            rows = base.where(F.col("key") == F.lit(key)).select("value").collect()
+            if rows:
+                return rows[0][0]
         # hot.go:43
         raise KeyNotFoundError(
             f"No value found for key [{key}] in hot collection [{id}]."
@@ -525,9 +613,4 @@ class Engine:
         with self._lock:
             if id not in self._hot_base:
                 raise _err_not_found_hot(id)  # hot.go:84
-            base = self._hot_base[id]
-            if base is not None:
-                base.unpersist()
-            del self._hot_base[id]
-            del self._pending[id]
-            self._hot_dict.pop(id, None)
+            self._evict(id)

@@ -95,3 +95,27 @@ def test_every_batch_query_executes_one_row(spark):
 
     failures = _sweep_parallel(_batch_queries(), check)
     assert not failures, f"{len(failures)} queries fail at runtime: {failures}"
+
+
+_SQL_TEXT_QUERIES = [
+    "scalar_subquery_above_avg",
+    "correlated_exists_big_orders",
+    "in_subquery_building_orders",
+    "grouping_sets_priority",
+    "lateral_top_suppliers_per_nation",
+]
+
+
+def test_sql_text_queries_register_no_temp_views(spark):
+    """The SQL-text queries bind their tables as DataFrame arguments of
+    ``spark.sql``, so no fixed-name temp view is created that a
+    concurrent run (the thread-pool sweeps above) could replace
+    mid-query."""
+    fixed = {"customer", "orders", "nation", "supplier"}
+    for name in fixed:
+        spark.catalog.dropTempView(name)
+    for name in _SQL_TEXT_QUERIES:
+        QUERIES[name](spark, SF).limit(1).collect()
+    views = {t.name for t in spark.catalog.listTables()}
+    assert not views & fixed, views
+    assert not any(v.startswith("_pyspark_") for v in views), views

@@ -3,6 +3,8 @@ read-your-writes, promotion-on-miss, auto-create, flush/evict, error
 parity (missing key vs missing collection), last-writer-wins."""
 
 
+import os
+
 import pytest
 from gotsdb_spark.storage.engine import (
     CollectionExistsError,
@@ -356,3 +358,151 @@ def test_last_writer_wins_over_spark_and_driver_segments(spark, tmp_path):
     e3 = Engine(spark, str(data))
     assert {k: e3.read_key("mix", k) for k in want} == want
     assert {r["key"]: r["value"] for r in e3.snapshot("mix").collect()} == want
+
+
+def _job_ids(spark):
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup())
+
+
+def _spark_compacted(spark, engine, id):
+    """The latest-per-key view the executor-side path computes."""
+    from gotsdb_spark.storage.engine import LOG_SCHEMA
+
+    log = spark.read.schema(LOG_SCHEMA).parquet(os.path.join(engine.data_dir, id))
+    return {r["key"]: r["value"] for r in engine._compacted(log).collect()}
+
+
+def test_small_log_promotion_and_next_flush_start_no_spark_job(spark, tmp_path):
+    """A log of at most the threshold's rows is folded on the driver:
+    promotion, hot reads and the first flush of a fresh Engine (its
+    seq floor comes from the fold) start no Spark job."""
+    data = str(tmp_path / "data")
+    e1 = Engine(spark, data)
+    for i in range(3):
+        e1.write_key("c", f"k{i}", f"v{i}")
+    e1.flush_collection("c")
+
+    e2 = Engine(spark, data)
+    before = _job_ids(spark)
+    e2.load_collection("c")
+    assert e2.read_key("c", "k1") == "v1"
+    with pytest.raises(KeyNotFoundError):
+        e2.read_key("c", "nope")
+    e2.write_key("c", "k1", "new")
+    e2.flush_collection("c")
+    assert _job_ids(spark) == before
+    assert Engine(spark, data).read_key("c", "k1") == "new"
+    assert e2._log_seq_floor("c") == 4
+
+
+def test_driver_fold_equals_spark_compaction_on_mixed_log(spark, tmp_path):
+    """The driver fold keeps the same row per key as the Spark
+    compaction, over a streaming-sink batch, compact() output, driver
+    segments, a segment without a write_ts column (nulls: the row loses
+    to any timestamped row) and one key at equal write_ts with different
+    seqs in separate segments."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gotsdb_spark.storage.engine import LOG_SCHEMA
+    from gotsdb_spark.streaming import read_events_stream, stream_into_collection_log
+    from gotsdb_spark.streaming.ingest import EVENT_SCHEMA
+
+    src, data = str(tmp_path / "events"), tmp_path / "data"
+    path = str(data / "mix")
+    ts = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    spark.createDataFrame(
+        [(i, ts, 1, "view", 1.0, f"stream-{i}") for i in (1, 2, 3)], EVENT_SCHEMA
+    ).write.parquet(src)
+    q = stream_into_collection_log(
+        read_events_stream(spark, src), path, str(tmp_path / "ckpt")
+    ).trigger(availableNow=True).start()
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        q.stop()
+
+    e1 = Engine(spark, str(data))
+    e1.write_key("mix", "1", "driver-1")
+    e1.write_key("mix", "n", "old-ts")
+    e1.flush_collection("mix")
+    e1.compact("mix")
+    e1.write_key("mix", "2", "driver-2")
+    e1.flush_collection("mix")
+    # Equal write_ts, seq 9 written before seq 8: seq decides, not file order.
+    tie = dt.datetime(2030, 1, 1, tzinfo=dt.timezone.utc)
+    for value, seq in (("tie-high", 9), ("tie-low", 8)):
+        spark.createDataFrame([("t", value, tie, seq)], LOG_SCHEMA).write.mode(
+            "append"
+        ).parquet(path)
+    pq.write_table(
+        pa.table({"key": ["n", "z", "z"], "value": ["no-ts", "z-7", "z-3"], "seq": [10**9, 7, 3]}),
+        os.path.join(path, "part-nots.parquet"),
+    )
+
+    want = {
+        "1": "driver-1", "2": "driver-2", "3": "stream-3",
+        "n": "old-ts", "t": "tie-high", "z": "z-7",
+    }
+    e2 = Engine(spark, str(data))
+    e2.load_collection("mix")
+    assert e2._hot_base["mix"] is None  # driver-held
+    assert e2._hot_dict["mix"] == _spark_compacted(spark, e2, "mix") == want
+    assert e2._seq_floor["mix"] == 10**9
+
+
+def test_fold_threshold_boundary(spark, tmp_path):
+    """rows == threshold → driver fold; threshold + 1 rows over at most
+    threshold keys → executor-side path that still fills the dict; more
+    keys than the threshold → no dict."""
+    data = str(tmp_path / "data")
+    e = Engine(spark, data)
+    for i in range(4):
+        e.write_key("c", f"k{i}", f"v{i}")
+    e.flush_collection("c")
+
+    at = Engine(spark, data, materialize_threshold=4)
+    before = _job_ids(spark)
+    at.load_collection("c")
+    assert _job_ids(spark) == before
+    assert at._hot_base["c"] is None
+    assert at._hot_dict["c"] == {f"k{i}": f"v{i}" for i in range(4)}
+
+    e.write_key("c", "k0", "v0-new")
+    e.flush_collection("c")  # 5 rows, 4 keys
+    over = Engine(spark, data, materialize_threshold=4)
+    over.load_collection("c")
+    assert over._hot_base["c"].is_cached
+    assert over._hot_dict["c"] == {"k0": "v0-new", "k1": "v1", "k2": "v2", "k3": "v3"}
+
+    few = Engine(spark, data, materialize_threshold=3)
+    few.load_collection("c")
+    assert few._hot_dict["c"] is None
+    assert few.read_key("c", "k0") == "v0-new"
+    with pytest.raises(KeyNotFoundError):
+        few.read_key("c", "nope")
+
+
+def test_snapshot_of_driver_held_collection_matches_reads(spark, tmp_path):
+    """snapshot() of a driver-held collection is its read_key view plus
+    the pending overlay, also after compact() refreshes it."""
+    data = str(tmp_path / "data")
+    e1 = Engine(spark, data)
+    for n in range(2):
+        for i in range(4):
+            e1.write_key("c", f"k{i}", f"v{n}.{i}")
+        e1.flush_collection("c")
+
+    e2 = Engine(spark, data)
+    e2.write_key("c", "k1", "pending-1")
+    e2.write_key("c", "k9", "pending-9")
+    keys = [f"k{i}" for i in range(4)] + ["k9"]
+    for _ in range(2):
+        assert e2._hot_base["c"] is None  # driver-held
+        view = {k: e2.read_key("c", k) for k in keys}
+        assert view == {**e2._hot_dict["c"], **e2._pending["c"]}
+        assert {r["key"]: r["value"] for r in e2.snapshot("c").collect()} == view
+        e2.compact("c")
+    assert spark.read.parquet(os.path.join(data, "c")).count() == 4
