@@ -121,24 +121,28 @@ def _minhash_sigs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
     audit, which slices the SAME signature pool into alternative b×r
     configurations. localCheckpoint (not a cross-invocation cache) so
     every bench/oracle run recomputes from the parquet input while the
-    multiple consumers inside ONE query still share a single pass."""
+    multiple consumers inside ONE query still share a single pass.
+    The signatures are computed inside that checkpoint, so a band
+    self-join reads them twice but hashes each shingle once per seed."""
+    mh = [f"mh{s}" for s in range(N_MINHASH)]
     docs = (
         fan_out(load_table(spark, "documents", sf_dir))
         .select("doc_id", word_shingles(F.col("text")).alias("sh_arr"))
+        .select(
+            "doc_id",
+            "sh_arr",
+            *[
+                F.array_min(
+                    F.transform(
+                        F.col("sh_arr"), lambda sh: F.md5(F.concat(F.lit(f"{s}:"), sh))
+                    )
+                ).alias(mh[s])
+                for s in range(N_MINHASH)
+            ],
+        )
         .localCheckpoint(eager=False)
     )
-    sigs = docs.select(
-        "doc_id",
-        *[
-            F.array_min(
-                F.transform(
-                    F.col("sh_arr"), lambda sh: F.md5(F.concat(F.lit(f"{s}:"), sh))
-                )
-            ).alias(f"mh{s}")
-            for s in range(N_MINHASH)
-        ],
-    )
-    return docs, sigs
+    return docs, docs.select("doc_id", *mh)
 
 
 def _minhash_bands(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:

@@ -400,9 +400,9 @@ def graph_components_star_contraction(spark: SparkSession, sf_dir: str) -> DataF
     Scale: each half-round is one groupBy-min plus one equi-join on the
     CURRENT edge set (which only shrinks toward one edge per node —
     never grows past 2|E|); nothing iterates on the driver but the
-    round counter and a 1-row convergence signature (count + order-
-    independent xxhash checksum — used ONLY for early exit, never in
-    the result). localCheckpoint truncates lineage per round.
+    round counter and an exact star-shape test on each round's edge
+    set (`_is_star`), which ends the loop on the round that reaches
+    the fixpoint. localCheckpoint truncates lineage per round.
     """
     from gotsdb_spark.operators.dedup import dedup_minhash_lsh
 
@@ -414,6 +414,25 @@ def graph_components_star_contraction(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
+def _is_star(edges: DataFrame) -> bool:
+    """Exact test that a distinct edge set (u, v) is a disjoint union of
+    stars: every source u has exactly one out-edge and no sink v is
+    also a source. Small-star only emits edges u → v with v < u, so a
+    star-shaped small-star output points every member at its
+    component minimum — the contraction fixpoint, which another round
+    would reproduce unchanged. One grouped pass over the node ends and
+    one short-circuiting `isEmpty` job."""
+    ends = edges.select(F.col("u").alias("n"), F.lit(1).alias("src")).union(
+        edges.select(F.col("v").alias("n"), F.lit(0).alias("src"))
+    )
+    bad = (
+        ends.groupBy("n")
+        .agg(F.sum("src").alias("out"), F.count("*").alias("deg"))
+        .where((F.col("out") > 1) | ((F.col("out") == 1) & (F.col("deg") > 1)))
+    )
+    return bad.isEmpty()
+
+
 def star_contraction_edges(pairs: DataFrame) -> DataFrame:
     """Run large-star/small-star contraction to the star fixpoint and
     return the converged edge set: one row (u, v) per NON-canonical
@@ -422,8 +441,8 @@ def star_contraction_edges(pairs: DataFrame) -> DataFrame:
     graph_components_star_contraction (rolls it up to component sizes)
     and dedup_savings_by_cluster_size (joins members back to document
     bytes). See the query docstring for the algorithm and scale
-    rationale; convergence is signature-checked with a loud
-    non-star-shape failure if the round bound is exhausted.
+    rationale. The loop stops on the first round whose edge set is a
+    star (`_is_star`) and fails loudly if the round bound runs out.
     """
     edges = (
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
@@ -431,7 +450,6 @@ def star_contraction_edges(pairs: DataFrame) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    prev_sig = None
     for _ in range(12):  # ⌈log2⌉ bound for any plausible component count
         sym = edges.union(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -452,7 +470,7 @@ def star_contraction_edges(pairs: DataFrame) -> DataFrame:
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         ).distinct()
         smins = dire.groupBy("u").agg(F.min("v").alias("m"))
-        ss = (
+        edges = (
             dire.join(smins, "u")
             .select(F.col("v").alias("a"), F.col("m").alias("b"))
             .union(smins.select(F.col("u").alias("a"), F.col("m").alias("b")))
@@ -461,62 +479,16 @@ def star_contraction_edges(pairs: DataFrame) -> DataFrame:
             .distinct()
             .localCheckpoint()
         )
-        sig = tuple(
-            ss.agg(
-                F.count("*").alias("n"),
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-            ).collect()[0]
-        )
-        prev_edges, edges = edges, ss
-        if sig == prev_sig:
-            # The contraction edge set is NOT monotone (sources appear
-            # and disappear as stars form), so unlike the min-label
-            # fixpoints the hash-sum signature alone is probabilistic.
-            # Fall through to ONE exact set-diff on the round the
-            # signature repeats (r14, ADVICE hardening): both frames
-            # are checkpointed and .distinct(), and their counts
-            # already match, so an empty exceptAll proves frame
-            # equality outright. Runs once per query, not per round.
-            if ss.exceptAll(prev_edges).limit(1).count() == 0:
-                break
-        prev_sig = sig
+        if _is_star(edges):
+            break
     else:
-        # The 12-round ⌈log2⌉ bound is a heuristic, not a proof: if the
-        # loop exhausts without the signature reaching a fixpoint, the
-        # edge set may still contain non-star edges and the groupBy
-        # below would silently report wrong canonical ids. Fail loudly
-        # instead — a star is exactly "every u appears once, pointing
-        # at a node that is never itself a source".
-        non_star = (
-            edges.alias("e1")
-            .join(
-                edges.alias("e2"),
-                F.col("e1.v") == F.col("e2.u"),
-                "left_semi",
-            )
-            .limit(1)
-            .count()
+        # The 12-round bound is a heuristic, not a proof: fail loudly
+        # rather than let the groupBy downstream report wrong canonical
+        # ids from a non-star edge set.
+        raise RuntimeError(
+            "star contraction did not converge within 12 rounds: the edge "
+            "set is still not a star; raise the round bound"
         )
-        # Chains are not the only non-star shape: a source u with two
-        # outgoing edges to DISTINCT sinks also breaks the star
-        # invariant (the groupBy(v) below would count that member once
-        # per sink). edges is .distinct(), so any duplicated u is
-        # exactly that case.
-        dup_source = (
-            edges.groupBy("u")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .where(F.col("deg") > 1)
-            .limit(1)
-            .count()
-        )
-        if non_star or dup_source:
-            raise RuntimeError(
-                "star contraction did not converge within 12 rounds: "
-                "edge set still contains "
-                + ("chains (v appearing as a source)" if non_star
-                   else "a source with multiple distinct sinks")
-                + "; raise the round bound"
-            )
     return edges
 
 

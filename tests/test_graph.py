@@ -1,0 +1,86 @@
+"""star_contraction_edges against a Python union-find: the converged
+edge set must be exactly one (member, component minimum) row per
+non-root node, and the loop must stop on the round whose edge set is
+already a star."""
+
+import random
+
+import pytest
+
+from gotsdb_spark.operators import graph
+from gotsdb_spark.operators.graph import star_contraction_edges
+
+
+def _union_find_members(pairs):
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    comps = {}
+    for x in list(parent):
+        comps.setdefault(find(x), []).append(x)
+    out = set()
+    for members in comps.values():
+        root = min(members)
+        out |= {(x, root) for x in members if x != root}
+    return out
+
+
+def _contract(spark, pairs):
+    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    return {(r.u, r.v) for r in star_contraction_edges(df).collect()}
+
+
+def test_shuffled_long_chain(spark):
+    rnd = random.Random(11)
+    ids = list(range(400))
+    rnd.shuffle(ids)
+    pairs = [(ids[i], ids[i + 1]) for i in range(len(ids) - 1)]
+    assert _contract(spark, pairs) == _union_find_members(pairs)
+
+
+def test_random_multigraph_with_self_loops_and_reversed_pairs(spark):
+    rnd = random.Random(23)
+    pairs = [(rnd.randrange(300), rnd.randrange(300)) for _ in range(400)]
+    pairs += [(b, a) for a, b in pairs[:60]]  # both orientations
+    pairs += pairs[60:90]  # exact duplicates
+    pairs += [(i, i) for i in range(0, 300, 17)]  # self-loops
+    rnd.shuffle(pairs)
+    # Self-loop-only nodes are their own singleton component: no row.
+    expected = _union_find_members([p for p in pairs if p[0] != p[1]])
+    assert _contract(spark, pairs) == expected
+
+
+def test_star_after_one_round_stops_after_one_round(spark, monkeypatch):
+    rounds = []
+    real = graph._is_star
+    monkeypatch.setattr(graph, "_is_star", lambda e: rounds.append(1) or real(e))
+    # Hub 5 is not the minimum, so round one re-roots the star at 0.
+    pairs = [(5, x) for x in range(20) if x != 5] + [(7, 5), (5, 3)]
+    assert _contract(spark, pairs) == {(x, 0) for x in range(1, 20)}
+    assert len(rounds) == 1
+
+
+def test_round_bound_exhaustion_raises(spark, monkeypatch):
+    monkeypatch.setattr(graph, "_is_star", lambda edges: False)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        _contract(spark, [(1, 2), (2, 3)])
+
+
+def test_is_star_shapes(spark):
+    def is_star(rows):
+        return graph._is_star(spark.createDataFrame(rows, "u long, v long"))
+
+    assert is_star([])
+    assert is_star([(1, 0), (2, 0), (5, 3)])
+    assert not is_star([(2, 1), (1, 0)])  # a sink that is also a source
+    assert not is_star([(2, 0), (2, 1)])  # a source with two sinks

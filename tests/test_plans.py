@@ -71,6 +71,17 @@ def test_dedup_minhash_no_cartesian(spark):
     assert not has_cartesian_product(df)
 
 
+def test_dedup_minhash_seeds_hashed_once(spark):
+    """The band self-join reads the signature frame twice; each MinHash
+    seed must still be evaluated at most once in the executed plan, not
+    once per join side."""
+    from gotsdb_spark.operators.dedup import N_MINHASH
+
+    df = QUERIES["dedup_minhash_lsh"](spark, SF)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("md5(") <= N_MINHASH, plan[:2000]
+
+
 def test_events_scan_prunes_for_json_query(spark):
     df = QUERIES["json_props_extract"](spark, SF)
     scans = read_schema_columns(df)
