@@ -433,6 +433,19 @@ def _is_star(edges: DataFrame) -> bool:
     return bad.isEmpty()
 
 
+def _round_bound(pairs: DataFrame) -> int:
+    """Round bound for `star_contraction_edges`, from the id type alone
+    (no Spark job). A b-bit integral id admits at most 2**b nodes, and
+    any DataFrame holds fewer than 2**63 rows, so log2(n) <= min(b, 63).
+    The alternation converges in O(log² n) rounds (Kiveris et al.), and
+    the bound is that width squared: far above the rounds the loop
+    takes, since it ends on the first star (14 rounds for a 10,000-node
+    chain with ids in chain order)."""
+    widths = {"tinyint": 8, "smallint": 16, "int": 32}
+    bits = max(widths.get(pairs.schema[c].dataType.simpleString(), 63) for c in ("doc_a", "doc_b"))
+    return bits * bits
+
+
 def star_contraction_edges(pairs: DataFrame) -> DataFrame:
     """Run large-star/small-star contraction to the star fixpoint and
     return the converged edge set: one row (u, v) per NON-canonical
@@ -442,7 +455,8 @@ def star_contraction_edges(pairs: DataFrame) -> DataFrame:
     and dedup_savings_by_cluster_size (joins members back to document
     bytes). See the query docstring for the algorithm and scale
     rationale. The loop stops on the first round whose edge set is a
-    star (`_is_star`) and fails loudly if the round bound runs out.
+    star (`_is_star`) and fails loudly if the round bound
+    (`_round_bound`) runs out.
     """
     edges = (
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
@@ -450,7 +464,8 @@ def star_contraction_edges(pairs: DataFrame) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    for _ in range(12):  # ⌈log2⌉ bound for any plausible component count
+    bound = _round_bound(pairs)
+    for _ in range(bound):
         sym = edges.union(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
         ).distinct()
@@ -482,12 +497,11 @@ def star_contraction_edges(pairs: DataFrame) -> DataFrame:
         if _is_star(edges):
             break
     else:
-        # The 12-round bound is a heuristic, not a proof: fail loudly
-        # rather than let the groupBy downstream report wrong canonical
-        # ids from a non-star edge set.
+        # Fail loudly rather than let the groupBy downstream report
+        # wrong canonical ids from a non-star edge set.
         raise RuntimeError(
-            "star contraction did not converge within 12 rounds: the edge "
-            "set is still not a star; raise the round bound"
+            f"star contraction did not converge within {bound} rounds: the "
+            "edge set is still not a star"
         )
     return edges
 

@@ -106,15 +106,3 @@ def get_spark(app_name: str = "gotsdb_spark", cpus: int | None = None) -> SparkS
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def configure_for_scale(spark: SparkSession, target_bytes: int) -> None:
-    """Re-tune shuffle parallelism for a given input size.
-
-    Rule of thumb: ~128 MiB per shuffle partition post-filter. With AQE
-    coalescing enabled this sets a ceiling, not an exact count, so erring
-    high is cheap. On a 1000-executor cluster reading 100 TB you'd want
-    O(100k) shuffle partitions; locally the driver clamps to cores*4.
-    """
-    per_part = 128 * 1024 * 1024
-    n = max(DEFAULT_CPUS, min(200_000, target_bytes // per_part))
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))

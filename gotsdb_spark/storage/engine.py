@@ -17,21 +17,24 @@ Spark-native design (SURVEY.md §1.3) — not a translation:
   (cold.go:140,152). Last-writer-wins upsert (hot.go:53) becomes
   log-compaction: row_number() over (partitionBy key, orderBy
   write_ts/seq desc) == 1 — the idiomatic immutable-storage upsert.
-- Promotion (engine.go:100-109) depends on the log's size. A log of at
-  most ``materialize_threshold`` rows (counted from the Parquet footers)
-  is folded on the driver with pyarrow into a key → value dict, as the
-  reference decodes its blob into process memory: no Spark job, nothing
-  cached. A larger log is compacted and cached executor-side in Spark's
-  block manager, and eviction unpersists it (engine.go:121). A
-  driver-side overlay dict holds unflushed writes so read-your-writes
-  holds without re-shuffling the base on every point write.
+- Promotion (engine.go:100-109) reads the Parquet footers first. A
+  log of at most ``materialize_threshold`` rows is folded on the driver
+  with pyarrow into a key → value dict, as the reference decodes its
+  blob into process memory. A larger log stays on disk: promotion keeps
+  only each row group's (min, max) ``key`` statistics, and a point read
+  reads just the row groups whose range covers the key — the sorted-run
+  probe of an LSM tree (O'Neil et al., Acta Informatica 1996). Neither
+  path starts a Spark job or caches anything. A driver-side overlay
+  dict holds unflushed writes, so read-your-writes holds without
+  rewriting the log on every point write.
 - Flush appends only the pending delta as one new log segment instead
   of rewriting the collection (cold.go:136-154 rewrites everything), so
   a flush is O(delta). The delta already lives in the driver, so the
-  segment is written there with pyarrow (no Spark job): one
-  ``part-<uuid>.snappy.parquet`` file, written under a hidden
-  ``.``-prefixed name and renamed into place, so a reader of the dir
-  (Spark skips ``.``/``_`` names) sees the whole segment or none of it.
+  segment is written there with pyarrow (no Spark job): one key-sorted
+  ``part-<uuid>.snappy.parquet`` file of small row groups, written
+  under a hidden ``.``-prefixed name and renamed into place, so a
+  reader of the dir (Spark skips ``.``/``_`` names) sees the whole
+  segment or none of it.
   The engine therefore needs a data dir the driver can reach as a local
   (POSIX) path, as `_recover`, `compact` and `list_cold` already do.
   `compact()` is the explicit log-rewrite maintenance job and stays a
@@ -53,6 +56,7 @@ import shutil
 import threading
 import uuid
 from datetime import datetime, timezone
+from typing import NamedTuple
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -85,6 +89,11 @@ _SEGMENT_ENCODING = {
         "write_ts": "DELTA_BINARY_PACKED",
     },
 }
+# Rows per row group of a flush segment. A segment is written sorted by
+# key, so its row groups cover disjoint key ranges and a point read on a
+# large collection decodes at most one group of this many rows per
+# segment. Smaller groups make that read cheaper and the file larger.
+_SEGMENT_ROW_GROUP_ROWS = 4096
 
 # Collection ids: alphanumeric, per the cold-listing regex (cold.go:72) —
 # but anchored, unlike the reference's buggy unanchored pattern.
@@ -119,43 +128,36 @@ def _log_files(path: str) -> list[str]:
     )
 
 
-def _fold_log(files: list[str], max_rows: int) -> tuple[dict[str, str], int] | None:
-    """Fold the log in ``files`` on the driver: (latest value per key,
-    max seq or 0), or None if the files hold more than ``max_rows`` rows.
-
-    Row counts come from the Parquet footers, and counting stops once
-    past ``max_rows``, so a large log costs a few footer reads. Every
-    segment is read as `_LOG_ARROW_SCHEMA`; a missing column reads as
-    nulls, as under Spark's schema-on-read. Rows are applied in
-    ascending (write_ts, seq) order with nulls first, so the last
-    assignment per key is the row `Engine._compacted` keeps (``DESC
-    NULLS LAST``)."""
-    footers = []
-    rows = 0
-    for f in files:
-        meta = pq.read_metadata(f)
-        rows += meta.num_rows
-        if rows > max_rows:
-            return None
-        footers.append((f, meta))
-    tables = []
-    for f, meta in footers:
-        present = [n for n in _LOG_ARROW_SCHEMA.names if n in meta.schema.names]
-        with pq.ParquetFile(f, metadata=meta, coerce_int96_timestamp_unit="us") as pf:
+def _read_log(
+    path: str, meta: pq.FileMetaData, row_groups: list[int] | None = None
+) -> pa.Table:
+    """One log file (or some of its row groups) as `_LOG_ARROW_SCHEMA`,
+    as Spark's schema-on-read sees it: INT96 timestamps read as µs,
+    every column is cast to the log type and a missing column reads as
+    nulls."""
+    present = [n for n in _LOG_ARROW_SCHEMA.names if n in meta.schema.names]
+    with pq.ParquetFile(path, metadata=meta, coerce_int96_timestamp_unit="us") as pf:
+        if row_groups is None:
             t = pf.read(columns=present)
-        tables.append(
-            pa.table(
-                [
-                    t.column(c.name).cast(c.type)
-                    if c.name in present
-                    else pa.nulls(t.num_rows, c.type)
-                    for c in _LOG_ARROW_SCHEMA
-                ],
-                names=_LOG_ARROW_SCHEMA.names,
-            )
-        )
+        else:
+            t = pf.read_row_groups(row_groups, columns=present)
+    return pa.table(
+        [
+            t.column(c.name).cast(c.type)
+            if c.name in present
+            else pa.nulls(t.num_rows, c.type)
+            for c in _LOG_ARROW_SCHEMA
+        ],
+        names=_LOG_ARROW_SCHEMA.names,
+    )
+
+
+def _latest(tables: list[pa.Table]) -> dict[str, str | None]:
+    """Latest value per key over log rows: rows are applied in ascending
+    (write_ts, seq) order with nulls first, so the last assignment per
+    key is the row `Engine._compacted` keeps (``DESC NULLS LAST``)."""
     if not tables:
-        return {}, 0
+        return {}
     log = pa.concat_tables(tables)
     order = pc.sort_indices(
         log,
@@ -164,7 +166,71 @@ def _fold_log(files: list[str], max_rows: int) -> tuple[dict[str, str], int] | N
     )
     keys = log.column("key").take(order).to_pylist()
     values = log.column("value").take(order).to_pylist()
-    return dict(zip(keys, values)), pc.max(log.column("seq")).as_py() or 0
+    return dict(zip(keys, values))
+
+
+def _fold_log(footers: list[tuple[str, pq.FileMetaData]]) -> dict[str, str | None]:
+    """The whole log folded on the driver: latest value per key."""
+    return _latest([_read_log(f, meta) for f, meta in footers])
+
+
+def _row_group_ranges(meta: pq.FileMetaData, column: str) -> list[tuple[int, object, object]]:
+    """(row group, min, max) of ``column`` for each non-empty row group
+    in a Parquet footer. min and max are None where the group has no
+    statistics for the column (or the file lacks it): such a group must
+    be read."""
+    names = meta.schema.names
+    j = names.index(column) if column in names else None
+    ranges = []
+    for i in range(meta.num_row_groups):
+        rg = meta.row_group(i)
+        if rg.num_rows == 0:
+            continue
+        stats = rg.column(j).statistics if j is not None else None
+        if stats is not None and stats.has_min_max:
+            ranges.append((i, stats.min, stats.max))
+        else:
+            ranges.append((i, None, None))
+    return ranges
+
+
+def _seq_max(footers: list[tuple[str, pq.FileMetaData]]) -> int:
+    """Max ``seq`` in the log, or 0: taken from the row-group statistics;
+    the row groups without them are read."""
+    best = 0
+    for f, meta in footers:
+        unread = []
+        for i, _, hi in _row_group_ranges(meta, "seq"):
+            if hi is None:
+                unread.append(i)
+            else:
+                best = max(best, hi)
+        if unread:
+            best = max(best, pc.max(_read_log(f, meta, unread).column("seq")).as_py() or 0)
+    return best
+
+
+class _Segment(NamedTuple):
+    """A log file of a large hot collection: its footer and the key
+    range of each non-empty row group (None bounds: no statistics)."""
+
+    path: str
+    meta: pq.FileMetaData
+    ranges: list[tuple[int, object, object]]
+
+
+def _probe_log(segments: list[_Segment], key: str) -> dict[str, str | None]:
+    """{key: latest value}, or {} if no segment holds ``key``. Each file
+    decodes only the row groups whose key range covers ``key``; the
+    rule for the latest row is `_fold_log`'s. Correct on unsorted files
+    too, where the ranges merely prune less."""
+    matches = []
+    for seg in segments:
+        groups = [i for i, lo, hi in seg.ranges if lo is None or lo <= key <= hi]
+        if groups:
+            t = _read_log(seg.path, seg.meta, groups)
+            matches.append(t.filter(pc.equal(t.column("key"), key)))
+    return _latest(matches)
 
 
 class CollectionNotFoundError(KeyError):
@@ -217,23 +283,22 @@ class Engine:
         self.spark = spark
         self.data_dir = os.path.abspath(data_dir)
         self.auto_create = auto_create_collection
-        # A collection with at most this many compacted keys is held in a
+        # A log of at most this many rows is folded at promotion into a
         # driver-side dict, giving O(1) point reads — the reference's own
         # semantics (it gob-decodes the whole collection into process
-        # memory, engine.go:100-109). A log of at most this many rows is
-        # folded into that dict on the driver; a larger log is cached
-        # executor-side, and without a dict point reads run as filters
-        # on the cached view; at 100 TB that's the only possible mode.
+        # memory, engine.go:100-109). A larger log is never loaded: its
+        # point reads probe the row groups whose key range covers the
+        # key, so driver memory stays bounded by the footers.
         self.materialize_threshold = materialize_threshold
         os.makedirs(self.data_dir, exist_ok=True)  # cold.go:27-38
-        # Hot tier: compacted base view (a cached DataFrame for a log
-        # folded executor-side; None for driver-folded, empty or new
-        # collections) + unflushed-write overlay. A driver-folded
-        # collection keeps the segment files listed at promotion, which
-        # snapshot() reads on demand.
-        self._hot_base: dict[str, DataFrame | None] = {}
+        # Hot tier. A collection is hot iff it has a `_hot_dict` entry:
+        # its latest-per-key dict, or None for a log above the
+        # threshold, whose point reads probe `_hot_index` instead.
+        # `_hot_files` lists the log files at promotion, which
+        # snapshot() reads on demand; `_pending` holds unflushed writes.
+        self._hot_dict: dict[str, dict[str, str | None] | None] = {}
+        self._hot_index: dict[str, list[_Segment]] = {}
         self._hot_files: dict[str, list[str]] = {}
-        self._hot_dict: dict[str, dict[str, str] | None] = {}
         self._pending: dict[str, dict[str, str]] = {}
         # Durable per-collection sequence floor: the max `seq` present in
         # the cold log, discovered lazily and advanced on every flush.
@@ -253,23 +318,13 @@ class Engine:
     def _log_seq_floor(self, id: str) -> int:
         """Max seq already persisted in the collection's log (0 if none).
 
-        One parquet-stats scan of a single column per engine generation;
-        cached and advanced locally afterwards."""
-        if id in self._seq_floor:
-            return self._seq_floor[id]
-        path = self._path(id)
-        floor = 0
-        if os.path.isdir(path):
-            row = (
-                self.spark.read.schema(LOG_SCHEMA)
-                .parquet(path)
-                .agg(F.max("seq"))
-                .first()
-            )
-            if row is not None and row[0] is not None:
-                floor = int(row[0])
-        self._seq_floor[id] = floor
-        return floor
+        Read from the Parquet footers once per engine generation (or set
+        by promotion); cached and advanced locally afterwards."""
+        if id not in self._seq_floor:
+            path = self._path(id)
+            files = _log_files(path) if os.path.isdir(path) else []
+            self._seq_floor[id] = _seq_max([(f, pq.read_metadata(f)) for f in files])
+        return self._seq_floor[id]
 
     # -- crash recovery -------------------------------------------------
 
@@ -308,7 +363,7 @@ class Engine:
     def list_hot(self) -> list[str]:
         """Hot-tier ids (hot.go:20-27)."""
         with self._lock:
-            return sorted(self._hot_base)
+            return sorted(self._hot_dict)
 
     def list_cold(self) -> list[str]:
         """Cold-tier ids from a warehouse dir scan (cold.go:50-84)."""
@@ -334,7 +389,7 @@ class Engine:
         """Hot first ('slower due to requiring filesystem io',
         engine.go:70-75), then cold."""
         with self._lock:
-            if id in self._hot_base:
+            if id in self._hot_dict:
                 return True
         return self._cold_exists(id)
 
@@ -342,7 +397,7 @@ class Engine:
         """engine.go:85-98 — errors if the collection exists in neither
         tier."""
         with self._lock:
-            if id in self._hot_base:
+            if id in self._hot_dict:
                 return True
         if self._cold_exists(id):
             return False
@@ -384,11 +439,11 @@ class Engine:
         below is point lookups on top of it.
         """
         with self._lock:
-            if id not in self._hot_base:
+            if id not in self._hot_dict:
                 self.load_collection_if_not_present(id)
-            base = self._hot_base[id]
             files = self._hot_files.get(id)
             overlay = self._overlay_df(id)
+        base = None
         if files:
             base = self._compacted(self.spark.read.schema(LOG_SCHEMA).parquet(*files))
         parts = [p for p in (base, overlay) if p is not None]
@@ -406,48 +461,41 @@ class Engine:
     # -- load / flush (promotion / demotion) ----------------------------
 
     def load_collection(self, id: str) -> None:
-        """Cold → hot promotion (engine.go:100-109).
+        """Cold → hot promotion (engine.go:100-109), on the driver from
+        the Parquet footers: no Spark job, nothing cached.
 
-        A log of at most ``materialize_threshold`` rows is folded on the
-        driver into the hot dict (`_fold_log`): no Spark job and no
-        cached view. A larger log is read, compacted and cached
-        executor-side; it still gets a dict when it has at most the
-        threshold's keys."""
+        A log of at most ``materialize_threshold`` rows is folded into
+        the hot dict (`_fold_log`). A larger one is indexed instead:
+        each file's row-group key ranges, which `read_key` probes. The
+        seq floor comes from the footers' ``seq`` statistics."""
         if not self._cold_exists(id):
             raise _err_not_found_any(id)
         path = self._path(id)
         with self._lock:
             files = _log_files(path)
-            folded = _fold_log(files, self.materialize_threshold)
-            self._pending.setdefault(id, {})
-            if folded is not None:
-                self._hot_dict[id], max_seq = folded
-                self._hot_base[id] = None
-                self._hot_files[id] = files
-                self._seq_floor.setdefault(id, max_seq)
-                return
-            self._hot_files.pop(id, None)
-            df = self._compacted(self.spark.read.schema(LOG_SCHEMA).parquet(path))
-            df = df.cache()
-            self._hot_base[id] = df
-            sample = df.select("key", "value").limit(self.materialize_threshold + 1)
-            rows = sample.collect()
-            if len(rows) <= self.materialize_threshold:
-                self._hot_dict[id] = {r["key"]: r["value"] for r in rows}
+            footers = [(f, pq.read_metadata(f)) for f in files]
+            if sum(meta.num_rows for _, meta in footers) <= self.materialize_threshold:
+                self._hot_dict[id] = _fold_log(footers)
+                self._hot_index.pop(id, None)
             else:
                 self._hot_dict[id] = None
+                self._hot_index[id] = [
+                    _Segment(f, meta, _row_group_ranges(meta, "key")) for f, meta in footers
+                ]
+            self._hot_files[id] = files
+            self._pending.setdefault(id, {})
+            self._seq_floor.setdefault(id, _seq_max(footers))
 
     def load_collection_if_not_present(self, id: str) -> None:
         """engine.go:187-222: hot → no-op; cold → promote; neither →
         auto-create (if enabled) else error (engine.go:221)."""
         with self._lock:
-            if id in self._hot_base:
+            if id in self._hot_dict:
                 return
             if self._cold_exists(id):
                 self.load_collection(id)
                 return
             if self.auto_create:
-                self._hot_base[id] = None
                 self._hot_dict[id] = {}
                 self._pending[id] = {}
                 return
@@ -462,40 +510,41 @@ class Engine:
         this appends only the pending delta as one new log segment —
         O(unflushed writes), not O(collection) — written driver-side by
         `write_parquet_atomic`, with no Spark job once the seq floor is
-        known. The segment's seqs continue strictly above every seq in
-        the log, and all its rows share one ``write_ts``. An empty
-        auto-created collection is persisted as a zero-row segment.
-        Eviction (engine.go:121) unpersists a cached base."""
+        known. The segment is sorted by key in row groups of
+        ``_SEGMENT_ROW_GROUP_ROWS`` rows, its seqs continue strictly
+        above every seq in the log, and all its rows share one
+        ``write_ts``. An empty auto-created collection is persisted as
+        a zero-row segment."""
         with self._lock:
-            if id not in self._hot_base:
+            if id not in self._hot_dict:
                 raise _err_not_found_hot(id)
-            base = self._hot_base[id]
             path = self._path(id)
             pending = self._pending[id]
-            if pending or (base is None and not os.path.isdir(path)):
+            if pending or not os.path.isdir(path):
                 floor = self._log_seq_floor(id)
                 n = len(pending)
+                keys = sorted(pending)
                 segment = pa.Table.from_pydict(
                     {
-                        "key": list(pending),
-                        "value": list(pending.values()),
+                        "key": keys,
+                        "value": [pending[k] for k in keys],
                         "write_ts": [datetime.now(timezone.utc)] * n,
                         "seq": range(floor + 1, floor + 1 + n),
                     },
                     schema=_LOG_ARROW_SCHEMA,
                 )
                 os.makedirs(path, exist_ok=True)
-                write_parquet_atomic(path, segment, **_SEGMENT_ENCODING)
+                write_parquet_atomic(
+                    path, segment, row_group_size=_SEGMENT_ROW_GROUP_ROWS, **_SEGMENT_ENCODING
+                )
                 self._seq_floor[id] = floor + n
             self._evict(id)
 
     def _evict(self, id: str) -> None:
-        """Drop a hot collection's state, unpersisting a cached base."""
-        base = self._hot_base.pop(id)
-        if base is not None:
-            base.unpersist()
+        """Drop a hot collection's state (engine.go:121)."""
+        del self._hot_dict[id]
         del self._pending[id]
-        self._hot_dict.pop(id, None)
+        self._hot_index.pop(id, None)
         self._hot_files.pop(id, None)
 
     def flush_all_collections(self) -> list[Exception]:
@@ -529,10 +578,7 @@ class Engine:
             os.rename(path, bak)
             os.rename(tmp, path)
             shutil.rmtree(bak)
-            if id in self._hot_base:  # refresh the hot state
-                base = self._hot_base[id]
-                if base is not None:
-                    base.unpersist()
+            if id in self._hot_dict:  # refresh the hot state
                 self.load_collection(id)
 
     # -- point reads / writes ------------------------------------------
@@ -540,44 +586,29 @@ class Engine:
     def read_key(self, id: str, key: str) -> str:
         """Read-through point lookup (engine.go:139-173).
 
-        Hot overlay (read-your-writes) → hot dict or cached base filter
-        → cold promotion on miss → error parity: missing key in a hot
-        collection vs missing collection are distinct (hot.go:43 vs
-        engine.go:172).
+        Hot overlay (read-your-writes) → hot dict, or for a large
+        collection the row-group probe (`_probe_log`) → cold promotion
+        on miss → error parity: missing key in a hot collection vs
+        missing collection are distinct (hot.go:43 vs engine.go:172).
 
         The check-promote-lookup runs under ONE lock hold (RLock, so
-        the nested load_collection re-acquires): dropping the lock
-        between promotion and lookup let a concurrent flush demote the
-        collection in the gap, and the lookup then misread "no hot
-        dict, no base" as key-missing while the value sat in the cold
-        log — a lost read-your-write under write/flush concurrency
-        (caught by tests/test_property_kv.py's 8-thread hammer). Only
-        the large-collection base probe (a Spark job over the promote-
-        time file snapshot, which any later append only extends) runs
-        outside the lock."""
+        the nested load_collection re-acquires): a concurrent flush
+        must not demote the collection between promotion and lookup,
+        and compact() must not delete the files a probe reads."""
         with self._lock:
-            if id not in self._hot_base:
+            if id not in self._hot_dict:
                 if self._cold_exists(id):
                     self.load_collection(id)  # engine.go:150-169: promote all
                 else:
                     raise _err_not_found_any(id)
-            pending = self._pending.get(id, {})
+            pending = self._pending[id]
             if key in pending:
                 return pending[key]
-            hot = self._hot_dict.get(id)
-            if hot is not None:
-                if key in hot:
-                    return hot[key]
-                raise KeyNotFoundError(
-                    f"No value found for key [{key}] in hot collection [{id}]."
-                )
-            base = self._hot_base.get(id)
-        if base is not None:
-            # At most one row per key; collect() is one job where
-            # first() (take(1)) scans one partition, then scales up.
-            rows = base.where(F.col("key") == F.lit(key)).select("value").collect()
-            if rows:
-                return rows[0][0]
+            hot = self._hot_dict[id]
+            if hot is None:
+                hot = _probe_log(self._hot_index[id], key)
+            if key in hot:
+                return hot[key]
         # hot.go:43
         raise KeyNotFoundError(
             f"No value found for key [{key}] in hot collection [{id}]."
@@ -599,18 +630,17 @@ class Engine:
     def create_collection(self, id: str) -> None:
         """hot.go:62-72 — error if present in the hot tier."""
         with self._lock:
-            if id in self._hot_base:
+            if id in self._hot_dict:
                 # hot.go:65
                 raise CollectionExistsError(
                     f"Collection already exists with id [{id}] in hot storage."
                 )
-            self._hot_base[id] = None
             self._hot_dict[id] = {}
             self._pending[id] = {}
 
     def drop_collection(self, id: str) -> None:
         """hot.go:74-85 — hot-tier eviction without persisting."""
         with self._lock:
-            if id not in self._hot_base:
+            if id not in self._hot_dict:
                 raise _err_not_found_hot(id)  # hot.go:84
             self._evict(id)

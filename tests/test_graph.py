@@ -71,9 +71,29 @@ def test_star_after_one_round_stops_after_one_round(spark, monkeypatch):
 
 
 def test_round_bound_exhaustion_raises(spark, monkeypatch):
-    monkeypatch.setattr(graph, "_is_star", lambda edges: False)
-    with pytest.raises(RuntimeError, match="did not converge"):
+    rounds = []
+    monkeypatch.setattr(graph, "_is_star", lambda edges: rounds.append(1) or False)
+    monkeypatch.setattr(graph, "_round_bound", lambda pairs: 3)
+    with pytest.raises(RuntimeError, match="did not converge within 3 rounds"):
         _contract(spark, [(1, 2), (2, 3)])
+    assert len(rounds) == 3
+
+
+def test_round_bound_from_id_width(spark):
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    for ddl, bits in (("tinyint", 8), ("int", 32), ("long", 63), ("string", 63)):
+        pairs = spark.createDataFrame([], f"doc_a {ddl}, doc_b {ddl}")
+        assert graph._round_bound(pairs) == bits * bits
+    assert set(tracker.getJobIdsForGroup()) == before
+
+
+@pytest.mark.slow
+def test_chain_in_id_order_of_10000_nodes(spark):
+    """Ids in chain order are a slow case for the alternation: 14
+    rounds."""
+    pairs = [(i, i + 1) for i in range(9_999)]
+    assert _contract(spark, pairs) == {(i, 0) for i in range(1, 10_000)}
 
 
 def test_is_star_shapes(spark):

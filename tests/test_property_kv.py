@@ -152,3 +152,58 @@ def test_engine_concurrent_access_matches_models(spark, tmp_path_factory):
     reborn = Engine(spark, data_dir)
     for key, val in merged.items():
         assert reborn.read_key("shared", key) == val
+
+
+def test_engine_concurrent_access_on_probed_log_matches_models(spark, tmp_path_factory):
+    """The concurrent hammer above the dict threshold: at
+    ``materialize_threshold=1`` every promotion indexes the log and
+    reads probe its row groups while other threads write, flush and
+    compact() (which renames and deletes the files a probe reads)."""
+    data_dir = str(tmp_path_factory.mktemp("conc_probe"))
+    engine = Engine(spark, data_dir, materialize_threshold=1)
+    for i in range(3):
+        engine.write_key("shared", f"seed{i}", "s")
+    engine.flush_collection("shared")
+    n_threads, n_ops = 4, 12
+    barrier = threading.Barrier(n_threads)
+    failures: list[tuple[int, Exception]] = []
+    models: list[dict[str, str]] = [{} for _ in range(n_threads)]
+
+    def worker(t: int) -> None:
+        try:
+            barrier.wait(timeout=60)
+            for i in range(n_ops):
+                key = f"t{t}_k{i % 3}"
+                val = f"{t}:{i}"
+                engine.write_key("shared", key, val)
+                models[t][key] = val
+                if i % 3 == 2:
+                    try:
+                        engine.flush_collection("shared")
+                    except CollectionNotFoundError:
+                        pass  # another thread demoted first — benign
+                if t == 0 and i % 6 == 5:
+                    engine.compact("shared")
+                assert engine.read_key("shared", key) == val
+                assert engine.read_key("shared", "seed1") == "s"
+        except Exception as exc:  # noqa: BLE001 — surfaced via failures
+            failures.append((t, exc))
+
+    threads = [
+        threading.Thread(target=worker, args=(t,), name=f"kv-probe-{t}")
+        for t in range(n_threads)
+    ]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=300)
+    assert not failures, failures
+
+    merged = {f"seed{i}": "s" for i in range(3)}
+    for m in models:
+        merged.update(m)
+    assert engine.flush_all_collections() == []
+    reborn = Engine(spark, data_dir, materialize_threshold=1)
+    for key, val in merged.items():
+        assert reborn.read_key("shared", key) == val
+    assert reborn._hot_dict["shared"] is None

@@ -395,12 +395,12 @@ def test_small_log_promotion_and_next_flush_start_no_spark_job(spark, tmp_path):
     assert e2._log_seq_floor("c") == 4
 
 
-def test_driver_fold_equals_spark_compaction_on_mixed_log(spark, tmp_path):
-    """The driver fold keeps the same row per key as the Spark
-    compaction, over a streaming-sink batch, compact() output, driver
-    segments, a segment without a write_ts column (nulls: the row loses
-    to any timestamped row) and one key at equal write_ts with different
-    seqs in separate segments."""
+def _mixed_log(spark, tmp_path):
+    """Collection ``mix`` over a streaming-sink batch, compact() output,
+    driver segments, a segment without a write_ts column (nulls: the row
+    loses to any timestamped row) and one key at equal write_ts with
+    different seqs in separate segments. Returns (data dir, latest value
+    per key)."""
     import datetime as dt
 
     import pyarrow as pa
@@ -446,17 +446,116 @@ def test_driver_fold_equals_spark_compaction_on_mixed_log(spark, tmp_path):
         "1": "driver-1", "2": "driver-2", "3": "stream-3",
         "n": "old-ts", "t": "tie-high", "z": "z-7",
     }
-    e2 = Engine(spark, str(data))
+    return str(data), want
+
+
+def test_driver_fold_equals_spark_compaction_on_mixed_log(spark, tmp_path):
+    """The driver fold keeps the same row per key as the Spark
+    compaction over the mixed log of `_mixed_log`."""
+    data, want = _mixed_log(spark, tmp_path)
+    e2 = Engine(spark, data)
     e2.load_collection("mix")
-    assert e2._hot_base["mix"] is None  # driver-held
+    assert "mix" not in e2._hot_index  # driver-held
     assert e2._hot_dict["mix"] == _spark_compacted(spark, e2, "mix") == want
     assert e2._seq_floor["mix"] == 10**9
 
 
+def test_probe_equals_driver_fold_on_mixed_log(spark, tmp_path):
+    """Above the threshold, point reads probe the row groups whose key
+    range covers the key, and keep the same row per key as the fold, on
+    sorted and unsorted files alike. The seq floor comes from the
+    footers."""
+    data, want = _mixed_log(spark, tmp_path)
+    fold = Engine(spark, data)
+    fold.load_collection("mix")
+    probe = Engine(spark, data, materialize_threshold=1)
+    probe.load_collection("mix")
+    assert probe._hot_dict["mix"] is None
+    assert {k: probe.read_key("mix", k) for k in want} == fold._hot_dict["mix"] == want
+    for absent in ("0", "11", "m", "zz"):
+        with pytest.raises(KeyNotFoundError):
+            probe.read_key("mix", absent)
+    assert probe._seq_floor["mix"] == 10**9
+
+
+def _persisted_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_large_log_promotion_reads_and_flush_start_no_spark_job_or_cache(spark, tmp_path):
+    """Above the threshold, promotion indexes the footers and point reads
+    probe row groups: no Spark job, nothing cached. The seq floor comes
+    from the footers too, so the first flush starts no Spark job."""
+    data = str(tmp_path / "data")
+    e1 = Engine(spark, data)
+    for i in range(50):
+        e1.write_key("big", f"k{i:03d}", f"v{i}")
+    e1.flush_collection("big")
+    e1.write_key("big", "k000", "v0-new")
+    e1.flush_collection("big")
+
+    e2 = Engine(spark, data, materialize_threshold=10)
+    jobs, cached = _job_ids(spark), _persisted_rdds(spark)
+    e2.load_collection("big")
+    assert e2._hot_dict["big"] is None
+    assert e2.read_key("big", "k000") == "v0-new"
+    assert e2.read_key("big", "k049") == "v49"
+    with pytest.raises(KeyNotFoundError):
+        e2.read_key("big", "k050")
+    e2.write_key("big", "k007", "v7-new")
+    e2.flush_collection("big")
+    assert _job_ids(spark) == jobs
+    assert _persisted_rdds(spark) == cached
+    assert e2._log_seq_floor("big") == 52
+    assert Engine(spark, data, materialize_threshold=10).read_key("big", "k007") == "v7-new"
+
+
+def test_flush_segment_is_key_sorted_in_bounded_row_groups(spark, tmp_path, monkeypatch):
+    """Keys written in reverse order flush as one ascending-key segment
+    whose row groups hold at most _SEGMENT_ROW_GROUP_ROWS rows and
+    cover disjoint key ranges."""
+    import pyarrow.parquet as pq
+
+    from gotsdb_spark.storage.engine import _SEGMENT_ROW_GROUP_ROWS
+
+    n = 2 * _SEGMENT_ROW_GROUP_ROWS + 5
+    data = tmp_path / "data"
+    e = Engine(spark, str(data))
+    for i in reversed(range(n)):
+        e.write_key("c", f"k{i:06d}", f"v{i}")
+    e.flush_collection("c")
+    (name,) = _segments(data / "c")[0]
+    f = pq.ParquetFile(data / "c" / name)
+    keys = f.read(columns=["key"]).column("key").to_pylist()
+    assert keys == sorted(keys) and len(keys) == n
+    meta = f.metadata
+    assert meta.num_row_groups == 3
+    ranges = []
+    for i in range(meta.num_row_groups):
+        rg = meta.row_group(i)
+        assert rg.num_rows <= _SEGMENT_ROW_GROUP_ROWS
+        stats = rg.column(meta.schema.names.index("key")).statistics
+        ranges.append((stats.min, stats.max))
+    assert all(hi < lo for (_, hi), (lo, _) in zip(ranges, ranges[1:]))
+
+    # A point read above the threshold decodes only the covering group.
+    from gotsdb_spark.storage import engine as engine_mod
+
+    read = []
+    real = engine_mod._read_log
+    monkeypatch.setattr(
+        engine_mod, "_read_log", lambda p, m, groups=None: read.append(groups) or real(p, m, groups)
+    )
+    probe = Engine(spark, str(data), materialize_threshold=1)
+    probe.load_collection("c")
+    assert probe.read_key("c", f"k{n - 1:06d}") == f"v{n - 1}"
+    assert read == [[2]]
+
+
 def test_fold_threshold_boundary(spark, tmp_path):
-    """rows == threshold → driver fold; threshold + 1 rows over at most
-    threshold keys → executor-side path that still fills the dict; more
-    keys than the threshold → no dict."""
+    """rows == threshold → driver fold; threshold + 1 rows → no dict,
+    point reads probe the log, also when it has at most the threshold's
+    keys; neither starts a Spark job."""
     data = str(tmp_path / "data")
     e = Engine(spark, data)
     for i in range(4):
@@ -467,15 +566,19 @@ def test_fold_threshold_boundary(spark, tmp_path):
     before = _job_ids(spark)
     at.load_collection("c")
     assert _job_ids(spark) == before
-    assert at._hot_base["c"] is None
+    assert "c" not in at._hot_index
     assert at._hot_dict["c"] == {f"k{i}": f"v{i}" for i in range(4)}
 
     e.write_key("c", "k0", "v0-new")
     e.flush_collection("c")  # 5 rows, 4 keys
     over = Engine(spark, data, materialize_threshold=4)
+    before = _job_ids(spark)
     over.load_collection("c")
-    assert over._hot_base["c"].is_cached
-    assert over._hot_dict["c"] == {"k0": "v0-new", "k1": "v1", "k2": "v2", "k3": "v3"}
+    assert over._hot_dict["c"] is None
+    assert {f"k{i}": over.read_key("c", f"k{i}") for i in range(4)} == {
+        "k0": "v0-new", "k1": "v1", "k2": "v2", "k3": "v3"
+    }
+    assert _job_ids(spark) == before
 
     few = Engine(spark, data, materialize_threshold=3)
     few.load_collection("c")
@@ -500,7 +603,7 @@ def test_snapshot_of_driver_held_collection_matches_reads(spark, tmp_path):
     e2.write_key("c", "k9", "pending-9")
     keys = [f"k{i}" for i in range(4)] + ["k9"]
     for _ in range(2):
-        assert e2._hot_base["c"] is None  # driver-held
+        assert "c" not in e2._hot_index  # driver-held
         view = {k: e2.read_key("c", k) for k in keys}
         assert view == {**e2._hot_dict["c"], **e2._pending["c"]}
         assert {r["key"]: r["value"] for r in e2.snapshot("c").collect()} == view
