@@ -108,9 +108,10 @@ def _append_sentinel_rows(path: str, df: DataFrame) -> None:
 def kv_roundtrip_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KV lifecycle under the oracle: load `nation` through the KV API
     (write_key per row + an overwrite pass to exercise last-writer-wins),
-    flush, re-promote through a FRESH engine, return the compacted
-    snapshot. The oracle is simply the source table — equality proves
-    write→flush→promote→compact loses and corrupts nothing."""
+    flush, compact the log through a FRESH engine (a driver-side fold at
+    this size) and return its snapshot. The oracle is simply the source
+    table — equality proves write→flush→promote→compact loses and
+    corrupts nothing."""
     rows = load_table(spark, "nation", sf_dir).collect()
     data_dir = _scratch_dir(prefix="gotsdb_kv_itg_")
     e1 = Engine(spark, data_dir)
@@ -120,6 +121,7 @@ def kv_roundtrip_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         e1.write_key("itg", str(r["n_nationkey"]), r["n_name"])
     e1.flush_collection("itg")
     e2 = Engine(spark, data_dir)  # fresh engine ≙ restart
+    e2.compact("itg")
     return e2.snapshot("itg").select("key", "value")
 
 

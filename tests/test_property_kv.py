@@ -38,6 +38,35 @@ ops = st.lists(
 )
 
 
+# Null, empty and non-ASCII values and keys: the driver folds convert
+# columns to Python objects through numpy, which must keep each of them.
+WIDE_KEYS = KEYS + ("ключ",)
+VALUES = st.one_of(
+    st.none(),
+    st.just(""),
+    st.sampled_from(["héllo wörld", "中文", "🙂"]),
+    st.text(max_size=8),
+)
+
+compact_ops = st.lists(
+    st.one_of(
+        st.tuples(
+            st.just("write"),
+            st.sampled_from(COLLS),
+            st.sampled_from(WIDE_KEYS),
+            VALUES,
+        ),
+        st.tuples(st.just("flush"), st.sampled_from(COLLS)),
+        st.tuples(st.just("compact"), st.sampled_from(COLLS)),
+        st.tuples(st.just("read"), st.sampled_from(COLLS), st.sampled_from(WIDE_KEYS)),
+    ),
+    min_size=1,
+    max_size=30,
+)
+
+_ABSENT = object()
+
+
 @pytest.fixture(scope="module")
 def prop_spark(spark):
     return spark
@@ -86,6 +115,62 @@ def test_engine_matches_dict_model(prop_spark, tmp_path_factory, sequence):
     for coll, kv in model.items():
         for key, value in kv.items():
             assert reborn.read_key(coll, key) == value
+
+
+def _assert_read(engine, model, coll, key):
+    expected = model.get(coll, {}).get(key, _ABSENT)
+    if coll not in model:
+        with pytest.raises(CollectionNotFoundError):
+            engine.read_key(coll, key)
+    elif expected is _ABSENT:
+        with pytest.raises(KeyNotFoundError):
+            engine.read_key(coll, key)
+    else:
+        assert engine.read_key(coll, key) == expected
+
+
+@given(sequence=compact_ops)
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_engine_with_compaction_matches_dict_model_without_spark_jobs(
+    prop_spark, tmp_path_factory, sequence
+):
+    """write/flush/compact/read at the default threshold agree with a
+    dict model, also through fresh Engines that fold (default threshold)
+    or probe (threshold 1) the log, and no step starts a Spark job."""
+    tracker = prop_spark.sparkContext.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup())
+    data_dir = str(tmp_path_factory.mktemp("prop_compact"))
+    engine = Engine(prop_spark, data_dir)
+    model: dict[str, dict[str, str | None]] = {}
+
+    for op in sequence:
+        if op[0] == "write":
+            _, coll, key, value = op
+            engine.write_key(coll, key, value)
+            model.setdefault(coll, {})[key] = value
+        elif op[0] == "flush":
+            if op[1] in engine.list_hot():
+                engine.flush_collection(op[1])
+        elif op[0] == "compact":
+            if op[1] in engine.list_cold():
+                engine.compact(op[1])
+        else:
+            _assert_read(engine, model, op[1], op[2])
+
+    assert engine.flush_all_collections() == []
+    for reader in (
+        engine,
+        Engine(prop_spark, data_dir),
+        Engine(prop_spark, data_dir, materialize_threshold=1),
+    ):
+        for coll in COLLS:
+            for key in WIDE_KEYS:
+                _assert_read(reader, model, coll, key)
+    assert set(tracker.getJobIdsForGroup()) == jobs
 
 
 @pytest.mark.slow

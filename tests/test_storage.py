@@ -211,7 +211,7 @@ def test_compact_crash_recovery_restores_original(spark, tmp_path):
     e2.write_key("c", "k", "v2")
     e2.flush_collection("c")
     # A complete tmp is a finished Spark write of the log, as compact()
-    # makes it (flush segments are driver-written and leave no marker).
+    # makes it above the threshold (flush segments leave no marker).
     spark.read.parquet(path).write.parquet(path + ".compact.tmp")
     shutil.rmtree(path)
     e3 = Engine(spark, data)
@@ -317,8 +317,8 @@ def test_stray_temp_segment_is_invisible(spark, tmp_path, monkeypatch):
 
 def test_last_writer_wins_over_spark_and_driver_segments(spark, tmp_path):
     """LWW through a fresh Engine over a log mixing Spark-written
-    segments (a streaming KV-sink batch and compact() output) with
-    driver-written flush segments."""
+    segments (a streaming KV-sink batch and the Spark compaction of a
+    log above the threshold) with driver-written flush segments."""
     import datetime as dt
     import os
     import re
@@ -342,7 +342,8 @@ def test_last_writer_wins_over_spark_and_driver_segments(spark, tmp_path):
     e1 = Engine(spark, str(data))
     e1.write_key("mix", "1", "driver-1")
     e1.flush_collection("mix")
-    e1.compact("mix")
+    # Above the threshold compact() is a Spark write.
+    Engine(spark, str(data), materialize_threshold=1).compact("mix")
     e1.write_key("mix", "2", "driver-2")
     e1.write_key("mix", "4", "driver-4")
     e1.flush_collection("mix")
@@ -396,11 +397,11 @@ def test_small_log_promotion_and_next_flush_start_no_spark_job(spark, tmp_path):
 
 
 def _mixed_log(spark, tmp_path):
-    """Collection ``mix`` over a streaming-sink batch, compact() output,
-    driver segments, a segment without a write_ts column (nulls: the row
-    loses to any timestamped row) and one key at equal write_ts with
-    different seqs in separate segments. Returns (data dir, latest value
-    per key)."""
+    """Collection ``mix`` over a streaming-sink batch, the Spark output
+    of compact() above the threshold, driver segments, a segment without
+    a write_ts column (nulls: the row loses to any timestamped row) and
+    one key at equal write_ts with different seqs in separate segments.
+    Returns (data dir, latest value per key)."""
     import datetime as dt
 
     import pyarrow as pa
@@ -428,7 +429,7 @@ def _mixed_log(spark, tmp_path):
     e1.write_key("mix", "1", "driver-1")
     e1.write_key("mix", "n", "old-ts")
     e1.flush_collection("mix")
-    e1.compact("mix")
+    Engine(spark, str(data), materialize_threshold=1).compact("mix")  # Spark-written
     e1.write_key("mix", "2", "driver-2")
     e1.flush_collection("mix")
     # Equal write_ts, seq 9 written before seq 8: seq decides, not file order.
@@ -476,6 +477,177 @@ def test_probe_equals_driver_fold_on_mixed_log(spark, tmp_path):
         with pytest.raises(KeyNotFoundError):
             probe.read_key("mix", absent)
     assert probe._seq_floor["mix"] == 10**9
+
+
+def _log_rows(spark, path):
+    """Every row of the log at ``path`` as (key, value, write_ts, seq),
+    in key order."""
+    from gotsdb_spark.storage.engine import LOG_SCHEMA
+
+    rows = spark.read.schema(LOG_SCHEMA).parquet(str(path)).collect()
+    return sorted((tuple(r) for r in rows), key=lambda r: r[0])
+
+
+def test_driver_compaction_equals_spark_compaction_on_mixed_log(spark, tmp_path):
+    """compact() of a driver-sized log keeps, for every key, the whole
+    row the Spark compaction keeps: all four columns, including the row
+    whose write_ts is null, the seq tie at equal write_ts and the
+    streaming-sink batch's row."""
+    import datetime as dt
+
+    from gotsdb_spark.storage.engine import LOG_SCHEMA
+
+    data, want = _mixed_log(spark, tmp_path)
+    path = os.path.join(data, "mix")
+    e = Engine(spark, data)
+    log = spark.read.schema(LOG_SCHEMA).parquet(path)
+    spark_rows = sorted((tuple(r) for r in e._compacted(log).collect()), key=lambda r: r[0])
+    e.compact("mix")
+    driver_rows = _log_rows(spark, path)
+    assert driver_rows == spark_rows
+    assert {r[0]: r[1] for r in driver_rows} == want
+    by_key = {r[0]: r for r in driver_rows}
+    assert by_key["z"] == ("z", "z-7", None, 7)
+    assert by_key["t"] == ("t", "tie-high", dt.datetime(2030, 1, 1), 9)
+    assert by_key["3"] == ("3", "stream-3", dt.datetime(2024, 1, 1), 0)
+
+
+def test_driver_compaction_starts_no_spark_job_and_writes_one_key_sorted_file(spark, tmp_path):
+    """A driver-sized log compacts with no Spark job into one visible
+    key-sorted ``part-*.parquet`` of row groups of at most
+    _SEGMENT_ROW_GROUP_ROWS rows, next to the _SUCCESS marker."""
+    import re
+
+    import pyarrow.parquet as pq
+
+    from gotsdb_spark.storage.engine import _SEGMENT_ROW_GROUP_ROWS
+
+    n = 2 * _SEGMENT_ROW_GROUP_ROWS + 5
+    data = tmp_path / "data"
+    e = Engine(spark, str(data))
+    for i in range(n):
+        e.write_key("c", f"k{i:06d}", f"v{i}")
+    e.flush_collection("c")
+    for i in reversed(range(0, n, 7)):
+        e.write_key("c", f"k{i:06d}", f"w{i}")
+    e.flush_collection("c")
+
+    before = _job_ids(spark)
+    e.compact("c")
+    assert _job_ids(spark) == before
+    (name,), hidden = _segments(data / "c")
+    assert hidden == [] and re.fullmatch(r"part-[0-9a-f]{32}\.snappy\.parquet", name)
+    assert sorted(os.listdir(data / "c")) == ["_SUCCESS", name]
+    assert sorted(os.listdir(data)) == ["c"]  # no tmp or old dir left
+    f = pq.ParquetFile(data / "c" / name)
+    keys = f.read(columns=["key"]).column("key").to_pylist()
+    assert keys == sorted(keys) and len(keys) == n
+    assert f.metadata.num_row_groups == 3
+    for i in range(f.metadata.num_row_groups):
+        assert f.metadata.row_group(i).num_rows <= _SEGMENT_ROW_GROUP_ROWS
+
+    fresh = Engine(spark, str(data))
+    fresh.load_collection("c")
+    assert fresh._hot_dict["c"] == {
+        f"k{i:06d}": f"w{i}" if i % 7 == 0 else f"v{i}" for i in range(n)
+    }
+    assert fresh._log_seq_floor("c") == n + len(range(0, n, 7))
+    assert _job_ids(spark) == before
+
+
+def test_compacting_a_zero_row_log_writes_a_zero_row_file(spark, tmp_path):
+    """An empty collection stays listed and readable after compact()."""
+    import pyarrow.parquet as pq
+
+    data = tmp_path / "data"
+    e = Engine(spark, str(data))
+    e.create_collection("empty")
+    e.flush_collection("empty")
+    e.compact("empty")
+    (name,), hidden = _segments(data / "empty")
+    assert hidden == [] and pq.read_table(data / "empty" / name).num_rows == 0
+    fresh = Engine(spark, str(data))
+    assert fresh.list_cold() == ["empty"]
+    fresh.load_collection("empty")
+    assert fresh._hot_dict["empty"] == {}
+    assert _log_rows(spark, data / "empty") == []
+
+
+def _crash_between_compact_renames(monkeypatch, engine, id):
+    """Run ``engine.compact(id)`` up to a crash after the live dir moved
+    to ``.compact.old`` and before the finished tmp took its place."""
+    real = os.rename
+
+    def rename(src, dst):
+        if str(src).endswith(".compact.tmp"):
+            raise OSError("simulated crash")
+        real(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", rename)
+        with pytest.raises(OSError, match="simulated crash"):
+            engine.compact(id)
+
+
+def test_driver_compaction_tmp_is_promoted_only_with_success_marker(spark, tmp_path, monkeypatch):
+    """After a crash mid-swap, `_recover` promotes a driver-written
+    ``.compact.tmp`` that has its _SUCCESS marker, and rolls back to the
+    original log when the marker is missing."""
+    data = tmp_path / "data"
+    path = str(data / "c")
+    tmp, bak = path + ".compact.tmp", path + ".compact.old"
+    e = Engine(spark, str(data))
+    for n in range(2):
+        for i in range(3):
+            e.write_key("c", f"k{i}", f"v{n}.{i}")
+        e.flush_collection("c")
+    want = {f"k{i}": f"v1.{i}" for i in range(3)}
+
+    _crash_between_compact_renames(monkeypatch, e, "c")
+    assert not os.path.isdir(path) and os.path.isdir(bak)
+    assert os.path.isfile(os.path.join(tmp, "_SUCCESS"))
+    promoted = Engine(spark, str(data))
+    assert promoted.list_cold() == ["c"]
+    assert len(_segments(path)[0]) == 1  # the compacted log
+    assert not os.path.isdir(tmp) and not os.path.isdir(bak)
+    assert {k: promoted.read_key("c", k) for k in want} == want
+
+    promoted.write_key("c", "k0", "new")
+    promoted.flush_collection("c")
+    _crash_between_compact_renames(monkeypatch, promoted, "c")
+    os.remove(os.path.join(tmp, "_SUCCESS"))
+    rolled_back = Engine(spark, str(data))
+    assert rolled_back.read_key("c", "k0") == "new"
+    assert len(_segments(path)[0]) == 2  # the original, uncompacted log
+    assert not os.path.isdir(tmp) and not os.path.isdir(bak)
+
+
+def test_listing_waits_for_a_compaction_in_progress(spark, tmp_path, monkeypatch):
+    """list_cold() during a compact() waits for its swap instead of
+    deleting its unfinished ``.compact.tmp`` as a crash leftover."""
+    import threading
+
+    from gotsdb_spark.storage import engine as engine_mod
+
+    data = tmp_path / "data"
+    e = Engine(spark, str(data))
+    e.write_key("c", "k", "v")
+    e.flush_collection("c")
+    listed = []
+    lister = threading.Thread(target=lambda: listed.append(e.list_cold()))
+    real = engine_mod.write_parquet_atomic
+
+    def write_while_listing(directory, table, **options):
+        lister.start()
+        lister.join(0.5)
+        assert lister.is_alive()  # blocked behind the compaction
+        real(directory, table, **options)
+
+    monkeypatch.setattr(engine_mod, "write_parquet_atomic", write_while_listing)
+    e.compact("c")
+    lister.join(10)
+    assert listed == [["c"]]
+    assert Engine(spark, str(data)).read_key("c", "k") == "v"
 
 
 def _persisted_rdds(spark):
