@@ -295,42 +295,6 @@ def curate_shard_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def write_training_shards(
-    spark: SparkSession,
-    sf_dir: str,
-    out_path: str,
-    n_shards: int = 8,
-) -> DataFrame:
-    """Materialize the curated training set: apply the hash-split and
-    per-source mixture gates, then write parquet partitioned by
-    (split, shard).
-
-    The write-side composition of the query operators above, and the
-    idempotence story: every gate and the shard assignment are pure
-    functions of doc_id, so a rerun (or a retried task) produces
-    byte-identical partition membership — overwrite mode makes
-    re-export safe, and incremental loads never reshuffle old docs
-    between shards. Output files per (split, shard) directory stay
-    balanced because the shard key is a content hash, not input order.
-    Returns the curated DataFrame (lazily) for callers that want to
-    inspect rather than re-read.
-    """
-    docs = load_table(spark, "documents", sf_dir)
-    b2 = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
-    split = F.when(b2 < "1a", "test").when(b2 < "33", "val").otherwise("train")
-    idx = F.substring("source", 4, 10).cast("int")
-    threshold = F.element_at(
-        F.array(*[F.lit(t) for t in _MIXTURE_THRESHOLDS]), (idx % 4) + 1
-    )
-    curated = (
-        docs.withColumn("split", split)
-        .withColumn("shard", (_doc_bucket16(F.col("doc_id")) % n_shards))
-        .where(_doc_bucket16(F.col("doc_id")) < threshold)
-    )
-    curated.write.mode("overwrite").partitionBy("split", "shard").parquet(out_path)
-    return curated
-
-
 @query(
     "curate_end_to_end",
     oracle="""

@@ -358,11 +358,11 @@ def layout_range_scan_q1_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-file fixture. Hash equality proves the layout + file
     skipping is semantics-preserving.
     """
-    from gotsdb_spark.sources.registry import ensure_lineitem_range_partitioned
+    from gotsdb_spark.sources.registry import ensure_lineitem_range_partitioned, read_parquet
 
     path = ensure_lineitem_range_partitioned(spark, sf_dir)
     if path is not None:
-        li = spark.read.parquet(path)
+        li = read_parquet(spark, path)
     else:  # warehouse unavailable (read-only dir?) — fixture fallback
         li = load_table(spark, "lineitem", sf_dir)
     cents = lambda c: F.floor(c * 100 + F.lit(0.5)).cast("bigint")  # noqa: E731

@@ -1708,7 +1708,7 @@ def ts_dpp_expensive_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the difference between scanning 30 days and
     scanning 3, with no change to the query text.
     """
-    from gotsdb_spark.sources.registry import _ensure_events_partitioned
+    from gotsdb_spark.sources.registry import _ensure_events_partitioned, read_parquet
 
     orders = load_table(spark, "orders", sf_dir)
     dim = (
@@ -1722,7 +1722,7 @@ def ts_dpp_expensive_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     part = _ensure_events_partitioned(spark, sf_dir)
     if part is not None:
-        ev = spark.read.parquet(part).select("dt", "user_id")
+        ev = read_parquet(spark, part).select("dt", "user_id")
     else:  # pragma: no cover - fixture always materializes
         ev = load_table(spark, "events", sf_dir).select(
             F.date_format("ts", "yyyy-MM-dd").alias("dt"), "user_id"

@@ -1,20 +1,14 @@
-"""Additional batch formats + the partitioned warehouse layout.
+"""Additional batch formats.
 
 The reference's only format is a gob blob per collection
 (cold.go:111-154). Here Parquet is primary (registry.py), with CSV,
-JSON, and ORC read/write for interchange, and — the piece that matters at
-100 TB — a date-partitioned event layout so queries with time
-predicates prune whole directories before any I/O happens.
+JSON, and ORC read/write for interchange. The date-partitioned event
+layout is registry.py's ``events_dt`` copy.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from gotsdb_spark.sources.registry import load_table
 
 _READERS = ("parquet", "csv", "json", "orc")
 
@@ -50,89 +44,3 @@ def write_any(df: DataFrame, path: str, fmt: str = "parquet") -> None:
         writer.orc(path)
     else:
         writer.parquet(path)
-
-
-def write_events_partitioned(
-    spark: SparkSession, sf_dir: str, out_path: str
-) -> str:
-    """Materialize `events` in the at-scale layout: partitioned by event
-    date (`dt=YYYY-MM-DD/` directories).
-
-    This is the 100 TB design point for the time-series tables: any
-    query with a ts predicate prunes partitions at planning time (zero
-    I/O for skipped days), compaction/retention work per-partition, and
-    ingest appends only to the current day. SURVEY.md §4.3.
-    """
-    ev = load_table(spark, "events", sf_dir)
-    (
-        ev.withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
-        .repartition("dt")  # one writer wave per partition, no tiny files
-        .write.mode("overwrite")
-        .partitionBy("dt")
-        .parquet(out_path)
-    )
-    return out_path
-
-
-def read_events_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    """Read the partitioned layout; `dt` filters prune directories."""
-    return spark.read.parquet(path)
-
-
-def list_partitions(path: str) -> list[str]:
-    return sorted(
-        e.split("=", 1)[1]
-        for e in os.listdir(path)
-        if e.startswith("dt=") and os.path.isdir(os.path.join(path, e))
-    )
-
-
-def compact_parquet_dir(
-    spark: SparkSession,
-    in_path: str,
-    out_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Rewrite a parquet directory into ~target-sized files and return
-    the file count written.
-
-    The small-file problem is the dominant operational failure of
-    long-running ingest at scale: a streaming sink or hourly batch
-    leaves thousands of KB-sized files per partition, and scan
-    planning/task scheduling start to cost more than the I/O. This is
-    the maintenance pass a table service runs: size the output file
-    count from the actual input bytes (not a guessed constant), write
-    once, swap directories atomically at the orchestration layer.
-    Coalesce (no shuffle) when shrinking the file count — the rewrite
-    is then a pure read-concat-write per output file.
-    """
-    import math
-
-    fs_path = spark._jvm.org.apache.hadoop.fs.Path(in_path)  # noqa: SLF001
-    fs = fs_path.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-    total_bytes = fs.getContentSummary(fs_path).getLength()
-    n_files = max(1, math.ceil(total_bytes / target_file_bytes))
-    df = spark.read.parquet(in_path)
-    df.coalesce(n_files).write.mode("overwrite").parquet(out_path)
-    return n_files
-
-
-def retention_prune(path: str, cutoff_dt: str) -> list[str]:
-    """Drop `dt=` partitions strictly older than ``cutoff_dt``
-    (YYYY-MM-DD); returns the partition dates removed.
-
-    The other half of warehouse maintenance next to compaction:
-    time-series retention on a dt-partitioned layout is a pure
-    directory operation — no scan, no rewrite, no transaction on the
-    surviving data — which is exactly why the events table is laid out
-    by day (SURVEY.md §4.3). At 100 TB dropping a day is one recursive
-    delete per expired directory; on object storage the same loop is a
-    prefix delete. Lexicographic comparison is correct because the
-    partition value is zero-padded ISO dates.
-    """
-    import shutil
-
-    removed = [d for d in list_partitions(path) if d < cutoff_dt]
-    for d in removed:
-        shutil.rmtree(os.path.join(path, f"dt={d}"))
-    return removed

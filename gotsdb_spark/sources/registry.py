@@ -7,7 +7,17 @@ buys predicate pushdown, column pruning, min/max skipping and compression
 for free — none of which the reference has.
 
 `load_table` is the one choke point for scans so scan-level tuning
-(schema pinning, partition discovery) happens in exactly one place.
+happens in exactly one place. Every fixture and derived-copy read goes
+through `read_parquet`, which memoises the schema Spark infers for a
+path and passes it to later reads as ``spark.read.schema(s)``. A read
+without a schema starts a Spark job that merges Parquet footers; a read
+with one starts none. The memo is keyed by the file's identity (path,
+inode, size, mtime; a directory copy by its ``_SUCCESS`` marker) and by
+the confs that change inference, so a rewritten file or a flipped conf
+is inferred again. The memoised schema is Spark's own inference, not a
+conversion of the footer, so it cannot disagree with Spark on NANOS,
+INT96, decimals or NTZ. Nothing is inferred ahead of time: each table
+pays one inference per process, on its first read.
 """
 
 from __future__ import annotations
@@ -18,6 +28,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -47,6 +58,47 @@ def events_partitioned_path(sf_dir: str) -> str:
     return os.path.join(
         WAREHOUSE_DIR, os.path.basename(os.path.normpath(sf_dir)), "events_dt"
     )
+
+
+# Confs whose value changes the schema Spark infers from a Parquet file.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# Inferred schemas by `_schema_key`.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple:
+    """What the schema Spark infers for ``path`` depends on: the file's
+    (path, inode, size, mtime), a directory's by its ``_SUCCESS``
+    marker, and the inference confs. Raises OSError if there is no
+    file or marker to stat."""
+    marker = os.path.join(path, "_SUCCESS") if os.path.isdir(path) else path
+    st = os.stat(marker)
+    confs = tuple(spark.conf.get(c) for c in _INFERENCE_CONFS)
+    return (os.path.abspath(path), st.st_ino, st.st_size, st.st_mtime_ns, confs)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema memoised: the first
+    read of a file (or of a directory with a ``_SUCCESS`` marker) infers
+    it, later reads pass it and start no Spark job. A path with nothing
+    to key on is read with inference every time."""
+    try:
+        key = _schema_key(spark, path)
+    except OSError:
+        return spark.read.parquet(path)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 # Partitioned copies whose ts schema this process has already verified.
@@ -107,7 +159,7 @@ def _pin_time_confs(spark: SparkSession) -> None:
 
 def _load_events_single_file(spark: SparkSession, sf_dir: str) -> DataFrame:
     _pin_time_confs(spark)
-    return _normalize_ts(spark.read.parquet(os.path.join(sf_dir, "events.parquet")))
+    return _normalize_ts(read_parquet(spark, os.path.join(sf_dir, "events.parquet")))
 
 
 def _ensure_events_partitioned(spark: SparkSession, sf_dir: str) -> str | None:
@@ -122,7 +174,7 @@ def _ensure_events_partitioned(spark: SparkSession, sf_dir: str) -> str | None:
         if path in _VALIDATED_PARTITIONED:
             return path
         try:
-            if dict(spark.read.parquet(path).dtypes).get("ts") == "timestamp":
+            if dict(read_parquet(spark, path).dtypes).get("ts") == "timestamp":
                 # Schema probe runs once per process per path; within a
                 # process the copy can't regress, so memoize.
                 _VALIDATED_PARTITIONED.add(path)
@@ -183,9 +235,9 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     if name == "events":
         part = _ensure_events_partitioned(spark, sf_dir)
         if part is not None:
-            return _normalize_ts(spark.read.parquet(part).drop("dt"))
+            return _normalize_ts(read_parquet(spark, part).drop("dt"))
         return _load_events_single_file(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def load_events_range(
@@ -200,7 +252,7 @@ def load_events_range(
     part = _ensure_events_partitioned(spark, sf_dir)
     lo_c, hi_c = F.lit(lo).cast("timestamp"), F.lit(hi).cast("timestamp")
     if part is not None:
-        df = _normalize_ts(spark.read.parquet(part))
+        df = _normalize_ts(read_parquet(spark, part))
         return (
             df.where(
                 (F.col("dt") >= F.date_format(lo_c, "yyyy-MM-dd"))
@@ -236,7 +288,7 @@ def ensure_lineitem_range_partitioned(spark: SparkSession, sf_dir: str) -> str |
     try:
         tmp = path + ".tmp"
         (
-            spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+            load_table(spark, "lineitem", sf_dir)
             .repartitionByRange(8, "l_shipdate")
             .write.mode("overwrite")
             .parquet(tmp)

@@ -40,7 +40,8 @@ Spark-native design (SURVEY.md §1.3) — not a translation:
 - `compact()` is the explicit log rewrite: one row per key. A log of at
   most ``materialize_threshold`` rows is folded on the driver by the
   same rule as promotion and written as one key-sorted file of small
-  row groups; a larger log is compacted by a Spark job. Both swap the
+  row groups; a larger log is compacted by a Spark job into key-sorted
+  files of small row groups. Both swap the
   new log in through the crash-safe protocol of `_recover`.
 
 Deliberately NOT replicated (reference bugs/gaps, SURVEY.md §1.1):
@@ -98,6 +99,10 @@ _SEGMENT_ENCODING = {
 # large collection decodes at most one group of this many rows per
 # segment. Smaller groups make that read cheaper and the file larger.
 _SEGMENT_ROW_GROUP_ROWS = 4096
+# Row-group size in bytes of a file of a Spark compaction. Its rows are
+# sorted by key too, so a point read decodes at most one group of about
+# this size per file instead of Spark's default 128 MiB group.
+_COMPACT_ROW_GROUP_BYTES = 1 << 20
 
 # Collection ids: alphanumeric, per the cold-listing regex (cold.go:72) —
 # but anchored, unlike the reference's buggy unanchored pattern.
@@ -604,7 +609,8 @@ class Engine:
         promotion's rule (`_fold_log`) and written with pyarrow as one
         key-sorted file of ``_SEGMENT_ROW_GROUP_ROWS``-row groups, with
         no Spark job; a larger log is compacted by a Spark write of
-        `_compacted`. Both write ``<id>.compact.tmp`` and swap it in
+        `_compacted`, sorted by key within each file and written in
+        ``_COMPACT_ROW_GROUP_BYTES`` row groups. Both write ``<id>.compact.tmp`` and swap it in
         crash-safely: tmp is only promoted once its _SUCCESS marker
         exists, and the displaced original survives as ``.old`` until
         the swap completes, so `_recover` can finish or roll back any
@@ -626,7 +632,12 @@ class Engine:
                 open(os.path.join(tmp, "_SUCCESS"), "wb").close()
             else:
                 df = self._compacted(self.spark.read.schema(LOG_SCHEMA).parquet(path))
-                df.write.mode("overwrite").parquet(tmp)
+                (
+                    df.sortWithinPartitions("key")
+                    .write.mode("overwrite")
+                    .option("parquet.block.size", _COMPACT_ROW_GROUP_BYTES)
+                    .parquet(tmp)
+                )
             os.rename(path, bak)
             os.rename(tmp, path)
             shutil.rmtree(bak)

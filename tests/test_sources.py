@@ -1,17 +1,14 @@
-"""Source/sink tests: CSV/JSON round-trips and the partitioned event
-layout with partition pruning."""
+"""Source/sink tests: CSV/JSON round-trips, the warehouse copies, the
+memoised Parquet schemas and split-size parsing."""
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
 
-from gotsdb_spark.plans import formatted_plan
-from gotsdb_spark.sources.formats import (
-    list_partitions,
-    read_any,
-    read_events_partitioned,
-    write_any,
-    write_events_partitioned,
-)
+from gotsdb_spark.sources import registry
+from gotsdb_spark.sources.formats import read_any, write_any
 from gotsdb_spark.sources.registry import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -36,30 +33,6 @@ def test_json_round_trip(spark, tmp_path):
     assert {tuple(r) for r in back.collect()} == {tuple(r) for r in region.collect()}
 
 
-def test_partitioned_layout_and_pruning(spark, tmp_path):
-    out = write_events_partitioned(spark, SF, str(tmp_path / "events_part"))
-    days = list_partitions(out)
-    assert len(days) >= 28  # ~a month of event days
-
-    part = read_events_partitioned(spark, out)
-    one_day = part.where(F.col("dt") == days[0])
-    # the dt predicate must become a partition filter (planning-time
-    # pruning), not a data filter after a full scan
-    plan = formatted_plan(one_day)
-    assert "PartitionFilters" in plan and "dt" in plan.split("PartitionFilters", 1)[1][:200]
-    # and the counts must agree with the unpartitioned source
-    ev = load_table(spark, "events", SF)
-    want = ev.where(F.date_format("ts", "yyyy-MM-dd") == days[0]).count()
-    assert one_day.count() == want
-
-
-def test_partitioned_total_preserved(spark, tmp_path):
-    out = write_events_partitioned(spark, SF, str(tmp_path / "events_part2"))
-    assert read_events_partitioned(spark, out).count() == load_table(
-        spark, "events", SF
-    ).count()
-
-
 def test_events_fallback_without_warehouse(spark, tmp_path, monkeypatch):
     """If the warehouse copy can't be built (e.g. read-only filesystem),
     events must still load from the raw single file with identical
@@ -72,67 +45,6 @@ def test_events_fallback_without_warehouse(spark, tmp_path, monkeypatch):
     df = registry.load_table(spark, "events", "/root/testdata/sf0.001")
     assert dict(df.dtypes)["ts"] == "timestamp"
     assert df.count() == 1000
-
-
-def test_write_training_shards_idempotent_layout(spark, tmp_path):
-    """The curated export is deterministic: rerun produces identical
-    per-(split, shard) membership, directories exist for every written
-    split, and gated-out docs never appear."""
-    from gotsdb_spark.operators.pipeline_ops import write_training_shards
-
-    out = str(tmp_path / "shards")
-    write_training_shards(spark, SF, out, n_shards=4)
-    first = {
-        (r["split"], r["shard"]): r["n"]
-        for r in spark.read.parquet(out)
-        .groupBy("split", "shard")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert first and all(n > 0 for n in first.values())
-    # partition directories are the (split, shard) layout
-    import os as _os
-
-    splits = {d for d in _os.listdir(out) if d.startswith("split=")}
-    assert splits <= {"split=train", "split=val", "split=test"} and splits
-
-    write_training_shards(spark, SF, out, n_shards=4)
-    second = {
-        (r["split"], r["shard"]): r["n"]
-        for r in spark.read.parquet(out)
-        .groupBy("split", "shard")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert first == second
-
-
-def test_compact_parquet_dir_merges_small_files(spark, tmp_path):
-    """64 tiny files compact to the computed file count with no row or
-    value loss."""
-    import glob
-
-    from gotsdb_spark.sources.formats import compact_parquet_dir
-    from gotsdb_spark.sources.registry import load_table
-
-    src = str(tmp_path / "small")
-    out = str(tmp_path / "compacted")
-    orders = load_table(spark, "orders", SF)
-    orders.repartition(64).write.parquet(src)
-    assert len(glob.glob(src + "/part-*.parquet")) == 64
-
-    n = compact_parquet_dir(spark, src, out, target_file_bytes=1 << 30)
-    assert n == 1
-    assert len(glob.glob(out + "/part-*.parquet")) == 1
-    want = orders.agg(
-        F.count("*").alias("n"), F.sum("o_totalprice").alias("s")
-    ).collect()[0]
-    got = (
-        spark.read.parquet(out)
-        .agg(F.count("*").alias("n"), F.sum("o_totalprice").alias("s"))
-        .collect()[0]
-    )
-    assert (got["n"], round(got["s"], 4)) == (want["n"], round(want["s"], 4))
 
 
 def test_observe_metrics_match_recompute(spark):
@@ -165,27 +77,6 @@ def test_observe_metrics_match_recompute(spark):
     )
     assert obs.get["n_rows"] == n_via_action == expected["n_rows"]
     assert obs.get["sum_cents"] == expected["sum_cents"]
-
-
-def test_retention_prune_drops_only_expired_days(spark, tmp_path):
-    """Retention removes exactly the partitions before the cutoff; the
-    surviving data is untouched (same rows as a ts-filter on the raw
-    table) and re-running is a no-op."""
-    from gotsdb_spark.sources.formats import retention_prune
-
-    out = write_events_partitioned(spark, SF, str(tmp_path / "events_ret"))
-    days = list_partitions(out)
-    cutoff = days[len(days) // 2]
-
-    removed = retention_prune(out, cutoff)
-    assert removed == [d for d in days if d < cutoff]
-    assert list_partitions(out) == [d for d in days if d >= cutoff]
-
-    ev = load_table(spark, "events", SF)
-    want = ev.where(F.date_format("ts", "yyyy-MM-dd") >= cutoff).count()
-    assert read_events_partitioned(spark, out).count() == want
-
-    assert retention_prune(out, cutoff) == []  # idempotent
 
 
 def test_corrupt_warehouse_copy_is_rebuilt(spark, tmp_path, monkeypatch):
@@ -276,3 +167,76 @@ def test_fan_out_reads_suffixed_split_size(spark, tmp_path, max_bytes):
         assert fan_out(df, n=8) is not df
     finally:
         spark.conf.set(key, prev)
+
+
+SCALES = tuple(os.path.join(os.path.dirname(SF), s) for s in ("sf0.001", "sf0.01", "sf0.1"))
+
+
+def _job_ids(spark):
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup())
+
+
+@pytest.mark.parametrize("sf", SCALES)
+def test_memoised_schema_equals_inferred_schema(spark, sf):
+    """For every fixture table and both warehouse copies, the memoised
+    schema, and the schema of a read that passes it, equal the schema
+    Spark infers."""
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    paths = [os.path.join(sf, f"{t}.parquet") for t in registry.TABLES]
+    paths += [
+        registry._ensure_events_partitioned(spark, sf),
+        registry.ensure_lineitem_range_partitioned(spark, sf),
+    ]
+    assert None not in paths
+    for path in paths:
+        registry.read_parquet(spark, path)
+        inferred = spark.read.parquet(path).schema
+        assert registry._SCHEMAS[registry._schema_key(spark, path)] == inferred, path
+        assert registry.read_parquet(spark, path).schema == inferred, path
+
+
+@pytest.mark.parametrize("name", registry.TABLES)
+def test_second_load_table_starts_no_spark_job(spark, name):
+    first = load_table(spark, name, SCALES[0])
+    before = _job_ids(spark)
+    again = load_table(spark, name, SCALES[0])
+    assert again.schema == first.schema
+    assert _job_ids(spark) == before
+
+
+def test_rewritten_file_is_inferred_again(spark, tmp_path):
+    """A file, or a directory copy with its _SUCCESS marker, rewritten at
+    the same path with another schema is not read with the old one."""
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert registry.read_parquet(spark, path).columns == ["a"]
+    pq.write_table(pa.table({"b": ["x"], "c": [1.5]}), path)
+    df = registry.read_parquet(spark, path)
+    assert df.schema == spark.read.parquet(path).schema
+    assert [r["b"] for r in df.collect()] == ["x"]
+
+    copy = str(tmp_path / "copy")
+    spark.range(3).write.parquet(copy)
+    assert registry.read_parquet(spark, copy).columns == ["id"]
+    spark.range(3).selectExpr("id AS x", "'y' AS y").write.mode("overwrite").parquet(copy)
+    assert registry.read_parquet(spark, copy).columns == ["x", "y"]
+
+
+def test_flipping_nanos_as_long_does_not_reuse_the_stale_schema(spark, tmp_path):
+    """Under nanosAsLong a TIMESTAMP(NANOS) column is a bigint; without it
+    Spark cannot infer the column at all. The bigint schema memoised
+    under the flag would read the file silently, so the read without the
+    flag must infer again and fail."""
+    path = str(tmp_path / "nanos.parquet")
+    ns = pa.array([1_700_000_000_123_456_789], pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ns}), path, version="2.6")
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    assert spark.conf.get(key) == "true"
+    assert registry.read_parquet(spark, path).dtypes == [("ts", "bigint")]
+    try:
+        spark.conf.set(key, "false")
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+            registry.read_parquet(spark, path)
+    finally:
+        spark.conf.set(key, "true")
+    assert registry.read_parquet(spark, path).collect()[0]["ts"] == 1_700_000_000_123_456_789

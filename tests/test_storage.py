@@ -781,3 +781,49 @@ def test_snapshot_of_driver_held_collection_matches_reads(spark, tmp_path):
         assert {r["key"]: r["value"] for r in e2.snapshot("c").collect()} == view
         e2.compact("c")
     assert spark.read.parquet(os.path.join(data, "c")).count() == 4
+
+
+def test_spark_compaction_writes_key_sorted_row_groups_a_probe_prunes(spark, tmp_path, monkeypatch):
+    """A log compacted by Spark (above the threshold) is written sorted by
+    key in small row groups: each file's groups cover ascending, disjoint
+    key ranges, and a point read decodes one group per file."""
+    import pyarrow.parquet as pq
+
+    from gotsdb_spark.storage import engine as engine_mod
+
+    n = 60_000
+    data = tmp_path / "data"
+    e = Engine(spark, str(data))
+    for gen in range(2):
+        for i in range(gen, n, gen + 1):
+            j = (i * 7919) % n  # scrambled key order
+            e.write_key("c", f"k{j:06d}", f"v{gen}-{j:06d}-{j * 2654435761 % 2**32:08x}")
+        e.flush_collection("c")
+    big = Engine(spark, str(data), materialize_threshold=1)
+    big.compact("c")
+
+    names = _segments(data / "c")[0]
+    n_groups = 0
+    for name in names:
+        meta = pq.read_metadata(data / "c" / name)
+        j = meta.schema.names.index("key")
+        ranges = [
+            (meta.row_group(i).column(j).statistics.min, meta.row_group(i).column(j).statistics.max)
+            for i in range(meta.num_row_groups)
+        ]
+        assert all(lo <= hi for lo, hi in ranges)
+        assert all(hi < lo for (_, hi), (lo, _) in zip(ranges, ranges[1:]))
+        n_groups += meta.num_row_groups
+    assert n_groups > len(names)  # more groups than files: there is something to prune
+
+    read = []
+    real = engine_mod._read_log
+    monkeypatch.setattr(
+        engine_mod, "_read_log", lambda p, m, groups=None: read.append(groups) or real(p, m, groups)
+    )
+    probe = Engine(spark, str(data), materialize_threshold=1)
+    probe.load_collection("c")
+    key = 7919  # i = 1: rewritten by the second flush
+    assert probe.read_key("c", f"k{key:06d}") == f"v1-{key:06d}-{key * 2654435761 % 2**32:08x}"
+    assert read and all(len(groups) == 1 for groups in read)
+    assert len(read) <= len(names)

@@ -107,6 +107,40 @@ def test_foreach_batch_kv_sink_feeds_engine(spark, tmp_path, replay_dir):
     assert engine.snapshot("evlog").count() == ev.count()
 
 
+def test_stream_stream_interval_join_matches_batch_on_small_replay(spark, tmp_path):
+    """The interval join over a three-file replay, one file per
+    micro-batch, matches its batch result."""
+    from gotsdb_spark.streaming.ingest import join_purchases_with_recent_errors
+
+    path = str(tmp_path / "small_replay")
+    load_table(spark, "events", SF).orderBy(F.hash("event_id")).repartition(3).write.parquet(path)
+
+    def split(df):
+        return (
+            df.where(F.col("event_type") == "purchase"),
+            df.where(F.col("event_type") == "error"),
+        )
+
+    sp, se = split(read_events_stream(spark, path, max_files_per_trigger=1))
+    joined = join_purchases_with_recent_errors(sp, se, "720 hours")
+    q = run_stream_to_memory(joined.select("p_id", "e_id"), "ss_join_small")
+    try:
+        got = {(r["p_id"], r["e_id"]) for r in spark.sql("SELECT * FROM ss_join_small").collect()}
+        batches = [p["batchId"] for p in q.recentProgress if p["numInputRows"] > 0]
+    finally:
+        q.stop()
+
+    bp, be = split(spark.read.parquet(path))
+    want = {
+        (r["p_id"], r["e_id"])
+        for r in join_purchases_with_recent_errors(bp, be, "720 hours")
+        .select("p_id", "e_id")
+        .collect()
+    }
+    assert len(batches) == 3
+    assert got == want and len(want) > 0
+
+
 @pytest.mark.slow
 def test_stream_stream_interval_join_matches_batch(spark, replay_dir):
     from gotsdb_spark.streaming.ingest import join_purchases_with_recent_errors
