@@ -25,7 +25,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from gotsdb_spark.operators import QUERIES  # noqa: E402
-from gotsdb_spark.session import get_spark  # noqa: E402
+from gotsdb_spark.session import get_spark, release_blocks  # noqa: E402
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -342,33 +342,6 @@ def main() -> None:
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
 
-    def _release_blocks() -> None:
-        """Free cached/localCheckpoint blocks between timed runs.
-
-        The same hygiene tools/check_oracles.py and tools/sweep_sf1.py
-        apply between queries ("long single-JVM sweeps must release
-        localCheckpoint blocks or the driver OOMs"): a ~380-query bench
-        session otherwise pins every query's checkpoint RDDs in the
-        unified memory region, and the growing storage footprint
-        steals execution memory from LATER queries — the r13
-        optimization round measured dedup/rank queries up to 2x slower
-        late in the un-released session than solo. Runs OUTSIDE the
-        timed window; each timed run still computes its own plan from
-        the parquet inputs (checkpoint blocks are per-DataFrame, never
-        reused across runs).
-        """
-        try:
-            spark.catalog.clearCache()
-            for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                # blocking=True: RDD.unpersist defaults to async since
-                # Spark 3.0, and async block removal was observed
-                # bleeding INTO the next timed window (queries right
-                # after checkpoint-heavy ones measured up to 2x slower
-                # while the block manager churned through removals).
-                jrdd.unpersist(True)
-        except Exception:  # noqa: BLE001 — hygiene must never fail a bench
-            pass
-
     def _time_query(name: str, runs: int) -> float:
         best = float("inf")
         for _ in range(runs):
@@ -383,7 +356,7 @@ def main() -> None:
         # up as rotating ±0.5-3 s noise on unrelated queries; after-the-
         # query placement bounds session accumulation identically while
         # keeping the min-of-N windows clean.
-        _release_blocks()
+        release_blocks(spark)
         return round(best, 3)
 
     def _run_list(names: list[str], runs: int, out: dict[str, float]) -> None:

@@ -420,73 +420,34 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The end-step of a real dedup pipeline: pairs alone don't dedupe —
     transitive groups do (A≈B, B≈C ⇒ {A,B,C} is one cluster even if
-    A,C never paired). Components are found by min-label propagation:
-    every member starts as its own label; each iteration takes the min
-    of its neighbors' labels; fixpoint = every member labeled with the
-    cluster's smallest doc_id (the canonical). The DuckDB oracle is a
-    recursive transitive closure — a genuinely different algorithm
-    arriving at the same fixpoint, which is the strongest kind of
-    cross-check.
+    A,C never paired). Components come from star contraction
+    (graph.star_contraction_edges), whose fixpoint points every
+    non-canonical member u at its cluster's smallest doc_id v: each
+    member is one (u, v, false) row and each distinct root one
+    (v, v, true) row. The DuckDB oracle is a recursive transitive
+    closure, a different algorithm arriving at the same fixpoint.
 
-    Scale: iterations = component diameter (near-dup clusters are
-    shallow — typically 2-4 hops); each iteration is one equi-join +
-    min-aggregation shuffle over the EDGE set (tiny vs the corpus), and
-    localCheckpoint truncates the growing lineage. This is the standard
-    large-graph CC pattern on Spark without GraphX.
+    Scale: star contraction needs O(log n) rounds whatever the
+    cluster diameter, so a long near-dup chain (crawl rings, mirrored
+    page series) costs a few rounds, not one per hop, and the loop
+    fails loudly if its id-width round bound runs out. Each round is a
+    few groupBy-min and equi-join shuffles over the pair set, which is
+    tiny next to the corpus.
     """
+    from gotsdb_spark.operators.graph import star_contraction_edges
+
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
-        pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
-        .toDF("src", "dst")
-        .cache()
-    )
-    labels = (
-        edges.select(F.col("src").alias("doc"))
-        .distinct()
-        .withColumn("label", F.col("doc"))
-        .localCheckpoint()
-    )
-    prev_sig = None
-    for _ in range(25):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.doc)
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.doc == F.col("src"), "left")
-            .select(
-                "doc",
-                F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias(
-                    "label"
-                ),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # Convergence via a one-aggregate EXACT signature (r14, was a
-        # count + xxhash64-sum whose collision could stop a round
-        # early): the node set is fixed and every per-node label is
-        # monotone non-increasing (F.least above), so sum(label)
-        # strictly decreases whenever ANY label changes — an unchanged
-        # (count, sum) pair is therefore exactly an unchanged frame, no
-        # 2^-64 caveat. Still one driver action per round (the old
-        # join-new-vs-old + diff-count was two), and the signature
-        # collect doubles as the checkpoint materializer.
-        sig = tuple(
-            new_labels.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("label").cast("decimal(38,0)")).alias("s"),
-            ).collect()[0]
-        )
-        labels = new_labels
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    edges.unpersist()
-    return labels.select(
-        F.col("doc").alias("doc_id"),
-        F.col("label").alias("canonical_id"),
-        (F.col("label") == F.col("doc")).alias("is_canonical"),
+    members = star_contraction_edges(pairs)  # (u=member, v=canonical)
+    return members.select(
+        F.col("u").alias("doc_id"),
+        F.col("v").alias("canonical_id"),
+        F.lit(False).alias("is_canonical"),
+    ).unionByName(
+        members.select(
+            F.col("v").alias("doc_id"),
+            F.col("v").alias("canonical_id"),
+            F.lit(True).alias("is_canonical"),
+        ).distinct()
     )
 
 

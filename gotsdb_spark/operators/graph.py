@@ -3,6 +3,14 @@ clustering coefficient, BFS reachability over the trade network, and
 connected components by star contraction over the document near-dup
 pair graph.
 
+Connected components has one routine per graph shape:
+- `star_contraction_edges` for pair graphs whose size grows with the
+  data (the near-dup graph here, dedup clusters in dedup.py): O(log n)
+  rounds whatever the diameter, with a round bound from the id width;
+- `_components_per_scenario` for many dictionary-bounded graphs at
+  once (the deletion scenarios of articulation points and bridges):
+  broadcast min-label rounds, at most 26 over the 25 nations.
+
 The graph is derived from the star schema: an edge customer-nation →
 supplier-nation for every lineitem whose order crosses them, weighted
 by trade volume (the TPC-H Q7 join shape). Nodes = the 25 nations.
@@ -27,6 +35,9 @@ join surface at all (SURVEY.md §2.2); this extends the mandated
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -385,17 +396,17 @@ def graph_components_star_contraction(spark: SparkSession, sf_dir: str) -> DataF
     contraction (Kiveris et al., "Connected Components in MapReduce and
     Beyond") over the MinHash near-dup pair graph — component id + size.
 
-    dedup_cluster_canonical finds the same components by min-label
-    propagation, which needs O(component diameter) rounds; on a
+    Min-label propagation needs O(component diameter) rounds; on a
     100 TB-scale graph with a long-chain component (crawl rings,
     citation chains) that is the difference between 5 rounds and 500.
     Star contraction converges in O(log n) rounds REGARDLESS of
     diameter: large-star hangs every higher-numbered neighbor off the
     local minimum, small-star flattens the resulting trees, and the
-    fixpoint is the canonical star (every node → component min). Both
-    operators sharing one oracle family means the two algorithms
-    cross-check each other AND DuckDB's recursive closure — three
-    independent routes to the same fixpoint.
+    fixpoint is the canonical star (every node → component min).
+    dedup_cluster_canonical and dedup_savings_by_cluster_size run the
+    same routine (`star_contraction_edges`); the independent checks
+    are DuckDB's recursive closure in the oracle and the Python
+    union-find in tests/test_graph.py.
 
     Scale: each half-round is one groupBy-min plus one equi-join on the
     CURRENT edge set (which only shrinks toward one edge per node —
@@ -2408,7 +2419,82 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Articulation points (cut vertices) — round 12.
+# Connected components per deletion scenario (articulation points, bridges).
+# ---------------------------------------------------------------------------
+
+
+def _components_per_scenario(
+    edges: DataFrame, labels: DataFrame, keys: list[str]
+) -> DataFrame:
+    """Count the connected components of many small graphs at once.
+
+    Each scenario, named by its `keys` columns, is one graph: `edges`
+    holds its directed edges (keys..., a, b) with both directions
+    present, `labels` its nodes (keys..., v, lbl) with lbl = v. One
+    data-parallel min-label propagation runs every scenario to its
+    fixpoint, where each node carries its component's smallest id;
+    the result is (keys..., n_comp).
+
+    Dictionary bound: the callers' scenarios come from the nation
+    backbone, at most 31 scenarios (<= 30 backbone edges + the
+    baseline) x 25 nations, so `labels` and each round's candidate
+    frame hold <= 775 rows whatever the data scale. That bound is what
+    makes the two per-round broadcasts safe ("dim" in
+    tests/test_broadcast_guard.py). The hints are needed because
+    localCheckpoint frames carry no size statistics: without them the
+    planner sort-merge-joins both sides, 4 Exchanges and 4 Sorts per
+    round instead of the one aggregate Exchange.
+
+    Convergence: the key set is fixed and each lbl only decreases
+    (F.least), so sum(lbl) strictly drops whenever any label changes
+    and an unchanged (count, sum(lbl)) is exactly an unchanged frame.
+    That is one driver action per round, which also materialises the
+    round's checkpoint. Labels settle within a component's diameter,
+    at most 24 hops over 25 nations, so 26 rounds include the
+    confirming one; running out raises rather than return wrong counts.
+    """
+    prev_sig = None
+    for _ in range(_N_NATIONS + 1):
+        on = [labels[k] == edges[k] for k in keys] + [labels.v == edges.a]
+        cand = (
+            F.broadcast(labels)
+            .join(edges, reduce(operator.and_, on))
+            .groupBy(*[labels[k] for k in keys], F.col("b").alias("v"))
+            .agg(F.min("lbl").alias("nlbl"))
+        )
+        labels = (
+            labels.join(F.broadcast(cand), [*keys, "v"], "left")
+            .select(
+                *keys,
+                "v",
+                F.least(
+                    F.col("lbl"), F.coalesce("nlbl", F.col("lbl"))
+                ).alias("lbl"),
+            )
+            .localCheckpoint(eager=False)
+        )
+        sig = tuple(
+            labels.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s"),
+            ).collect()[0]
+        )
+        if sig == prev_sig:
+            break
+        prev_sig = sig
+    else:
+        raise RuntimeError(
+            f"per-scenario label propagation did not reach a fixpoint "
+            f"within {_N_NATIONS + 1} rounds: the label frame is still "
+            "changing, so component counts would be wrong"
+        )
+    return labels.groupBy(*keys).agg(
+        F.countDistinct("lbl").cast("long").alias("n_comp")
+    ).localCheckpoint(eager=False)
+
+
+# ---------------------------------------------------------------------------
+# Articulation points (cut vertices).
 # ---------------------------------------------------------------------------
 
 ARTICULATION_ORACLE = f"""
@@ -2464,13 +2550,10 @@ def graph_articulation_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     dictionary (<= 25 nodes forever, the betweenness-family bound), so
     all |V|+1 vertex-deletion scenarios — each backbone node, plus the
     sentinel x = -1 for the unmodified baseline — run as ONE
-    data-parallel min-label-propagation fixpoint over an
-    (excl, node, label) frame of <= 26 x 25 rows, edges replicated per
-    scenario with both endpoints != excl. Convergence is
-    signature-checked per round (count + label-hash sum, the
-    star-contraction convention) with a loud failure if the
-    |V|-round bound is exhausted — never a silently-unconverged
-    component count.
+    data-parallel min-label-propagation fixpoint
+    (`_components_per_scenario`) over an (excl, node, label) frame of
+    <= 26 x 25 rows, edges replicated per scenario with both endpoints
+    != excl.
 
     Determinism: labels are integer minima over integer node ids;
     component counts are exact; the boolean compares two exact
@@ -2510,59 +2593,7 @@ def graph_articulation_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("x", "v", F.col("v").alias("lbl"))
         .localCheckpoint(eager=False)
     )
-    prev_sig = None
-    for _ in range(26):  # diameter bound: <= |V| rounds for 25 nations
-        # Dictionary-bounded frames (<= 26 scenarios x 25 nodes) come
-        # out of localCheckpoint WITHOUT size stats, so the planner
-        # sort-merge-joined them (4 Exchanges + Sorts per round);
-        # explicit broadcasts restore the map-side shape — one
-        # Exchange per round (guide §3.1). Sites classified "dim" in
-        # tests/test_broadcast_guard.py; see graph_bridges for the
-        # same fix with the measured plan diff.
-        cand = (
-            F.broadcast(labels)
-            .join(
-                edx,
-                (labels.x == edx.x) & (labels.v == edx.a),
-            )
-            .groupBy(labels.x, F.col("b").alias("v"))
-            .agg(F.min("lbl").alias("nlbl"))
-        )
-        labels = (
-            labels.join(F.broadcast(cand), ["x", "v"], "left")
-            .select(
-                "x",
-                "v",
-                F.least(
-                    F.col("lbl"), F.coalesce("nlbl", F.col("lbl"))
-                ).alias("lbl"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # Exact convergence signature (r14): the (x, v) key set is
-        # fixed and each lbl is monotone non-increasing (F.least), so
-        # sum(lbl) strictly decreases whenever any label changes — an
-        # unchanged (count, sum) IS an unchanged frame, with no
-        # hash-collision caveat.
-        sig = tuple(
-            labels.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s"),
-            ).collect()[0]
-        )
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    else:
-        raise RuntimeError(
-            "articulation-point label propagation did not reach a "
-            "fixpoint within 26 rounds — the label frame is still "
-            "changing, so component counts would be wrong; raise the "
-            "round bound"
-        )
-    cnt = labels.groupBy("x").agg(
-        F.countDistinct("lbl").cast("long").alias("n_comp")
-    ).localCheckpoint(eager=False)
+    cnt = _components_per_scenario(edx, labels, ["x"])
     base = cnt.where(F.col("x") == -1).select(
         F.col("n_comp").alias("base_comp")
     )
@@ -2585,7 +2616,7 @@ def graph_articulation_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bridges (cut edges) — round 12.
+# Bridges (cut edges).
 # ---------------------------------------------------------------------------
 
 BRIDGES_ORACLE = f"""
@@ -2646,13 +2677,10 @@ def graph_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 300-pair dictionary), so all |E|+1 edge-deletion scenarios —
     each backbone edge, plus the sentinel (xa, xb) = (-1, -1) for the
     unmodified baseline — run as ONE data-parallel
-    min-label-propagation fixpoint over a (xa, xb, node, label) frame
-    of <= 31 x 25 rows, directed edges replicated per scenario with
-    the excluded undirected pair dropped in both directions.
-    Convergence is signature-checked per round (count + label-hash
-    sum, the star-contraction convention) with a loud failure if the
-    |V|-round bound is exhausted — never a silently-unconverged
-    component count.
+    min-label-propagation fixpoint (`_components_per_scenario`) over a
+    (xa, xb, node, label) frame of <= 31 x 25 rows, directed edges
+    replicated per scenario with the excluded undirected pair dropped
+    in both directions.
 
     Determinism: labels are integer minima over integer node ids;
     component counts are exact; the boolean compares two exact
@@ -2701,64 +2729,7 @@ def graph_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("xa", "xb", "v", F.col("v").alias("lbl"))
         .localCheckpoint(eager=False)
     )
-    prev_sig = None
-    for _ in range(26):  # diameter bound: <= |V| rounds for 25 nations
-        # Both frames in the round are dictionary-bounded by
-        # construction (<= 31 scenarios x <= 25 nodes / <= 600 directed
-        # edges — the nation-pair backbone), but they come out of
-        # localCheckpoint as ExistingRDDs with NO size statistics, so
-        # the planner conservatively sort-merge-joined them: 2 SMJs,
-        # 4 Exchanges and 4 Sorts per round over <= 18k rows (plan
-        # excerpt in plans/r14/graph_bridges_before.txt). Explicit
-        # broadcasts of the label frame (775 rows) restore the
-        # map-side join shape — one Exchange per round (the min-label
-        # partial->final aggregate), guide §3.1/§2.4. Broadcast sites
-        # classified "dim" in tests/test_broadcast_guard.py.
-        cand = (
-            F.broadcast(labels)
-            .join(
-                edx,
-                (labels.xa == edx.xa)
-                & (labels.xb == edx.xb)
-                & (labels.v == edx.a),
-            )
-            .groupBy(labels.xa, labels.xb, F.col("b").alias("v"))
-            .agg(F.min("lbl").alias("nlbl"))
-        )
-        labels = (
-            labels.join(F.broadcast(cand), ["xa", "xb", "v"], "left")
-            .select(
-                "xa",
-                "xb",
-                "v",
-                F.least(
-                    F.col("lbl"), F.coalesce("nlbl", F.col("lbl"))
-                ).alias("lbl"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # Exact convergence signature (r14): fixed (xa, xb, v) key set
-        # + monotone non-increasing lbl (F.least) ⇒ an unchanged
-        # (count, sum(lbl)) is exactly an unchanged frame — no
-        # hash-collision caveat (was count + xxhash64-sum).
-        sig = tuple(
-            labels.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s"),
-            ).collect()[0]
-        )
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    else:
-        raise RuntimeError(
-            "bridge label propagation did not reach a fixpoint within "
-            "26 rounds — the label frame is still changing, so "
-            "component counts would be wrong; raise the round bound"
-        )
-    cnt = labels.groupBy("xa", "xb").agg(
-        F.countDistinct("lbl").cast("long").alias("n_comp")
-    ).localCheckpoint(eager=False)
+    cnt = _components_per_scenario(edx, labels, ["xa", "xb"])
     base = cnt.where(F.col("xa") == -1).select(
         F.col("n_comp").alias("base_comp")
     )

@@ -9,8 +9,7 @@ design rule is that every stored measure must be MERGEABLE: store
 be un-mergeable and silently wrong at the next level up.
 
 At 100 TB: the hourly rollup is the only scan of raw data; daily reads
-hours (24× smaller), monthly reads days. Each level is an incremental,
-partition-pruned job (dt-partitioned layout in sources.formats).
+hours (24× smaller), monthly reads days (`hourly_rollup`, `merge_up`).
 """
 
 from __future__ import annotations
@@ -98,69 +97,6 @@ def ts_rollup_daily_via_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return daily.select(
         "day", "event_type", "n", "sum_micros", "min_value", "max_value"
     )
-
-
-def materialize_rollups(
-    spark: SparkSession, sf_dir: str, out_dir: str
-) -> dict[str, str]:
-    """Write the rollup hierarchy to Parquet (the maintenance job).
-
-    Returns {level: path}. Incremental refresh at scale re-aggregates
-    only the partitions the new data touched.
-    """
-    ev = load_table(spark, "events", sf_dir)
-    hourly = hourly_rollup(ev)
-    hourly_path = f"{out_dir}/hourly"
-    hourly.write.mode("overwrite").parquet(hourly_path)
-    daily = merge_up(spark.read.parquet(hourly_path), "hour", "day", "day")
-    daily_path = f"{out_dir}/daily"
-    daily.write.mode("overwrite").parquet(daily_path)
-    return {"hourly": hourly_path, "daily": daily_path}
-
-
-def materialize_daily_partitioned(
-    spark: SparkSession, sf_dir: str, out_path: str
-) -> str:
-    """Daily rollup stored partitioned by day (dt=YYYY-MM-DD/) — the
-    layout that makes refresh incremental."""
-    ev = load_table(spark, "events", sf_dir)
-    daily = merge_up(hourly_rollup(ev), "hour", "day", "day")
-    (
-        daily.withColumn("dt", F.date_format("day", "yyyy-MM-dd"))
-        .repartition("dt")
-        .write.mode("overwrite")
-        .partitionBy("dt")
-        .parquet(out_path)
-    )
-    return out_path
-
-
-def refresh_days(
-    spark: SparkSession, sf_dir: str, daily_path: str, days: list[str]
-) -> None:
-    """Incrementally re-aggregate ONLY the given days (dt strings).
-
-    Dynamic partition overwrite rewrites just the touched dt=
-    directories; every other day's files are untouched. This is the
-    100 TB refresh path: late data for one day costs one day's
-    re-aggregation, not a full-history rebuild.
-    """
-    ev = load_table(spark, "events", sf_dir).where(
-        F.date_format("ts", "yyyy-MM-dd").isin(days)
-    )
-    daily = merge_up(hourly_rollup(ev), "hour", "day", "day")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            daily.withColumn("dt", F.date_format("day", "yyyy-MM-dd"))
-            .repartition("dt")
-            .write.mode("overwrite")
-            .partitionBy("dt")
-            .parquet(daily_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 @query(

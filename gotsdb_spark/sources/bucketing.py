@@ -6,7 +6,8 @@ data by the join key: both tables hash-clustered into the same number
 of buckets means the join (and groupBys on the key) need NO Exchange —
 the scan itself is the shuffle, paid once at write time and amortized
 over every subsequent query. This module materializes bucketed copies
-of the fixture facts and exposes the bucket-local join.
+of the fixture facts; bucketed_join_priority_revenue (tpch_extra.py)
+joins two of them bucket-locally.
 """
 
 from __future__ import annotations
@@ -15,7 +16,7 @@ import os
 import shutil
 import threading
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from gotsdb_spark.sources.registry import load_table
 
@@ -75,21 +76,3 @@ def bucket_table(
         _MATERIALIZED.add(memo_key)
         return table_name
 
-
-def bucketed_join_lineitem_orders(
-    spark: SparkSession, sf_dir: str, n_buckets: int = 16
-) -> DataFrame:
-    """lineitem⋈orders with both sides bucketed on the order key.
-
-    With matching bucket counts Spark plans a SortMergeJoin whose
-    children are bare scans — no Exchange on either side (asserted in
-    tests/test_bucketing.py). This is the layout the KV collection logs
-    and any recurring fact⋈fact join should use at scale.
-    """
-    li = bucket_table(spark, sf_dir, "lineitem", "l_orderkey", n_buckets)
-    orders = bucket_table(spark, sf_dir, "orders", "o_orderkey", n_buckets)
-    ldf = spark.table(li)
-    odf = spark.table(orders)
-    return ldf.join(odf, ldf.l_orderkey == odf.o_orderkey).select(
-        "l_orderkey", "l_extendedprice", "o_totalprice", "o_orderdate"
-    )

@@ -189,32 +189,3 @@ def join_purchases_with_recent_errors(
         & (F.col("e_ts") <= F.col("p_ts")),
         how,
     )
-
-
-def enrich_with_dimension(events: DataFrame, dim: DataFrame) -> DataFrame:
-    """Stream-static join: every micro-batch broadcast-joins the static
-    dimension at its CURRENT contents (re-read per batch, so slowly
-    changing dims pick up updates without restarting the stream).
-
-    The most common production enrichment shape — fact stream × small
-    dim — and the cheap one: no watermark, no state store, the join is
-    a per-batch broadcast hash join.
-    """
-    from pyspark.sql import functions as F
-
-    return events.join(F.broadcast(dim), "user_id", "left")
-
-
-def run_available_now(stream_df: DataFrame, query_name: str):
-    """Drain everything currently available, then stop:
-    Trigger.availableNow — the incremental-batch pattern (a cron job
-    that processes 'whatever landed since last run' with streaming
-    exactly-once bookkeeping, then exits, instead of a 24/7 cluster).
-    """
-    return (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )

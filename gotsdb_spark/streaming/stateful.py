@@ -1,72 +1,36 @@
-"""Custom stateful streaming operator via applyInPandasWithState.
+"""Custom stateful streaming operator via transformWithStateInPandas.
 
 The reference has no streaming and no state machinery at all
 (SURVEY.md §2.2). This supplies the 'arbitrary stateful operator'
 surface: per-key state that survives across micro-batches, with
-Arrow-batched pandas on the hot path.
+Arrow-batched pandas on the hot path. The older applyInPandasWithState
+surface is exercised by the registered query streaming_stateful_totals
+(operators/integration.py).
 
 Scale: state lives in the state store, partitioned by the grouping key
 — each of 1000 executors owns its key range; nothing ever concentrates
 on the driver. Pair with a timeout (or watermark-driven eviction) when
 keys churn, or state grows without bound.
+
+transformWithStateInPandas is the Spark 4 successor to
+applyInPandasWithState: typed state variables (value/list/map) with
+per-state TTL, event-time timers, and schema evolution, all backed by
+the RocksDB state store the session enables (session.py) — which this
+API requires, and which is what lets per-key state exceed executor heap
+at 100 TB.
+
+Runtime dependency: the API's Python-side state server speaks protobuf;
+executing (not building) the query needs the google.protobuf package.
+The equivalence test importorskips it, mirroring the PIL-gated
+multimodal codec.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double"
-STATE_SCHEMA = "n_events bigint, total_value double"
-
-
-def _update_totals(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Accumulate per-user event count + value total across batches."""
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-    )
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Running per-user totals — one updated row per user per batch."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_totals,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas — the Spark 4 arbitrary-state API.
-#
-# Successor to applyInPandasWithState: typed state variables (value/
-# list/map) with per-state TTL, event-time timers, and schema evolution,
-# all backed by the RocksDB state store the session enables (session.py)
-# — which this API requires, and which is what lets per-key state exceed
-# executor heap at 100 TB. Both operators are kept: applyInPandasWithState
-# is the widely-deployed surface, transformWithState is where new
-# stateful pipelines should land.
-#
-# Runtime dependency: the API's Python-side state server speaks
-# protobuf; executing (not building) the query needs the
-# google.protobuf package. The equivalence test importorskips it,
-# mirroring the PIL-gated multimodal codec.
-# ---------------------------------------------------------------------------
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
+from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessor,
     StatefulProcessorHandle,
 )

@@ -81,13 +81,12 @@ ALLOWED: dict[tuple[str, str, str], str] = {
     ("operators/graph.py", "graph_articulation_points", "excl"): "dim",
     ("operators/graph.py", "graph_articulation_points", "base"): "scalar",
     ("operators/graph.py", "graph_articulation_points", "nation.select"): "dim",
-    # r14: per-round fixpoint frames — <= (|V|+1 scenarios) x 25 nodes,
-    # nation-dictionary bounded; checkpointed RDDs have no stats so the
-    # planner needs the hint to avoid per-round sort-merge joins.
-    ("operators/graph.py", "graph_articulation_points", "labels"): "dim",
-    ("operators/graph.py", "graph_articulation_points", "cand"): "dim",
-    ("operators/graph.py", "graph_bridges", "labels"): "dim",
-    ("operators/graph.py", "graph_bridges", "cand"): "dim",
+    # per-round fixpoint frames of articulation points and bridges —
+    # <= 31 scenarios x 25 nodes, nation-dictionary bounded;
+    # checkpointed RDDs have no stats so the planner needs the hint to
+    # avoid per-round sort-merge joins.
+    ("operators/graph.py", "_components_per_scenario", "labels"): "dim",
+    ("operators/graph.py", "_components_per_scenario", "cand"): "dim",
     ("operators/graph.py", "_nation_bfs_sigma", "ed"): "dim",
     ("operators/graph.py", "_nation_bfs_sigma", "reach.select"): "dim",
     # round 12: HL shift — $100-grid dictionary (value-domain-bounded),
@@ -279,7 +278,6 @@ ALLOWED: dict[tuple[str, str, str], str] = {
     ("operators/tpch_extra.py", "q15_top_supplier_quarter", "max_rev"): "scalar",
     ("operators/tpch_extra.py", "q22_idle_wealthy_customers", "avg_bal"): "scalar",
     ("operators/tpch_extra.py", "q11_important_nation_volume", "threshold"): "scalar",
-    ("streaming/ingest.py", "enrich_with_dimension", "dim"): "stream-dim",
 }
 
 # Frames derived row-per-row from these tables may never be force-

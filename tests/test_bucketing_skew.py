@@ -1,24 +1,12 @@
-"""Scale-technique tests: bucketed zero-shuffle joins, salted skew
-joins, and the spark.sql entry point over registered views."""
+"""Scale-technique tests: salted skew joins and the spark.sql entry
+point over registered views."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from gotsdb_spark.functions.skew import salted_join
-from gotsdb_spark.plans import formatted_plan, shuffle_count
-from gotsdb_spark.sources.bucketing import bucketed_join_lineitem_orders
-from gotsdb_spark.sources.registry import load_table, register_views
+from gotsdb_spark.sources.registry import register_views
 
 SF = "/root/testdata/sf0.001"
-
-
-@pytest.mark.slow
-def test_bucketed_join_has_no_shuffle(spark):
-    joined = bucketed_join_lineitem_orders(spark, SF)
-    assert shuffle_count(joined) == 0, formatted_plan(joined)
-    # and it still computes the right thing
-    li = load_table(spark, "lineitem", SF)
-    assert joined.count() == li.count()
 
 
 def test_salted_join_equals_plain_join(spark):

@@ -1,13 +1,16 @@
-"""star_contraction_edges against a Python union-find: the converged
-edge set must be exactly one (member, component minimum) row per
-non-root node, and the loop must stop on the round whose edge set is
-already a star."""
+"""The two connected-components routines against a Python union-find.
+
+star_contraction_edges: the converged edge set must be exactly one
+(member, component minimum) row per non-root node, and the loop must
+stop on the round whose edge set is already a star. The per-scenario
+label propagation behind articulation points and bridges must count
+the components of every deletion scenario exactly."""
 
 import random
 
 import pytest
 
-from gotsdb_spark.operators import graph
+from gotsdb_spark.operators import dedup, graph
 from gotsdb_spark.operators.graph import star_contraction_edges
 
 
@@ -104,3 +107,69 @@ def test_is_star_shapes(spark):
     assert is_star([(1, 0), (2, 0), (5, 3)])
     assert not is_star([(2, 1), (1, 0)])  # a sink that is also a source
     assert not is_star([(2, 0), (2, 1)])  # a source with two sinks
+
+
+def test_dedup_clusters_resolve_a_long_chain_to_one_canonical(spark, monkeypatch):
+    """A 60-node near-dup chain in id order is one cluster: every doc
+    points at doc 0, whatever the chain's diameter."""
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(59)], "doc_a long, doc_b long"
+    )
+    monkeypatch.setattr(dedup, "dedup_minhash_lsh", lambda spark, sf_dir: chain)
+    rows = dedup.dedup_cluster_canonical(spark, "unused").collect()
+    assert {r.canonical_id for r in rows} == {0}
+    assert sorted(r.doc_id for r in rows if not r.is_canonical) == list(range(1, 60))
+    assert [r.doc_id for r in rows if r.is_canonical] == [0]
+
+
+# A star whose center 0 holds leaves 1..6 together, beside a path
+# 10-11-12-13-14: deleting the center leaves six isolated nodes.
+_STAR_AND_PATH = [(0, x) for x in range(1, 7)] + [(x, x + 1) for x in range(10, 14)]
+_NODES = sorted({n for e in _STAR_AND_PATH for n in e})
+
+
+def _uf_components(nodes, edges):
+    return len(nodes) - len(_union_find_members(edges))
+
+
+def _per_scenario(spark, scenarios, keys):
+    """n_comp per scenario for {key tuple: (nodes, undirected edges)}."""
+    cols = ", ".join(f"{k} long" for k in keys)
+    edges = spark.createDataFrame(
+        [(*k, a, b) for k, (_, es) in scenarios.items() for a, b in es]
+        + [(*k, b, a) for k, (_, es) in scenarios.items() for a, b in es],
+        f"{cols}, a long, b long",
+    )
+    labels = spark.createDataFrame(
+        [(*k, v, v) for k, (ns, _) in scenarios.items() for v in ns],
+        f"{cols}, v long, lbl long",
+    )
+    out = graph._components_per_scenario(edges, labels, keys)
+    return {tuple(r[k] for k in keys): r.n_comp for r in out.collect()}
+
+
+def test_components_per_vertex_deletion_match_union_find(spark):
+    scenarios = {(-1,): (_NODES, _STAR_AND_PATH)}
+    for x in _NODES:
+        scenarios[(x,)] = (
+            [n for n in _NODES if n != x],
+            [e for e in _STAR_AND_PATH if x not in e],
+        )
+    got = _per_scenario(spark, scenarios, ["x"])
+    assert got == {k: _uf_components(*s) for k, s in scenarios.items()}
+    assert got[(0,)] == 7 and got[(12,)] == 3 and got[(-1,)] == 2
+
+
+def test_components_per_edge_deletion_match_union_find(spark):
+    scenarios = {(-1, -1): (_NODES, _STAR_AND_PATH)}
+    for e in _STAR_AND_PATH:
+        scenarios[e] = (_NODES, [f for f in _STAR_AND_PATH if f != e])
+    got = _per_scenario(spark, scenarios, ["xa", "xb"])
+    assert got == {k: _uf_components(*s) for k, s in scenarios.items()}
+    assert set(got.values()) == {2, 3}  # every edge of a forest is a bridge
+
+
+def test_components_per_scenario_bound_exhaustion_raises(spark, monkeypatch):
+    monkeypatch.setattr(graph, "_N_NATIONS", 2)  # 3 rounds; the path needs 5
+    with pytest.raises(RuntimeError, match="within 3 rounds"):
+        _per_scenario(spark, {(-1,): (_NODES, _STAR_AND_PATH)}, ["x"])

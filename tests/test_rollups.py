@@ -1,18 +1,17 @@
-"""Rollup hierarchy: materialized hourly→daily must equal direct
+"""Rollup hierarchy: hourly→daily→monthly merges must equal direct
 aggregation of raw (merge losslessness)."""
 
 from pyspark.sql import functions as F
 
-from gotsdb_spark.operators.rollups import materialize_rollups, merge_up
+from gotsdb_spark.operators.rollups import hourly_rollup, merge_up
 from gotsdb_spark.sources.registry import load_table
 
 SF = "/root/testdata/sf0.001"
 
 
-def test_materialized_rollups_match_raw(spark, tmp_path):
-    paths = materialize_rollups(spark, SF, str(tmp_path / "rollups"))
-    daily = spark.read.parquet(paths["daily"])
+def test_daily_rollup_from_hourly_matches_raw(spark):
     raw = load_table(spark, "events", SF)
+    daily = merge_up(hourly_rollup(raw), "hour", "day", "day")
     want = raw.groupBy(
         F.date_trunc("day", "ts").alias("day"), "event_type"
     ).agg(F.count("*").alias("n"), F.sum("value").alias("s"))
@@ -27,11 +26,10 @@ def test_materialized_rollups_match_raw(spark, tmp_path):
     assert got == expect
 
 
-def test_monthly_merge_from_daily(spark, tmp_path):
-    paths = materialize_rollups(spark, SF, str(tmp_path / "rollups2"))
-    daily = spark.read.parquet(paths["daily"])
-    monthly = merge_up(daily, "day", "month", "month")
+def test_monthly_merge_from_daily(spark):
     raw = load_table(spark, "events", SF)
+    daily = merge_up(hourly_rollup(raw), "hour", "day", "day")
+    monthly = merge_up(daily, "day", "month", "month")
     want = raw.groupBy(F.date_trunc("month", "ts").alias("month")).agg(
         F.count("*").alias("n")
     )
@@ -40,37 +38,3 @@ def test_monthly_merge_from_daily(spark, tmp_path):
         for r in monthly.groupBy("month").agg(F.sum("n").alias("n")).collect()
     }
     assert got == {r["month"]: r["n"] for r in want.collect()}
-
-
-def test_incremental_refresh_touches_only_target_days(spark, tmp_path):
-    import os
-    import time
-
-    from gotsdb_spark.operators.rollups import (
-        materialize_daily_partitioned,
-        refresh_days,
-    )
-
-    path = materialize_daily_partitioned(spark, SF, str(tmp_path / "daily"))
-    parts = sorted(p for p in os.listdir(path) if p.startswith("dt="))
-    assert len(parts) >= 28
-    target = parts[3].split("=", 1)[1]
-    untouched = os.path.join(path, parts[5])
-    mtime_before = max(
-        os.path.getmtime(os.path.join(untouched, f)) for f in os.listdir(untouched)
-    )
-    before = spark.read.parquet(path).where(F.col("dt") == target).collect()
-
-    time.sleep(1.1)
-    refresh_days(spark, SF, path, [target])
-
-    # refreshed day recomputes to the same values (idempotent refresh)
-    after = spark.read.parquet(path).where(F.col("dt") == target).collect()
-    key = lambda r: (r["day"], r["event_type"])  # noqa: E731
-    assert sorted(map(key, before)) == sorted(map(key, after))
-    assert {key(r): r["n"] for r in before} == {key(r): r["n"] for r in after}
-    # and the untouched day's files were not rewritten
-    mtime_after = max(
-        os.path.getmtime(os.path.join(untouched, f)) for f in os.listdir(untouched)
-    )
-    assert mtime_after == mtime_before

@@ -3,8 +3,8 @@ star-contraction connected components, RRF retrieval fusion, centroid
 separation, and containment-based quote detection.
 
 The oracle sweep proves cross-engine equality; these pin the
-mathematical invariants and the cross-ALGORITHM agreements (two
-independent routes to the same answer inside Spark itself).
+mathematical invariants and the agreement of queries that roll up one
+result two ways.
 """
 
 from __future__ import annotations
@@ -18,9 +18,11 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_star_cc_matches_label_propagation(spark):
-    """Star contraction and min-label propagation are different
-    algorithms over the same pair graph — their component partitions
-    must be identical."""
+    """graph_components_star_contraction and dedup_cluster_canonical
+    roll the same star-contraction fixpoint up two ways (component
+    sizes vs one row per member), so their partitions must agree. Both
+    share one algorithm; the independent references are the Python
+    union-find in tests/test_graph.py and the DuckDB oracles."""
     star = {
         (r["canonical_id"], r["n_members"])
         for r in QUERIES["graph_components_star_contraction"](spark, SF).collect()

@@ -205,74 +205,6 @@ def test_rate_source_smoke(spark):
     assert total > 0
 
 
-def test_stream_static_enrichment_matches_batch(spark, tmp_path):
-    """Stream-static broadcast join: streamed events enriched with the
-    customer dimension equal the batch join."""
-    import os as _os
-
-    from gotsdb_spark.streaming.ingest import (
-        enrich_with_dimension,
-        read_events_stream,
-    )
-
-    src = str(tmp_path / "src_enrich")
-    _os.makedirs(src)
-    ev = load_table(spark, "events", SF)
-    dim = load_table(spark, "customer", SF).select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment"
-    )
-    ev.write.mode("append").parquet(src)
-
-    q = (
-        enrich_with_dimension(read_events_stream(spark, src), dim)
-        .writeStream.format("memory")
-        .queryName("enriched")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r["event_id"], r["c_mktsegment"])
-            for r in spark.sql(
-                "SELECT event_id, c_mktsegment FROM enriched"
-            ).collect()
-        }
-    finally:
-        q.stop()
-    want = {
-        (r["event_id"], r["c_mktsegment"])
-        for r in ev.join(F.broadcast(dim), "user_id", "left")
-        .select("event_id", "c_mktsegment")
-        .collect()
-    }
-    assert got == want
-
-
-def test_available_now_drains_and_stops(spark, tmp_path):
-    """Trigger.availableNow processes the backlog then terminates on
-    its own — the incremental-batch contract."""
-    import os as _os
-
-    from gotsdb_spark.streaming.ingest import (
-        read_events_stream,
-        run_available_now,
-    )
-
-    src = str(tmp_path / "src_avnow")
-    _os.makedirs(src)
-    ev = load_table(spark, "events", SF)
-    ev.write.mode("append").parquet(src)
-
-    q = run_available_now(read_events_stream(spark, src), "avnow_out")
-    q.awaitTermination(120)
-    assert not q.isActive  # drained the backlog and stopped itself
-    assert (
-        spark.sql("SELECT count(*) n FROM avnow_out").collect()[0]["n"]
-        == ev.count()
-    )
-
-
 @pytest.mark.slow
 def test_outer_stream_stream_join_emits_nulls_after_watermark(spark, tmp_path):
     """leftOuter stream-stream interval join: matched purchases carry

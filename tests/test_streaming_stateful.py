@@ -1,5 +1,5 @@
-"""applyInPandasWithState: per-user running totals accumulate across
-micro-batches and converge to the batch aggregate."""
+"""transformWithStateInPandas: per-user running state accumulates
+across micro-batches and converges to the batch aggregate."""
 
 import pytest
 import os
@@ -8,56 +8,8 @@ from pyspark.sql import functions as F
 
 from gotsdb_spark.sources.registry import load_table
 from gotsdb_spark.streaming import read_events_stream
-from gotsdb_spark.streaming.stateful import running_user_totals
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_running_totals_converge_to_batch(spark, tmp_path):
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    ev = load_table(spark, "events", SF)
-    first, second = ev.where(F.col("event_id") % 2 == 0), ev.where(
-        F.col("event_id") % 2 == 1
-    )
-
-    q = (
-        running_user_totals(read_events_stream(spark, src))
-        .writeStream.format("memory")
-        .queryName("state_out")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        first.write.mode("append").parquet(src)
-        q.processAllAvailable()
-        mid = {
-            r["user_id"]: r["n_events"]
-            for r in spark.sql(
-                "SELECT user_id, max(n_events) n_events FROM state_out GROUP BY 1"
-            ).collect()
-        }
-        second.write.mode("append").parquet(src)
-        q.processAllAvailable()
-        final = {
-            r["user_id"]: (r["n_events"], round(r["total_value"], 6))
-            for r in spark.sql(
-                "SELECT user_id, max(n_events) n_events, max(total_value) total_value "
-                "FROM state_out GROUP BY 1"
-            ).collect()
-        }
-    finally:
-        q.stop()
-
-    want = {
-        r["user_id"]: (r["n"], round(r["t"], 6))
-        for r in ev.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("t"))
-        .collect()
-    }
-    assert final == want
-    # and state genuinely accumulated across batches (not one big batch)
-    assert any(mid[u] < final[u][0] for u in mid)
 
 
 def test_transform_with_state_peaks_converge_to_batch(spark, tmp_path):

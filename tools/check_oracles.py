@@ -20,7 +20,7 @@ import pandas as pd
 sys.path.insert(0, ".")
 
 from gotsdb_spark.operators import ORACLES, QUERIES  # noqa: E402
-from gotsdb_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
+from gotsdb_spark.session import DEFAULT_CPUS, get_spark, release_blocks  # noqa: E402
 from gotsdb_spark.sources.registry import TABLES  # noqa: E402
 
 ROUND = 6
@@ -41,20 +41,6 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 
 def value_hash(df: pd.DataFrame) -> str:
     return str(pd.util.hash_pandas_object(df.astype(str), index=False).sum())
-
-
-def _release_blocks(spark) -> None:
-    """Free cached/localCheckpoint blocks between queries: a long
-    single-JVM sweep otherwise accumulates every query's checkpoint
-    RDDs until the driver OOMs (the sf1 sweep died at 10x volume after
-    ~40 queries before this existed). Safe between queries — results
-    are already collected, so nothing recomputes."""
-    try:
-        spark.catalog.clearCache()
-        for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            jrdd.unpersist()
-    except Exception:
-        pass
 
 
 def main() -> int:
@@ -110,7 +96,7 @@ def main() -> int:
         else:
             print(f"PASS {name} ({len(sdf)} rows, {time.time()-t0:.1f}s)")
             statuses[name] = "pass"
-        _release_blocks(spark)
+        release_blocks(spark)
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     # Committed sweep artifact: lets a round prove "every registered
     # query hash-matched locally on <date>" even for names outside the

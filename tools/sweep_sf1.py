@@ -441,20 +441,6 @@ def generate() -> None:
         print(f"wrote {name}: {src.num_rows} -> {out.num_rows} rows")
 
 
-def _release_blocks(spark) -> None:
-    """Free cached/localCheckpoint blocks between queries: a long
-    single-JVM sweep otherwise accumulates every query's checkpoint
-    RDDs until the driver OOMs (the sf1 sweep died at 10x volume after
-    ~40 queries before this existed). Safe between queries — results
-    are already collected, so nothing recomputes."""
-    try:
-        spark.catalog.clearCache()
-        for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            jrdd.unpersist()
-    except Exception:
-        pass
-
-
 def main() -> int:
     subset = bool(sys.argv[1:])
     only = sys.argv[1:] or SWEEP_CLASS
@@ -463,7 +449,7 @@ def main() -> int:
     from check_oracles import canon, value_hash  # noqa: E402
 
     from gotsdb_spark.operators import ORACLES, QUERIES  # noqa: E402
-    from gotsdb_spark.session import get_spark  # noqa: E402
+    from gotsdb_spark.session import get_spark, release_blocks  # noqa: E402
 
     spark = get_spark("sf1-sweep")
     con = duckdb.connect()
@@ -483,7 +469,7 @@ def main() -> int:
             print(f"FAIL {name}: {type(exc).__name__}: {exc}"[:300])
             failures.append(name)
             statuses[name] = "error"
-            _release_blocks(spark)
+            release_blocks(spark)
             continue
         problems = []
         if len(sdf) != len(odf):
@@ -502,7 +488,7 @@ def main() -> int:
         else:
             print(f"PASS {name} ({len(sdf)} rows, {timings[name]}s)")
             statuses[name] = "pass"
-        _release_blocks(spark)
+        release_blocks(spark)
     if subset:
         # Ad-hoc subset runs must not clobber the committed full-class
         # artifact.

@@ -16,7 +16,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from gotsdb_spark.operators import QUERIES  # noqa: E402
-from gotsdb_spark.session import get_spark  # noqa: E402
+from gotsdb_spark.session import get_spark, release_blocks  # noqa: E402
 
 
 def main() -> int:
@@ -28,18 +28,6 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("time-queries")
     spark.range(1000).count()  # warm codegen/session
-
-    def _release_blocks() -> None:
-        # Same hygiene as bench.py: free localCheckpoint blocks AFTER a
-        # query's timed runs so multi-query sessions don't accumulate
-        # storage pressure that taxes later queries (outside any timed
-        # window; blocks are per-DataFrame and never reused across runs).
-        try:
-            spark.catalog.clearCache()
-            for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                jrdd.unpersist(True)
-        except Exception:  # noqa: BLE001 — hygiene must never fail a run
-            pass
 
     for name in args:
         spark.sparkContext.setJobDescription(name)
@@ -57,7 +45,7 @@ def main() -> int:
             print(f"TIME {name}: min={best:.3f}s runs={all_t}", flush=True)
         except Exception as exc:  # noqa: BLE001
             print(f"ERR {name}: {type(exc).__name__}: {exc}"[:300], flush=True)
-        _release_blocks()
+        release_blocks(spark)
         spark.sparkContext.setJobDescription(None)
     return 0
 
