@@ -33,25 +33,22 @@ _counter = itertools.count()
 
 @contextmanager
 def _replay_partitions(spark: SparkSession, n: int = 8):
-    """Pin spark.sql.shuffle.partitions for the lifetime of a stateful
-    replay, restoring the caller's value afterwards.
+    """Cap spark.sql.shuffle.partitions at ``n`` for the lifetime of a
+    stateful replay, restoring the caller's value afterwards.
 
-    These replays process a few thousand rows per micro-batch, so their
-    cost is dominated by per-partition state-store commits (stores ×
-    several stateful operators × several batches), not data: the
-    left-outer interval join drops 40s → 11s at sf0.01 going 32 → 8
-    partitions (r12). The STREAM-STREAM JOIN replays pass n=4 (r14): a
-    stream-stream join opens 4 RocksDB stores per partition per batch,
-    and their watermark-advance micro-batches carry 1 row — halving
-    the partitions cut each such batch from ~2.9 s to ~2.0 s at sf0.1,
-    results unchanged (hash-verified). Data-heavy window-agg replays
-    (~250k rows/batch) keep 8 — 4 measured SLOWER there
-    (rate_limit_audit 6.3 → 7.1 s). This mirrors the production knob —
-    shuffle partitions sized to per-batch stream volume, not to the
-    batch-analytics default.
+    The partition count is the number of state stores per stateful
+    operator, and every store commits once per micro-batch. These
+    replays carry a few thousand rows per batch, so stores beyond a
+    handful add commits, not parallelism. Summed wall of the 14 replays
+    at sf0.01 on a 4-core host, two runs each, capped vs the session
+    default: SPARK_GRAFT_CPUS=32 143.0/148.0 s vs 203.0/203.2 s; =8
+    108.8/101.6 s vs 114.5/133.0 s; 4 cores (the cap is then the session
+    default, 4) 83.0/84.8 s, vs 90.8/90.2 s when pinned up to 8.
+    Stream-stream join replays pass n=4: a join opens 4 stores per
+    partition per batch.
     """
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", str(min(n, int(prev))))
     try:
         yield
     finally:

@@ -5,7 +5,7 @@ The TSDB pattern the reference was heading toward ("soon to be
 timeseries", reference README.md:3): materialize coarse aggregates once
 and answer coarser queries from finer rollups, never from raw. The key
 design rule is that every stored measure must be MERGEABLE: store
-(count, sum, min, max), derive avg at read time — an avg column would
+(count, integer sum, min, max), derive avg at read time — an avg column would
 be un-mergeable and silently wrong at the next level up.
 
 At 100 TB: the hourly rollup is the only scan of raw data; daily reads
@@ -20,21 +20,19 @@ from pyspark.sql import functions as F
 from gotsdb_spark.operators.registry import query
 from gotsdb_spark.sources.registry import load_table
 
-def _measures() -> list:
-    # Built lazily: Column construction needs an active SparkSession.
-    return [
-        F.count("*").alias("n"),
-        F.sum("value").alias("sum_value"),
-        F.min("value").alias("min_value"),
-        F.max("value").alias("max_value"),
-    ]
-
 
 def hourly_rollup(events: DataFrame) -> DataFrame:
-    """Raw events → per-(hour, event_type) mergeable partials."""
+    """Raw events → per-(hour, event_type) mergeable partials; the sum
+    is kept in integer micros (see ts_rollup_daily_via_hourly)."""
+    micros = F.floor(F.col("value") * 1_000_000 + 0.5).cast("bigint")
     return events.groupBy(
         F.date_trunc("hour", "ts").alias("hour"), "event_type"
-    ).agg(*_measures())
+    ).agg(
+        F.count("*").alias("n"),
+        F.sum(micros).alias("sum_micros"),
+        F.min("value").alias("min_value"),
+        F.max("value").alias("max_value"),
+    )
 
 
 def merge_up(finer: DataFrame, bucket_col: str, new_bucket: str, trunc: str) -> DataFrame:
@@ -44,7 +42,7 @@ def merge_up(finer: DataFrame, bucket_col: str, new_bucket: str, trunc: str) -> 
         F.date_trunc(trunc, bucket_col).alias(new_bucket), "event_type"
     ).agg(
         F.sum("n").alias("n"),
-        F.sum("sum_value").alias("sum_value"),
+        F.sum("sum_micros").alias("sum_micros"),
         F.min("min_value").alias("min_value"),
         F.max("max_value").alias("max_value"),
     )
@@ -77,26 +75,7 @@ def ts_rollup_daily_via_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     levels merged it.)
     """
     ev = load_table(spark, "events", sf_dir)
-    micros = F.floor(F.col("value") * 1_000_000 + 0.5).cast("bigint")
-    hourly = ev.groupBy(
-        F.date_trunc("hour", "ts").alias("hour"), "event_type"
-    ).agg(
-        F.count("*").alias("n"),
-        F.sum(micros).alias("sum_micros"),
-        F.min("value").alias("min_value"),
-        F.max("value").alias("max_value"),
-    )
-    daily = hourly.groupBy(
-        F.date_trunc("day", "hour").alias("day"), "event_type"
-    ).agg(
-        F.sum("n").alias("n"),
-        F.sum("sum_micros").alias("sum_micros"),
-        F.min("min_value").alias("min_value"),
-        F.max("max_value").alias("max_value"),
-    )
-    return daily.select(
-        "day", "event_type", "n", "sum_micros", "min_value", "max_value"
-    )
+    return merge_up(hourly_rollup(ev), "hour", "day", "day")
 
 
 @query(

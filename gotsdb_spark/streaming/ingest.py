@@ -12,8 +12,9 @@ Scale notes:
 - Watermarks bound state: the windowed aggregations keep only windows
   newer than (max event time − delay); at 100 TB/day this is the only
   viable stateful design (state is O(open windows × groups), not O(events)).
-- foreachBatch sinks write idempotently per epoch so replays after
-  failure don't duplicate (the checkpoint tracks the epoch id).
+- A replayed epoch re-runs its foreachBatch sink; the KV-log sink stays
+  correct because the engine's fold, not the file append, is
+  idempotent (see stream_into_collection_log).
 """
 
 from __future__ import annotations
@@ -114,8 +115,13 @@ def stream_into_collection_log(
 
     foreachBatch appends (key, value, write_ts, seq=epoch) rows to the
     same Parquet log format storage.Engine compacts — so a collection
-    can be fed by a stream and read through the KV API. Appends are
-    idempotent per epoch via the checkpoint.
+    can be fed by a stream and read through the KV API.
+
+    The file appends are NOT idempotent: an epoch replayed after a
+    failure between the sink write and the checkpoint commit appends a
+    second copy of its rows. Only the engine's fold is: the copies carry
+    the same ``seq`` (the epoch id) and ``write_ts``, so the latest-per-
+    key rule picks an identical row whichever copy it keeps.
     """
 
     def sink(batch: DataFrame, epoch_id: int) -> None:

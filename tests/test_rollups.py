@@ -12,16 +12,18 @@ SF = "/root/testdata/sf0.001"
 def test_daily_rollup_from_hourly_matches_raw(spark):
     raw = load_table(spark, "events", SF)
     daily = merge_up(hourly_rollup(raw), "hour", "day", "day")
+    micros = F.floor(F.col("value") * 1_000_000 + 0.5).cast("bigint")
     want = raw.groupBy(
         F.date_trunc("day", "ts").alias("day"), "event_type"
-    ).agg(F.count("*").alias("n"), F.sum("value").alias("s"))
+    ).agg(F.count("*").alias("n"), F.sum(micros).alias("sum_micros"))
 
     got = {
-        (r["day"], r["event_type"]): (r["n"], round(r["sum_value"], 6))
+        (r["day"], r["event_type"]): (r["n"], r["sum_micros"])
         for r in daily.collect()
     }
     expect = {
-        (r["day"], r["event_type"]): (r["n"], round(r["s"], 6)) for r in want.collect()
+        (r["day"], r["event_type"]): (r["n"], r["sum_micros"])
+        for r in want.collect()
     }
     assert got == expect
 

@@ -10,6 +10,10 @@ directory (old files included) and an interrupted epoch may have
 half-written data files.
 """
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -104,7 +108,7 @@ def test_stateful_windowed_restart_matches_batch(spark, tmp_path):
     contributions from both epochs, and the final append-mode output
     equals the batch aggregation of the full event set — the recovery
     contract for windowed ingest (the appends-only test above covers
-    the offset/sink logs; this covers the HDFS-backed state store).
+    the offset/sink logs; this covers the state store).
     """
     from gotsdb_spark.streaming import windowed_event_counts
 
@@ -193,3 +197,100 @@ def test_stateful_windowed_restart_matches_batch(spark, tmp_path):
     # and the straddling window specifically saw both epochs
     bkeys = [k for k in want if k[0] == bwin]
     assert bkeys, "boundary window missing from the batch reference"
+
+
+def _write_events(path, i, rows):
+    """Backlog file ``i`` of (ts_us, event_type, value) rows, written
+    driver-side in EVENT_SCHEMA."""
+    os.makedirs(path, exist_ok=True)
+    ts, kind, value = zip(*rows)
+    n = len(rows)
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(i * 1000, i * 1000 + n), pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("us", tz="UTC")),
+            "user_id": pa.array([0] * n, pa.int64()),
+            "event_type": pa.array(kind),
+            "value": pa.array(value, pa.float64()),
+            "props": pa.array(["{}"] * n),
+        }),
+        os.path.join(path, f"events-{i:02d}.parquet"),
+    )
+
+
+def test_changelog_restart_matches_uninterrupted_drain(spark, tmp_path):
+    """A stateful stream stopped mid-backlog and restarted from its
+    checkpoint emits exactly what one uninterrupted drain emits.
+
+    Five 20-minute files in event-time order, one per trigger, under a
+    1-hour tumbling window: the stop after file 2 falls inside the first
+    window, so the restart must restore that window's state from the
+    RocksDB changelog and merge the new rows into it. A last file three
+    days later pushes the watermark past every real window, so append
+    mode emits them all. Values are small integers, so the double sums
+    are exact and the outputs compare with ==. Both checkpoints hold
+    `<v>.changelog` files and no `<v>.zip` snapshot: a commit uploads
+    the changed keys, not the whole store.
+    """
+    from gotsdb_spark.streaming import windowed_event_counts
+
+    hour = 3_600_000_000
+    t0 = 1_704_067_200_000_000  # 2024-01-01T00:00:00Z
+    kinds = ("view", "click", "purchase")
+    files = [
+        [(t0 + i * hour // 3 + j * hour // 120, kinds[(i + j) % 3], float(40 * i + j))
+         for j in range(40)]
+        for i in range(5)
+    ]
+    files.append([(t0 + 72 * hour, "view", 0.0)])
+
+    def drain(src, out, ckpt):
+        q = (
+            windowed_event_counts(
+                read_events_stream(spark, src, 1), window="1 hour", watermark="1 hour"
+            )
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        assert q.exception() is None
+
+    def emitted(out):
+        return sorted(
+            tuple(r)
+            for r in spark.read.parquet(out)
+            .select(F.unix_micros("window_start"), "event_type", "n", "sum_value")
+            .collect()
+        )
+
+    # One uninterrupted drain of the whole backlog.
+    whole, out_whole, ck_whole = (str(tmp_path / d) for d in ("whole", "out_whole", "ck_whole"))
+    for i, rows in enumerate(files):
+        _write_events(whole, i, rows)
+    drain(whole, out_whole, ck_whole)
+
+    # The same backlog, stopped after two files and restarted.
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ck"))
+    for i in range(2):
+        _write_events(src, i, files[i])
+    drain(src, out, ckpt)
+    assert spark.read.parquet(out).count() == 0  # the first window is still open
+    for i in range(2, len(files)):
+        _write_events(src, i, files[i])
+    drain(src, out, ckpt)
+
+    got = emitted(out)
+    assert got == emitted(out_whole)
+    want = {}
+    for ts, kind, value in (r for rows in files[:-1] for r in rows):
+        n, s = want.get((ts - ts % hour, kind), (0, 0.0))
+        want[(ts - ts % hour, kind)] = (n + 1, s + value)
+    assert got == sorted((w, k, n, s) for (w, k), (n, s) in want.items())
+    for ck in (ck_whole, ckpt):
+        names = [f for _, _, fs in os.walk(os.path.join(ck, "state", "0")) for f in fs]
+        assert any(f.endswith(".changelog") for f in names), names
+        assert not any(f.endswith(".zip") for f in names), names
