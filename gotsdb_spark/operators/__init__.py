@@ -6,7 +6,7 @@ a DuckDB oracle SQL string producing identical columns/rows. The driver
 contract (``__spark_entry__.py``) simply re-exports these dicts.
 """
 
-from gotsdb_spark.operators.registry import GATED_QUERIES, ORACLES, QUERIES, query
+from gotsdb_spark.operators.registry import ORACLES, QUERIES, query
 
 # Import for registration side effects.
 from gotsdb_spark.operators import relational  # noqa: E402,F401
@@ -29,4 +29,4 @@ from gotsdb_spark.operators import statistics  # noqa: E402,F401
 from gotsdb_spark.operators import inference  # noqa: E402,F401
 from gotsdb_spark.operators import filesources  # noqa: E402,F401
 
-__all__ = ["QUERIES", "ORACLES", "GATED_QUERIES", "query"]
+__all__ = ["QUERIES", "ORACLES", "query"]

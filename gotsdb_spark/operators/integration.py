@@ -1,98 +1,221 @@
 """Integration queries: the KV engine and the streaming pipeline
 exposed through the driver's oracle gate.
 
-Most of the KV/streaming surface is exercised by unit tests, but these
-two queries put the storage engine's write→flush→promote→snapshot
-lifecycle and a real Structured Streaming run into the same
-DuckDB-oracle comparison as every relational operator — the engine's
-end-to-end behavior is hash-checked, not just unit-asserted.
+`kv_roundtrip_snapshot` runs the storage engine's
+write→flush→promote→compact lifecycle. Each of the fourteen
+`streaming_*` queries replays the events fixture through a real
+file-source stream and compares what the stream emits with DuckDB
+running a batch query over the same input: a stream's output equals a
+batch query over the same prefix, hash-checked like every relational
+operator.
+
+All fourteen replays run on one driver, `_replay`. A query supplies its
+stream, its waves of input and its sink; the driver stages each wave,
+drains the query before the next wave lands, and stops it on every
+path. `_replay_to_memory` and `_replay_upsert` wrap the two sinks the
+replays share.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import itertools
 import os
-from contextlib import contextmanager
+from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.streaming import StreamingQuery
 
-from gotsdb_spark.operators.registry import GATED_QUERIES, query
+from gotsdb_spark.operators.registry import query
 from gotsdb_spark.scratch import scratch_dir as _scratch_dir
 from gotsdb_spark.sources.registry import load_table
 from gotsdb_spark.storage.engine import Engine, write_parquet_atomic
 from gotsdb_spark.streaming import (
+    EVENT_SCHEMA,
     read_events_stream,
-    run_stream_to_memory,
     session_window_values,
     windowed_event_counts,
 )
 
 _counter = itertools.count()
+_EVENT_COLS = EVENT_SCHEMA.fieldNames()
+_EVENT_ARROW = to_arrow_schema(EVENT_SCHEMA)
+_DAY_US = 86_400_000_000
+
+# One staged file: (replay dir, events DataFrame or sentinel rows, file
+# count). A wave is the list of files staged before the next drain.
+Wave = list[tuple[str, "DataFrame | list[tuple]", int]]
 
 
-@contextmanager
-def _replay_partitions(spark: SparkSession, n: int = 8):
-    """Cap spark.sql.shuffle.partitions at ``n`` for the lifetime of a
-    stateful replay, restoring the caller's value afterwards.
+def _utc_us(ts: str) -> int:
+    """Epoch microseconds of the UTC wall time ``ts`` (ISO format)."""
+    t = dt.datetime.fromisoformat(ts).replace(tzinfo=dt.timezone.utc)
+    return int(t.timestamp()) * 1_000_000
 
-    The partition count is the number of state stores per stateful
-    operator, and every store commits once per micro-batch. These
-    replays carry a few thousand rows per batch, so stores beyond a
-    handful add commits, not parallelism. Summed wall of the 14 replays
-    at sf0.01 on a 4-core host, two runs each, capped vs the session
-    default: SPARK_GRAFT_CPUS=32 143.0/148.0 s vs 203.0/203.2 s; =8
-    108.8/101.6 s vs 114.5/133.0 s; 4 cores (the cap is then the session
-    default, 4) 83.0/84.8 s, vs 90.8/90.2 s when pinned up to 8.
-    Stream-stream join replays pass n=4: a join opens 4 stores per
-    partition per batch.
+
+def _max_ts_us(events: DataFrame) -> int:
+    """max(ts) in epoch microseconds: one 1-row aggregate."""
+    return events.agg(F.max(F.unix_micros("ts"))).collect()[0][0]
+
+
+def _append_sentinel_rows(path: str, rows: list[tuple]) -> None:
+    """Append watermark-advance sentinel rows to a replay dir as one
+    parquet file, written on the driver with pyarrow.
+
+    ``rows`` are EVENT_SCHEMA tuples with ``ts`` as epoch microseconds.
+    The file stores ``ts`` as timestamp("us", tz="UTC"), so no time-zone
+    conversion enters, and the schema-pinned file-source stream reads it
+    like any other wave. `write_parquet_atomic` renames the file into
+    place, so a running stream never lists a partial file.
+    """
+    write_parquet_atomic(
+        path,
+        pa.Table.from_pylist(
+            [dict(zip(_EVENT_COLS, r)) for r in rows], schema=_EVENT_ARROW
+        ),
+    )
+
+
+def _stage(path: str, data: DataFrame | list[tuple], n_files: int) -> None:
+    """Append one part of a wave to the replay dir ``path``: an events
+    DataFrame as ``n_files`` parquet files of consecutive rows, or
+    sentinel rows as one.
+
+    A wave is collected with `toArrow` and written on the driver, which
+    saves the repartition shuffle and the Spark write job of a
+    `repartition(n).write`. Warm wall at sf0.1 on a 4-core host, three
+    runs each, driver vs Spark write: 275-300 vs 453-475 ms for the
+    20k purchases as 1 file, 290-433 vs 507-1,090 ms for 63k rows as 1
+    file, 554-739 vs 803-1,292 ms for all 100k events as 6 files. A
+    wave is at most the events fixture (100k rows at sf0.1).
+    """
+    if isinstance(data, list):
+        _append_sentinel_rows(path, data)
+        return
+    table = data.select(_EVENT_COLS).toArrow()
+    step = -(-table.num_rows // n_files)
+    for i in range(n_files):
+        write_parquet_atomic(path, table.slice(i * step, step))
+
+
+def _replay(
+    spark: SparkSession,
+    start: Callable[[], StreamingQuery],
+    waves: list[Wave],
+    partitions: int = 8,
+) -> None:
+    """Drive one replay: stage ``waves[0]``, ``start()`` the query and
+    drain it, then stage and drain each later wave. The query stops on
+    every path.
+
+    Each wave is fully processed before the next is written, so the
+    micro-batch boundaries, and with them every watermark, are exact:
+    the file counts of a wave and the stream's maxFilesPerTrigger fix
+    them, and the oracles rely on that.
+
+    spark.sql.shuffle.partitions is capped at ``partitions`` for the
+    replay and restored afterwards. The partition count is the number
+    of state stores per stateful operator, and every store commits once
+    per micro-batch. These replays carry a few thousand rows per batch,
+    so stores beyond a handful add commits, not parallelism. Summed wall
+    of the 14 replays at sf0.01 on a 4-core host, two runs each, capped
+    vs the session default: SPARK_GRAFT_CPUS=32 143.0/148.0 s vs
+    203.0/203.2 s; =8 108.8/101.6 s vs 114.5/133.0 s; 4 cores (the cap
+    is then the session default, 4) 83.0/84.8 s, vs 90.8/90.2 s when
+    pinned up to 8. Stream-stream joins pass 4: a join opens 4 stores
+    per partition per batch.
     """
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(min(n, int(prev))))
+    spark.conf.set("spark.sql.shuffle.partitions", str(min(partitions, int(prev))))
     try:
-        yield
+        for staged in waves[0]:
+            _stage(*staged)
+        q = start()
+        try:
+            q.processAllAvailable()
+            for wave in waves[1:]:
+                for staged in wave:
+                    _stage(*staged)
+                q.processAllAvailable()
+        finally:
+            q.stop()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def _append_sentinel_rows(path: str, df: DataFrame) -> None:
-    """Append a HANDFUL of watermark-advance sentinel rows to a replay
-    dir driver-side (pyarrow) instead of through a Spark write job.
-
-    The sentinel frames are 1–2 literal or 1-row-aggregate rows by
-    construction (they exist only to push the watermark), so the
-    driver-side write is O(1) and avoids a whole Spark write job per
-    wave. Timestamps cross as epoch micros and are written as
-    timestamp("us", tz="UTC") to stay timezone-exact; the file matches
-    EVENT_SCHEMA so the schema-pinned file-source stream reads it like
-    any other wave. `write_parquet_atomic` renames the file into place,
-    so a running file-stream source never lists a partial file.
-    """
-    import pyarrow as pa
-
-    rows = df.select(
-        F.col("event_id").cast("long"),
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        F.col("user_id").cast("long"),
-        F.col("event_type").cast("string"),
-        F.col("value").cast("double"),
-        F.col("props").cast("string"),
-    ).collect()
-    tbl = pa.table(
-        {
-            "event_id": pa.array([r["event_id"] for r in rows], pa.int64()),
-            "ts": pa.array(
-                [r["ts_us"] for r in rows], pa.timestamp("us", tz="UTC")
-            ),
-            "user_id": pa.array([r["user_id"] for r in rows], pa.int64()),
-            "event_type": pa.array(
-                [r["event_type"] for r in rows], pa.string()
-            ),
-            "value": pa.array([r["value"] for r in rows], pa.float64()),
-            "props": pa.array([r["props"] for r in rows], pa.string()),
-        }
+def _replay_to_memory(
+    spark: SparkSession,
+    stream: DataFrame,
+    waves: list[Wave],
+    schema: str,
+    mode: str = "append",
+    partitions: int = 8,
+) -> DataFrame:
+    """`_replay` into a memory sink; returns everything the stream
+    emitted as a DataFrame of ``schema``."""
+    name = f"itg_replay_{os.getpid()}_{next(_counter)}"
+    _replay(
+        spark,
+        lambda: stream.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .start(),
+        waves,
+        partitions,
     )
-    write_parquet_atomic(path, tbl)
+    rows = spark.table(name).collect()
+    spark.catalog.dropTempView(name)
+    return spark.createDataFrame(rows, schema)
+
+
+def _replay_upsert(
+    spark: SparkSession,
+    stream: DataFrame,
+    waves: list[Wave],
+    keys: list[str],
+    value: str,
+) -> DataFrame:
+    """`_replay` of an update-mode ``stream`` into a ``keys``-keyed
+    parquet store; returns the final store snapshot.
+
+    The foreachBatch sink MERGEs each micro-batch's delta rows into the
+    store executor-side: a delta-wins-else-base full-outer coalesce
+    (the warehouse_merge_upsert shape, a Delta/Iceberg MERGE INTO in
+    production), written to a versioned path per batch. The only
+    driver-held state is the current store PATH string, O(1) at any
+    volume; no batch row crosses to the driver.
+    """
+    store_root = _scratch_dir(prefix="gotsdb_stream_store_")
+    state_path: list = [None]
+
+    def upsert(batch_df: DataFrame, batch_id: int) -> None:
+        target = os.path.join(store_root, f"v{batch_id}")
+        delta = batch_df.select(*keys, value)
+        if state_path[0] is None:
+            delta.write.mode("overwrite").parquet(target)
+        else:
+            cur = spark.read.parquet(state_path[0]).withColumnRenamed(
+                value, "cur_v"
+            )
+            merged = cur.join(
+                delta.withColumnRenamed(value, "delta_v"), keys, "full_outer"
+            ).select(*keys, F.coalesce("delta_v", "cur_v").alias(value))
+            merged.write.mode("overwrite").parquet(target)
+        state_path[0] = target
+
+    checkpoint = _scratch_dir(prefix="gotsdb_stream_store_ckpt_")
+    _replay(
+        spark,
+        lambda: stream.writeStream.foreachBatch(upsert)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("update")
+        .start(),
+        waves,
+    )
+    return spark.read.parquet(state_path[0])
 
 
 @query(
@@ -135,12 +258,8 @@ def kv_roundtrip_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A REAL streaming run under the oracle: replay events through a
-    file-source stream in shuffled micro-batches, aggregate with
-    watermarked tumbling windows, and compare the complete-mode result
-    against DuckDB aggregating the same data in batch. This is the
-    batch↔stream equivalence guarantee, enforced by the same hash gate
-    as every batch operator.
+    """Watermarked tumbling-window counts, complete mode, against
+    DuckDB aggregating the same events in batch.
 
     Replay layout: 4 shuffled files at 2 per trigger = 2 micro-batches.
     Complete-mode aggregation only needs >1 batch to prove cross-batch
@@ -151,24 +270,12 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir).where(
         F.col("event_type").isin("purchase", "signup")
     )
-    ev.orderBy(F.hash("event_id")).repartition(4).write.mode("overwrite").parquet(
-        replay
-    )
-    name = f"itg_stream_{os.getpid()}_{next(_counter)}"
-    with _replay_partitions(spark):
-        q = run_stream_to_memory(
-            windowed_event_counts(
-                read_events_stream(spark, replay, 2), watermark="1 hour"
-            ),
-            name,
-            output_mode="complete",
-        )
-        try:
-            out = spark.table(name).collect()
-        finally:
-            q.stop()
-    return spark.createDataFrame(
-        out, "window_start timestamp, event_type string, n bigint, sum_value double"
+    return _replay_to_memory(
+        spark,
+        windowed_event_counts(read_events_stream(spark, replay, 2), watermark="1 hour"),
+        [[(replay, ev.orderBy(F.hash("event_id")), 4)]],
+        "window_start timestamp, event_type string, n bigint, sum_value double",
+        mode="complete",
     )
 
 
@@ -213,27 +320,13 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session_end = last event + gap)."""
     replay = _scratch_dir(prefix="gotsdb_stream_sess_")
     ev = load_table(spark, "events", sf_dir).where(F.col("event_type") == "purchase")
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-    sentinel = spark.createDataFrame(
-        [(-1, "2025-01-01 00:00:00", -1, "purchase", 0.0, None)],
-        "event_id long, ts string, user_id long, event_type string, value double, props string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-
-    name = f"itg_sess_{os.getpid()}_{next(_counter)}"
-    stream = session_window_values(
-        read_events_stream(spark, replay, 64), gap="30 minutes", watermark="2 hours"
-    )
-    ev.select(cols).repartition(1).write.mode("append").parquet(replay)
-    with _replay_partitions(spark):
-        q = run_stream_to_memory(stream, name, output_mode="append")
-        try:
-            _append_sentinel_rows(replay, sentinel)
-            q.processAllAvailable()
-            out = spark.table(name).collect()
-        finally:
-            q.stop()
-    return spark.createDataFrame(
-        out,
+    sentinel = [(-1, _utc_us("2025-01-01"), -1, "purchase", 0.0, None)]
+    return _replay_to_memory(
+        spark,
+        session_window_values(
+            read_events_stream(spark, replay, 64), gap="30 minutes", watermark="2 hours"
+        ),
+        [[(replay, ev, 1)], [(replay, sentinel, 1)]],
         "session_start timestamp, session_end timestamp, user_id long,"
         " n_events bigint, session_value double",
     )
@@ -255,8 +348,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_append_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Append-mode + watermark semantics under the hash gate.
 
-    Three deterministic micro-batch waves (each fully processed before
-    the next is written, so watermark progression is exact):
+    Three waves:
 
     1. on-time rows (purchase/signup before Jan 20) — establishes the
        watermark at max(ts) − 1h;
@@ -281,29 +373,25 @@ def streaming_append_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_type") == "error")
         & (F.col("ts") < F.lit("2024-01-05").cast("timestamp"))
     )
-    sentinel = spark.createDataFrame(
-        [(0, "2024-03-01 00:00:00", 0, "sentinel", 0.0, None)],
-        "event_id long, ts string, user_id long, event_type string, value double, props string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-
-    name = f"itg_append_{os.getpid()}_{next(_counter)}"
-    stream = windowed_event_counts(
-        read_events_stream(spark, replay, 64), window="1 hour", watermark="1 hour"
+    sentinel = [(0, _utc_us("2024-03-01"), 0, "sentinel", 0.0, None)]
+    return _replay_to_memory(
+        spark,
+        windowed_event_counts(
+            read_events_stream(spark, replay, 64), window="1 hour", watermark="1 hour"
+        ),
+        [[(replay, on_time, 1)], [(replay, late, 1)], [(replay, sentinel, 1)]],
+        "window_start timestamp, event_type string, n bigint, sum_value double",
     )
-    on_time.select(cols).repartition(1).write.mode("append").parquet(replay)
-    with _replay_partitions(spark):
-        q = run_stream_to_memory(stream, name, output_mode="append")
-        try:
-            late.select(cols).repartition(1).write.mode("append").parquet(replay)
-            q.processAllAvailable()
-            _append_sentinel_rows(replay, sentinel)
-            q.processAllAvailable()
-            out = spark.table(name).collect()
-        finally:
-            q.stop()
-    return spark.createDataFrame(
-        out, "window_start timestamp, event_type string, n bigint, sum_value double"
+
+
+def _purchases_and_errors(spark: SparkSession, sf_dir: str):
+    """The on-time (before Jan 20) purchases and errors both interval
+    joins replay."""
+    ev = load_table(spark, "events", sf_dir)
+    on_time = F.col("ts") < F.lit("2024-01-20").cast("timestamp")
+    return (
+        ev.where((F.col("event_type") == "purchase") & on_time),
+        ev.where((F.col("event_type") == "error") & on_time),
     )
 
 
@@ -331,8 +419,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     matched to same-user errors in the preceding hour, replayed as two
     REAL file-source streams with watermarks on both sides.
 
-    Two deterministic waves per side (each fully processed before the
-    next is written, so the watermark is exact):
+    Two waves per side:
 
     1. on-time purchases/errors (before Jan 20) — every legitimate
        match emits inside its micro-batch (inner joins don't wait for
@@ -349,41 +436,31 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from gotsdb_spark.streaming.ingest import join_purchases_with_recent_errors
 
-    ev = load_table(spark, "events", sf_dir)
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-    cutoff = F.lit("2024-01-20").cast("timestamp")
-    purchases = ev.where((F.col("event_type") == "purchase") & (F.col("ts") < cutoff))
-    errors = ev.where((F.col("event_type") == "error") & (F.col("ts") < cutoff))
+    purchases, errors = _purchases_and_errors(spark, sf_dir)
     late_cut = F.lit("2024-01-05").cast("timestamp")
-    late_p = purchases.where(F.col("ts") < late_cut).withColumn(
-        "event_id", F.col("event_id") + 10_000_000
+    late_p, late_e = (
+        df.where(F.col("ts") < late_cut).withColumn(
+            "event_id", F.col("event_id") + 10_000_000
+        )
+        for df in (purchases, errors)
     )
-    late_e = errors.where(F.col("ts") < late_cut).withColumn(
-        "event_id", F.col("event_id") + 10_000_000
-    )
-
     p_dir = _scratch_dir(prefix="gotsdb_ssj_p_")
     e_dir = _scratch_dir(prefix="gotsdb_ssj_e_")
-    purchases.select(cols).repartition(1).write.mode("append").parquet(p_dir)
-    errors.select(cols).repartition(1).write.mode("append").parquet(e_dir)
-
     joined = join_purchases_with_recent_errors(
         read_events_stream(spark, p_dir, 64),
         read_events_stream(spark, e_dir, 64),
         horizon="1 hour",
     ).select("p_id", "p_user", "e_id")
-
-    name = f"itg_ssj_{os.getpid()}_{next(_counter)}"
-    with _replay_partitions(spark, 4):
-        q = run_stream_to_memory(joined, name, output_mode="append")
-        try:
-            late_p.select(cols).repartition(1).write.mode("append").parquet(p_dir)
-            late_e.select(cols).repartition(1).write.mode("append").parquet(e_dir)
-            q.processAllAvailable()
-            out = spark.table(name).collect()
-        finally:
-            q.stop()
-    return spark.createDataFrame(out, "p_id long, p_user long, e_id long")
+    return _replay_to_memory(
+        spark,
+        joined,
+        [
+            [(p_dir, purchases, 1), (e_dir, errors, 1)],
+            [(p_dir, late_p, 1), (e_dir, late_e, 1)],
+        ],
+        "p_id long, p_user long, e_id long",
+        partitions=4,
+    )
 
 
 @query(
@@ -411,12 +488,8 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gotsdb_spark.streaming.ingest import dedup_events
 
     ev = load_table(spark, "events", sf_dir)
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     on_time = ev.where(F.col("ts") < F.lit("2024-01-20").cast("timestamp"))
-
     replay = _scratch_dir(prefix="gotsdb_dedup_stream_")
-    on_time.select(cols).repartition(1).write.mode("append").parquet(replay)
-
     deduped = dedup_events(
         read_events_stream(spark, replay, 64), watermark="30 days"
     ).select(
@@ -425,19 +498,11 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 1000).cast("long").alias("v_milli"),
     )
-
-    name = f"itg_dedup_{os.getpid()}_{next(_counter)}"
-    with _replay_partitions(spark):
-        q = run_stream_to_memory(deduped, name, output_mode="append")
-        try:
-            # wave 2: byte-identical redelivery — must all be dropped
-            on_time.select(cols).repartition(1).write.mode("append").parquet(replay)
-            q.processAllAvailable()
-            out = spark.table(name).collect()
-        finally:
-            q.stop()
-    return spark.createDataFrame(
-        out, "event_id long, user_id long, event_type string, v_milli long"
+    return _replay_to_memory(
+        spark,
+        deduped,
+        [[(replay, on_time, 1)], [(replay, on_time, 1)]],
+        "event_id long, user_id long, event_type string, v_milli long",
     )
 
 
@@ -479,13 +544,8 @@ def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     ev = load_table(spark, "events", sf_dir)
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-    wave1 = ev.where(F.col("ts") < F.lit("2024-01-15").cast("timestamp"))
-    wave2 = ev.where(F.col("ts") >= F.lit("2024-01-15").cast("timestamp"))
-
+    cut = F.lit("2024-01-15").cast("timestamp")
     replay = _scratch_dir(prefix="gotsdb_stateful_")
-    wave1.select(cols).repartition(1).write.mode("append").parquet(replay)
-
     stream = read_events_stream(spark, replay, 64).select(
         "user_id", F.floor(F.col("value") * 1000).cast("long").alias("v_milli")
     )
@@ -496,26 +556,19 @@ def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-    name = f"itg_stateful_{os.getpid()}_{next(_counter)}"
-    with _replay_partitions(spark):
-        q = run_stream_to_memory(totals, name, output_mode="update")
-        try:
-            wave2.select(cols).repartition(1).write.mode("append").parquet(replay)
-            q.processAllAvailable()
-            out = (
-                spark.table(name)
-                .groupBy("user_id")
-                .agg(
-                    F.max("n_events").alias("n_events"),
-                    F.max("total_milli").alias("total_milli"),
-                )
-                .collect()
-            )
-        finally:
-            q.stop()
-    return spark.createDataFrame(
-        out, "user_id long, n_events long, total_milli long"
+    emitted = _replay_to_memory(
+        spark,
+        totals,
+        [
+            [(replay, ev.where(F.col("ts") < cut), 1)],
+            [(replay, ev.where(F.col("ts") >= cut), 1)],
+        ],
+        "user_id long, n_events long, total_milli long",
+        mode="update",
+    )
+    return emitted.groupBy("user_id").agg(
+        F.max("n_events").alias("n_events"),
+        F.max("total_milli").alias("total_milli"),
     )
 
 
@@ -549,11 +602,6 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     replay = _scratch_dir(prefix="gotsdb_stream_enrich_")
     ev = load_table(spark, "events", sf_dir).where(F.col("event_type") == "purchase")
-    ev.orderBy(F.hash("event_id")).repartition(8).write.mode("overwrite").parquet(
-        replay
-    )
-    from gotsdb_spark.streaming import read_events_stream, run_stream_to_memory
-
     customer = load_table(spark, "customer", sf_dir).select(
         "c_custkey", "c_nationkey"
     )
@@ -576,15 +624,12 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("day"), "n_name", "n", "value_e3")
     )
-    name = f"itg_enrich_{os.getpid()}_{next(_counter)}"
-    with _replay_partitions(spark):
-        q = run_stream_to_memory(enriched, name, output_mode="complete")
-        try:
-            out = spark.table(name).collect()
-        finally:
-            q.stop()
-    return spark.createDataFrame(
-        out, "day timestamp, n_name string, n bigint, value_e3 bigint"
+    return _replay_to_memory(
+        spark,
+        enriched,
+        [[(replay, ev.orderBy(F.hash("event_id")), 8)]],
+        "day timestamp, n_name string, n bigint, value_e3 bigint",
+        mode="complete",
     )
 
 
@@ -627,133 +672,23 @@ def streaming_interval_join_left_outer(spark: SparkSession, sf_dir: str) -> Data
     """
     from gotsdb_spark.streaming.ingest import join_purchases_with_recent_errors
 
-    ev = load_table(spark, "events", sf_dir)
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-    cutoff = F.lit("2024-01-20").cast("timestamp")
-    purchases = ev.where((F.col("event_type") == "purchase") & (F.col("ts") < cutoff))
-    errors = ev.where((F.col("event_type") == "error") & (F.col("ts") < cutoff))
-
-    def _sentinel(eid: int, ts: str):
-        return spark.createDataFrame(
-            [(eid, ts, -1, "sentinel", 0.0, None)],
-            "event_id long, ts string, user_id long, event_type string,"
-            " value double, props string",
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
-
+    purchases, errors = _purchases_and_errors(spark, sf_dir)
     p_dir = _scratch_dir(prefix="gotsdb_ssjo_p_")
     e_dir = _scratch_dir(prefix="gotsdb_ssjo_e_")
-    purchases.select(cols).repartition(1).write.mode("append").parquet(p_dir)
-    errors.select(cols).repartition(1).write.mode("append").parquet(e_dir)
-
     joined = join_purchases_with_recent_errors(
         read_events_stream(spark, p_dir, 64),
         read_events_stream(spark, e_dir, 64),
         horizon="1 hour",
         how="leftOuter",
     ).select("p_id", "p_user", "e_id")
+    waves = [[(p_dir, purchases, 1), (e_dir, errors, 1)]]
+    for k, day in enumerate(["2024-03-01", "2024-03-02"]):
+        sentinel = [(20_000_000 + k, _utc_us(day), -1, "sentinel", 0.0, None)]
+        waves.append([(p_dir, sentinel, 1), (e_dir, sentinel, 1)])
+    return _replay_to_memory(
+        spark, joined, waves, "p_id long, p_user long, e_id long", partitions=4
+    ).where(F.col("p_user") >= 0)
 
-    name = f"itg_ssjo_{os.getpid()}_{next(_counter)}"
-    with _replay_partitions(spark, 4):
-        q = run_stream_to_memory(joined, name, output_mode="append")
-        try:
-            for wave, ts in enumerate(
-                ["2024-03-01 00:00:00", "2024-03-02 00:00:00"]
-            ):
-                s = _sentinel(20_000_000 + wave, ts)
-                _append_sentinel_rows(p_dir, s)
-                _append_sentinel_rows(e_dir, s)
-                q.processAllAvailable()
-            out = spark.table(name).where(F.col("p_user") >= 0).collect()
-        finally:
-            q.stop()
-    return spark.createDataFrame(out, "p_id long, p_user long, e_id long")
-
-
-_TWS_ORACLE = """
-    SELECT user_id, count(*) AS n_events, max(value) AS max_value
-    FROM events GROUP BY user_id
-    """
-
-
-def streaming_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4's transformWithStateInPandas under the hash gate — the
-    successor API to applyInPandasWithState (streaming_stateful_totals
-    keeps covering the legacy one): typed state variables fetched from
-    a StatefulProcessorHandle instead of one opaque tuple, an explicit
-    processor lifecycle (init/handleInputRows/close), and native TTL
-    support. Reuses the library processor
-    (streaming/stateful.py:UserPeakProcessor, unit-tested for
-    cross-batch convergence): per-user (n_events, max_value)
-    accumulates in a ValueState across two replay waves; update-mode
-    emissions are monotone (count grows, max is order-insensitive over
-    doubles), so the final state recovered per user with max() must
-    equal the batch aggregate. State is partitioned by user_id in the
-    state store — each executor owns its key range, same 100 TB shape
-    as every stateful operator here.
-    """
-    from gotsdb_spark.streaming.stateful import running_user_peaks
-
-    ev = load_table(spark, "events", sf_dir)
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-    wave1 = ev.where(F.col("ts") < F.lit("2024-01-15").cast("timestamp"))
-    wave2 = ev.where(F.col("ts") >= F.lit("2024-01-15").cast("timestamp"))
-
-    replay = _scratch_dir(prefix="gotsdb_tws_")
-    wave1.select(cols).repartition(1).write.mode("append").parquet(replay)
-
-    stats = running_user_peaks(read_events_stream(spark, replay, 64))
-
-    name = f"itg_tws_{os.getpid()}_{next(_counter)}"
-    with _replay_partitions(spark):
-        q = run_stream_to_memory(stats, name, output_mode="update")
-        try:
-            wave2.select(cols).repartition(1).write.mode("append").parquet(replay)
-            q.processAllAvailable()
-            out = (
-                spark.table(name)
-                .groupBy("user_id")
-                .agg(
-                    F.max("n_events").alias("n_events"),
-                    F.max("max_value").alias("max_value"),
-                )
-                .collect()
-            )
-        finally:
-            q.stop()
-    return spark.createDataFrame(
-        out, "user_id long, n_events long, max_value double"
-    )
-
-
-def _register_transform_with_state() -> None:
-    """Register the transformWithState query only where it can run.
-
-    The TWS state protocol talks protobuf between the JVM and the
-    Python stateful-processor workers
-    (pyspark/sql/streaming/proto/StateMessage_pb2.py imports
-    google.protobuf at query start); this container ships no protobuf,
-    so registering unconditionally would guarantee a failing row. Same
-    honest-gating pattern as the PIL codec fallback in
-    operators/multimodal.py: the operator is real and oracled, and
-    becomes live automatically on any cluster whose Python env has
-    protobuf (every stock Spark 4 deployment).
-    """
-    GATED_QUERIES.add("streaming_transform_with_state")
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        return
-    query("streaming_transform_with_state", oracle=_TWS_ORACLE)(
-        streaming_transform_with_state
-    )
-
-
-_register_transform_with_state()
-
-
-# ---------------------------------------------------------------------------
-# Sliding top-k trending via foreachBatch — round 7.
-# ---------------------------------------------------------------------------
 
 _TOPK_TRENDING_ORACLE = """
     WITH hops AS (
@@ -785,16 +720,10 @@ def streaming_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
     (each micro-batch emits only the windows it touched, with their
     new cumulative totals — no watermark, so totals are exact under
     the shuffled replay no matter how events split across batches);
-    foreachBatch MERGEs those delta rows into a (window, type)-keyed
-    parquet state table EXECUTOR-SIDE — delta-wins-else-base
-    full-outer coalesce written to a versioned store path per batch
-    (the warehouse_merge_upsert shape, and the same sink the AB
-    dashboard uses) — exactly the MERGE INTO a Delta/Iceberg
-    leaderboard table a production deployment runs per trigger. The
-    only driver-held state is the current store PATH string, O(1):
-    the (window x type) grain is calendar-bounded, but no grain
-    justifies pulling batch rows onto the driver in a sink — this
-    retires the repo's last driver-held foreachBatch store.
+    `_replay_upsert` MERGEs those delta rows into a (window,
+    type)-keyed parquet store executor-side — the MERGE INTO a
+    Delta/Iceberg leaderboard table a production deployment runs per
+    trigger.
 
     Top-3 ranking happens at read time over the final store snapshot,
     partitioned by window — the leaderboard query, not the stream,
@@ -807,13 +736,7 @@ def streaming_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     replay = _scratch_dir(prefix="gotsdb_stream_topk_")
-    checkpoint = _scratch_dir(prefix="gotsdb_stream_topk_ckpt_")
     ev = load_table(spark, "events", sf_dir)
-    ev.orderBy(F.hash("event_id")).repartition(6).write.mode("overwrite").parquet(
-        replay
-    )
-    from gotsdb_spark.streaming import read_events_stream
-
     counts = (
         read_events_stream(spark, replay, 2)
         .groupBy(
@@ -822,42 +745,13 @@ def streaming_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("ws"), "event_type", "n")
     )
-    store_root = _scratch_dir(prefix="gotsdb_stream_topk_store_")
-    state_path: list = [None]
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        target = os.path.join(store_root, f"v{batch_id}")
-        delta = batch_df.select("ws", "event_type", "n")
-        if state_path[0] is None:
-            delta.write.mode("overwrite").parquet(target)
-        else:
-            cur = spark.read.parquet(state_path[0]).withColumnRenamed(
-                "n", "cur_n"
-            )
-            merged = cur.join(
-                delta.withColumnRenamed("n", "delta_n"),
-                ["ws", "event_type"],
-                "full_outer",
-            ).select(
-                "ws",
-                "event_type",
-                F.coalesce("delta_n", "cur_n").alias("n"),
-            )
-            merged.write.mode("overwrite").parquet(target)
-        state_path[0] = target
-
-    with _replay_partitions(spark):
-        q = (
-            counts.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    board = spark.read.parquet(state_path[0]).select(
+    board = _replay_upsert(
+        spark,
+        counts,
+        [[(replay, ev.orderBy(F.hash("event_id")), 6)]],
+        ["ws", "event_type"],
+        "n",
+    ).select(
         F.col("ws").alias("window_start"),
         "event_type",
         F.col("n").cast("bigint").alias("n"),
@@ -870,11 +764,6 @@ def streaming_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rnk", F.row_number().over(w_rank).cast("bigint")
         ).where(F.col("rnk") <= 3)
     )
-
-
-# ---------------------------------------------------------------------------
-# Live A/B experiment dashboard via foreachBatch upsert — round 8.
-# ---------------------------------------------------------------------------
 
 
 def _ab_ztest_oracle() -> str:
@@ -896,36 +785,22 @@ def streaming_ab_conversion_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode with no watermark: each micro-batch emits only the user-days
     it touched, carrying their new cumulative flag, so a user-day can
     flip 0 -> 1 when its purchase arrives in a later batch than its
-    first event — the upsert (per-batch MERGE into a keyed parquet
-    state table; Delta/Iceberg MERGE INTO in production) must converge
-    to the batch answer under the SHUFFLED replay, which is exactly
-    what the hash gate proves: the output is hash-compared against the
-    identical DuckDB batch oracle as the batch query (same SQL text,
-    imported — both engines and both execution modes agree on every
-    integer).
+    first event — the upsert must converge to the batch answer under
+    the SHUFFLED replay, which is exactly what the hash gate proves:
+    the output is hash-compared against the identical DuckDB batch
+    oracle as the batch query (same SQL text, imported — both engines
+    and both execution modes agree on every integer).
 
     Scale: streaming state and store are user-day-bounded (the
-    randomization-unit grain), never event-bounded — and unlike the
-    (window, type) leaderboard store, user-day grain GROWS with users
-    x experiment duration, so NOTHING data-sized may pass through the
-    driver. The foreachBatch sink therefore MERGEs each micro-batch's
-    delta rows into a (user_id, day)-keyed parquet state table
-    executor-side: delta-wins-else-base full-outer coalesce (the
-    merge_upsert_segments / warehouse_merge_upsert shape,
-    scale_ops.py:486), written to a versioned store path per batch —
-    the only driver-side state is the current store PATH string, O(1)
-    regardless of volume. The read-time z^2 then runs as a 4-cell
+    randomization-unit grain), never event-bounded, but the user-day
+    grain GROWS with users x experiment duration, so nothing
+    data-sized may pass through the driver: `_replay_upsert` keeps the
+    store executor-side. The read-time z^2 then runs as a 4-cell
     aggregate over the final store snapshot — the same DECIMAL(38,0)
     cross-multiplied exact form as the batch query.
     """
     replay = _scratch_dir(prefix="gotsdb_stream_ab_")
-    checkpoint = _scratch_dir(prefix="gotsdb_stream_ab_ckpt_")
     ev = load_table(spark, "events", sf_dir)
-    ev.orderBy(F.hash("event_id")).repartition(6).write.mode(
-        "overwrite"
-    ).parquet(replay)
-    from gotsdb_spark.streaming import read_events_stream
-
     units = (
         read_events_stream(spark, replay, 2)
         .groupBy("user_id", F.col("ts").cast("date").alias("d"))
@@ -935,46 +810,13 @@ def streaming_ab_conversion_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("conv")
         )
     )
-    store_root = _scratch_dir(prefix="gotsdb_stream_ab_store_")
-    # Executor-side keyed state table: the only driver-held state is
-    # the current snapshot PATH (O(1)); every batch's rows stay on the
-    # executors through the MERGE write — nothing data-sized ever
-    # crosses to the driver.
-    state_path: list = [None]
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        target = os.path.join(store_root, f"v{batch_id}")
-        delta = batch_df.select("user_id", "d", "conv")
-        if state_path[0] is None:
-            delta.write.mode("overwrite").parquet(target)
-        else:
-            cur = spark.read.parquet(state_path[0]).withColumnRenamed(
-                "conv", "cur_conv"
-            )
-            merged = cur.join(
-                delta.withColumnRenamed("conv", "delta_conv"),
-                ["user_id", "d"],
-                "full_outer",
-            ).select(
-                "user_id",
-                "d",
-                F.coalesce("delta_conv", "cur_conv").alias("conv"),
-            )
-            merged.write.mode("overwrite").parquet(target)
-        state_path[0] = target
-
-    with _replay_partitions(spark):
-        q = (
-            units.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    board = spark.read.parquet(state_path[0]).select(
+    board = _replay_upsert(
+        spark,
+        units,
+        [[(replay, ev.orderBy(F.hash("event_id")), 6)]],
+        ["user_id", "d"],
+        "conv",
+    ).select(
         (
             F.expr(
                 "conv(substring(md5(CAST(user_id AS STRING)), 1, 4), 16, 10)"
@@ -1013,10 +855,6 @@ def streaming_ab_conversion_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("z2_e6"),
     )
 
-
-# ---------------------------------------------------------------------------
-# Session state-eviction audit (append-mode watermark waves) — round 12.
-# ---------------------------------------------------------------------------
 
 EVICTION_AUDIT_ORACLE = """
     WITH p AS (
@@ -1069,9 +907,8 @@ EVICTION_AUDIT_ORACLE = """
 @query("streaming_session_eviction_audit", oracle=EVICTION_AUDIT_ORACLE)
 def streaming_session_eviction_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """State-EVICTION audit of append-mode session windows: purchases
-    replay in three deterministic waves (before Jan 15 / from Jan 15 /
-    a far-future sentinel), each fully processed before the next is
-    written, and the foreachBatch sink ledgers every emitted session
+    replay in three waves (before Jan 15 / from Jan 15 / a far-future
+    sentinel), and the foreachBatch sink ledgers every emitted session
     with the micro-batch that EVICTED it from the state store — the
     observability piece streaming_session_windows doesn't give: not
     just WHAT sessions exist, but WHEN the watermark advance released
@@ -1096,11 +933,11 @@ def streaming_session_eviction_audit(spark: SparkSession, sf_dir: str) -> DataFr
     into exactly the predicted watermark wave.
 
     Scale: the sink appends each micro-batch's emitted sessions to a
-    parquet ledger executor-side (no data-sized driver state — the
-    streaming_ab_conversion_live convention); the only driver-side
-    collect is the DISTINCT BATCH-ID list, bounded by the wave count.
-    Streaming state is user-session-bounded and the watermark evicts
-    it; the audit itself is one groupBy over the session-grain ledger.
+    parquet ledger executor-side (no data-sized driver state); the
+    only driver-side collect is the DISTINCT BATCH-ID list, bounded by
+    the wave count. Streaming state is user-session-bounded and the
+    watermark evicts it; the audit itself is one groupBy over the
+    session-grain ledger.
 
     Determinism: session bounds, event counts and microsecond
     durations are exact integers off exact timestamps; wave ids come
@@ -1113,16 +950,8 @@ def streaming_session_eviction_audit(spark: SparkSession, sf_dir: str) -> DataFr
     ev = load_table(spark, "events", sf_dir).where(
         F.col("event_type") == "purchase"
     )
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     cut = F.lit("2024-01-15").cast("timestamp")
-    wave1 = ev.where(F.col("ts") < cut)
-    wave2 = ev.where(F.col("ts") >= cut)
-    sentinel = spark.createDataFrame(
-        [(-1, "2025-01-01 00:00:00", -1, "purchase", 0.0, None)],
-        "event_id long, ts string, user_id long, event_type string,"
-        " value double, props string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-
+    sentinel = [(-1, _utc_us("2025-01-01"), -1, "purchase", 0.0, None)]
     stream = session_window_values(
         read_events_stream(spark, replay, 64),
         gap="30 minutes",
@@ -1136,24 +965,18 @@ def streaming_session_eviction_audit(spark: SparkSession, sf_dir: str) -> DataFr
             "append"
         ).parquet(store)
 
-    wave1.select(cols).repartition(1).write.mode("append").parquet(replay)
-    with _replay_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(ledger)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            wave2.select(cols).repartition(1).write.mode("append").parquet(
-                replay
-            )
-            q.processAllAvailable()
-            _append_sentinel_rows(replay, sentinel)
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _replay(
+        spark,
+        lambda: stream.writeStream.foreachBatch(ledger)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
+        .start(),
+        [
+            [(replay, ev.where(F.col("ts") < cut), 1)],
+            [(replay, ev.where(F.col("ts") >= cut), 1)],
+            [(replay, sentinel, 1)],
+        ],
+    )
     evicted = spark.read.parquet(store)
     # Wave-count-bounded (3), never data-sized: the distinct batch ids.
     bids = sorted(
@@ -1187,10 +1010,6 @@ def streaming_session_eviction_audit(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-# ---------------------------------------------------------------------------
-# Checkpoint-restart exactly-once replay — round 13.
-# ---------------------------------------------------------------------------
-
 CHECKPOINT_RESTART_ORACLE = """
     SELECT date_trunc('hour', ts) AS window_start,
            event_type,
@@ -1211,25 +1030,21 @@ def streaming_checkpoint_restart_replay(
     gate: a watermarked tumbling-window aggregation writes to a parquet
     sink with a checkpoint, is STOPPED mid-timeline, and a brand-new
     query instance resumes from the same checkpoint — the final sink
-    must equal DuckDB aggregating the full event set in batch. This
-    promotes tests/test_streaming_recovery.py's state-store recovery
-    contract into the driver's oracle gate: the restarted query must
-    (a) skip every already-committed source file via the offset log,
-    (b) restore the straddling windows' partial counts from the
-    HDFS-backed state store (the epoch-1 watermark parks just behind
-    the cutoff, so the cutoff hour's state is durable ONLY in the
-    checkpoint), and (c) never re-expose epoch-1 output rows through
-    the sink's transaction log.
+    must equal DuckDB aggregating the full event set in batch. The
+    restarted query must (a) skip every already-committed source file
+    via the offset log, (b) restore the straddling windows' partial
+    counts from the state store (the epoch-1 watermark parks just
+    behind the cutoff, so the cutoff hour's state is durable ONLY in
+    the checkpoint), and (c) never re-expose epoch-1 output rows
+    through the sink's transaction log.
 
-    Replay layout: epoch 1 = purchases/signups before Jan 15 11:30
-    (a cut that splits a live hour at EVERY fixture scale, pinned by
-    tests/test_round13_ops.py), processed to quiescence, query
-    stopped; epoch
-    2 = a NEW query instance on the remaining timeline plus one
-    far-future sentinel (3 days past max ts) whose watermark push
-    closes and emits every real window while its own window never
-    emits. Sums use exact e3 integers so the cross-epoch merge is
-    hash-exact, not tolerance-compared.
+    Replay layout: epoch 1 = purchases/signups before Jan 15 11:30 (a
+    cut that splits a live hour at every fixture scale), processed to
+    quiescence, query stopped; epoch 2 = a NEW query instance on the
+    remaining timeline plus one far-future sentinel (3 days past max
+    ts) whose watermark push closes and emits every real window while
+    its own window never emits. Sums use exact e3 integers so the
+    cross-epoch merge is hash-exact, not tolerance-compared.
 
     Scale: watermark bounds state at O(open windows x types) at any
     volume; the parquet sink + checkpoint pair is exactly the
@@ -1243,22 +1058,11 @@ def streaming_checkpoint_restart_replay(
     replay = _scratch_dir(prefix="gotsdb_ckpt_replay_")
     out = _scratch_dir(prefix="gotsdb_ckpt_out_")
     ckpt = _scratch_dir(prefix="gotsdb_ckpt_log_")
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     ev = load_table(spark, "events", sf_dir).where(
         F.col("event_type").isin("purchase", "signup")
     )
     cutoff = F.lit("2024-01-15 11:30:00").cast("timestamp")
-    wave1 = ev.where(F.col("ts") < cutoff)
-    wave2 = ev.where(F.col("ts") >= cutoff)
-    mx = ev.agg(F.max("ts").alias("mx")).collect()[0]["mx"]  # 1-row bound
-    sentinel = (
-        spark.createDataFrame(
-            [(10**9, None, 0, "purchase", 0.0, "{}")],
-            "event_id long, ts timestamp, user_id long,"
-            " event_type string, value double, props string",
-        )
-        .withColumn("ts", F.lit(mx) + F.expr("INTERVAL 3 DAYS"))
-    )
+    sentinel = [(10**9, _max_ts_us(ev) + 3 * _DAY_US, 0, "purchase", 0.0, "{}")]
 
     def start():
         agg = (
@@ -1286,30 +1090,51 @@ def streaming_checkpoint_restart_replay(
             .start()
         )
 
-    with _replay_partitions(spark):
-        # Epoch 1: first half of the timeline, then a planned stop.
-        wave1.select(cols).repartition(2).write.mode("append").parquet(replay)
-        q1 = start()
-        q1.processAllAvailable()
-        q1.stop()
-        # Epoch 2: rest of the timeline + flush sentinel land while the
-        # job is down; a NEW instance resumes from the same checkpoint
-        # (epoch-1 files still in the source dir — offset log skips them).
-        wave2.select(cols).repartition(2).write.mode("append").parquet(replay)
-        _append_sentinel_rows(replay, sentinel)
-        q2 = start()
-        q2.processAllAvailable()
-        q2.stop()
-
+    # Epoch 1: first half of the timeline, then a planned stop.
+    _replay(spark, start, [[(replay, ev.where(F.col("ts") < cutoff), 2)]])
+    # Epoch 2: the rest of the timeline and the flush sentinel land
+    # while the job is down; a NEW instance resumes from the same
+    # checkpoint (epoch-1 files stay in the source dir; the offset log
+    # skips them).
+    _replay(
+        spark,
+        start,
+        [[(replay, ev.where(F.col("ts") >= cutoff), 2), (replay, sentinel, 1)]],
+    )
     return spark.read.schema(
         "window_start timestamp, event_type string,"
         " n bigint, sum_v_milli bigint"
     ).parquet(out)
 
 
-# ---------------------------------------------------------------------------
-# Streaming rate-limit audit — round 13.
-# ---------------------------------------------------------------------------
+def _per_minute_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-(minute, event_type) event counts, as emitted by a real
+    replay: a watermarked 1-minute tumbling aggregation in append mode.
+
+    All events land first (4 shuffled files, 2 per trigger); a
+    far-future sentinel (3 days past max ts) then pushes the 10-minute
+    watermark beyond every real minute, so append mode emits them all.
+    The sentinel's own window never closes and never appears. State
+    and output are bounded by calendar-minutes x types at any event
+    volume.
+    """
+    replay = _scratch_dir(prefix="gotsdb_stream_minute_")
+    ev = load_table(spark, "events", sf_dir)
+    sentinel = [(10**9, _max_ts_us(ev) + 3 * _DAY_US, 0, "sentinel", 0.0, "{}")]
+    per_min = (
+        read_events_stream(spark, replay, 2)
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 minute").alias("w"), "event_type")
+        .agg(F.count("*").cast("long").alias("n"))
+        .select(F.col("w.start").alias("m"), "event_type", "n")
+    )
+    return _replay_to_memory(
+        spark,
+        per_min,
+        [[(replay, ev.orderBy(F.hash("event_id")), 4)], [(replay, sentinel, 1)]],
+        "m timestamp, event_type string, n bigint",
+    ).localCheckpoint(eager=False)
+
 
 _RATE_BUDGET_PER_MIN = 50
 
@@ -1339,68 +1164,24 @@ RATE_LIMIT_ORACLE = f"""
 
 @query("streaming_rate_limit_audit", oracle=RATE_LIMIT_ORACLE)
 def streaming_rate_limit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingest backpressure audit off a REAL streaming replay: per-type
-    per-minute arrival counts maintained by a watermarked 1-minute
-    tumbling aggregation in append mode, then reduced at read time to
-    the rate-limiter readout — observed peak events/minute, WHEN the
-    peak happened, and how many minutes exceeded the
-    {budget}/min budget. This is the measurement that sizes a
-    production rate limiter / trigger interval (the backpressure twin
-    of streaming_session_eviction_audit's state ledger), and the hash
-    gate proves the streamed per-minute counters equal DuckDB's batch
-    per-minute aggregation exactly.
-
-    Replay layout: all events land first (shuffled files, 2 per
-    trigger); a far-future sentinel (3 days past max ts) then pushes
-    the 10-minute watermark beyond every real minute so append mode
-    emits them all; the sentinel's own window never closes and never
-    appears. Peak-minute ties resolve to the EARLIEST minute in both
-    engines (min over the max-count minutes).
-
-    Scale: streaming state and the emitted frame are bounded by
-    calendar-minutes x types (43.2k minutes/month x handful of types)
-    at ANY event volume — more events only bump counters; the
-    read-time reduction is two dictionary-sized aggregates.
+    """Ingest backpressure audit off a REAL streaming replay: the
+    per-type per-minute arrival counts of `_per_minute_counts`, reduced
+    at read time to the rate-limiter readout — observed peak
+    events/minute, WHEN the peak happened, and how many minutes
+    exceeded the {budget}/min budget. This is the measurement that
+    sizes a production rate limiter / trigger interval (the
+    backpressure twin of streaming_session_eviction_audit's state
+    ledger), and the hash gate proves the streamed per-minute counters
+    equal DuckDB's batch per-minute aggregation exactly. Peak-minute
+    ties resolve to the EARLIEST minute in both engines (min over the
+    max-count minutes); the read-time reduction is two
+    dictionary-sized aggregates.
 
     Reference parity: the reference ingests via synchronous HTTP
     point-writes with no flow control (main.go:79); this is [TARGET]
     streaming machinery.
     """
-    replay = _scratch_dir(prefix="gotsdb_stream_rate_")
-    ev = load_table(spark, "events", sf_dir)
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-    mx_ts = ev.agg(F.max("ts").alias("mx")).collect()[0]["mx"]  # 1-row bound
-    sentinel = (
-        spark.createDataFrame(
-            [(10**9, None, 0, "sentinel", 0.0, "{}")],
-            "event_id long, ts timestamp, user_id long,"
-            " event_type string, value double, props string",
-        )
-        .withColumn("ts", F.lit(mx_ts) + F.expr("INTERVAL 3 DAYS"))
-    )
-    per_min = (
-        read_events_stream(spark, replay, 2)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 minute").alias("w"), "event_type")
-        .agg(F.count("*").cast("long").alias("n"))
-        .select(F.col("w.start").alias("m"), "event_type", "n")
-    )
-    name = f"itg_rate_{os.getpid()}_{next(_counter)}"
-    ev.orderBy(F.hash("event_id")).select(cols).repartition(4).write.mode(
-        "append"
-    ).parquet(replay)
-    with _replay_partitions(spark):
-        q = run_stream_to_memory(per_min, name, output_mode="append")
-        try:
-            q.processAllAvailable()
-            _append_sentinel_rows(replay, sentinel)
-            q.processAllAvailable()
-            out = spark.table(name).collect()
-        finally:
-            q.stop()
-    emitted = spark.createDataFrame(
-        out, "m timestamp, event_type string, n bigint"
-    ).localCheckpoint(eager=False)
+    emitted = _per_minute_counts(spark, sf_dir)
     mx = emitted.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n_minutes"),
         F.max("n").cast("long").alias("max_per_min"),
@@ -1433,10 +1214,6 @@ streaming_rate_limit_audit.__doc__ = streaming_rate_limit_audit.__doc__.format(
 )
 
 
-# ---------------------------------------------------------------------------
-# Streaming gap / outage detector — round 13.
-# ---------------------------------------------------------------------------
-
 GAP_AUDIT_ORACLE = """
     WITH per_min AS MATERIALIZED (
       SELECT date_trunc('minute', ts) AS m, event_type
@@ -1465,28 +1242,18 @@ GAP_AUDIT_ORACLE = """
 @query("streaming_gap_outage_audit", oracle=GAP_AUDIT_ORACLE)
 def streaming_gap_outage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest gap / outage detector off a REAL streaming replay: the
-    same watermarked 1-minute tumbling aggregation as
-    streaming_rate_limit_audit maintains per-type active-minute
-    counters in append mode; at read time the longest silence per type
-    is the max minute-difference between CONSECUTIVE active minutes,
-    with WHEN it began (earliest tie) — the ingest-health twin of the
-    rate-limit audit: that one reads the peak, this reads the longest
-    quiet stretch, which is what pages an on-call when a producer
-    stalls. Minute resolution is the honest streamable grain: state
-    stays bounded by calendar-minutes x types at any volume (a
-    raw-event lag chain would carry per-event state forever).
-
-    Replay layout (shared convention): all events land first (shuffled
-    files, 2 per trigger), a far-future sentinel pushes the 10-minute
-    watermark past every real minute so append emits every window; the
-    sentinel's own window never closes and never appears. The hash
-    gate proves the streamed active-minute spine equals DuckDB's batch
-    per-minute aggregation exactly; the gap chain itself is exact
-    integer minute arithmetic on that spine in both engines.
-
-    Scale: streaming state bounded by minutes x types; the read-time
-    lag window is partitioned by type over the minute dictionary
-    (~43.2k rows/month) — never row-count-sized.
+    active minutes per type from `_per_minute_counts` (the same stream
+    as streaming_rate_limit_audit); at read time the longest silence
+    per type is the max minute-difference between CONSECUTIVE active
+    minutes, with WHEN it began (earliest tie) — the ingest-health twin
+    of the rate-limit audit: that one reads the peak, this reads the
+    longest quiet stretch, which is what pages an on-call when a
+    producer stalls. Minute resolution is the honest streamable grain:
+    state stays bounded by calendar-minutes x types at any volume (a
+    raw-event lag chain would carry per-event state forever). The gap
+    chain is exact integer minute arithmetic in both engines; the
+    read-time lag window is partitioned by type over the minute
+    dictionary (~43.2k rows/month) — never row-count-sized.
 
     Reference parity: the reference ingests via synchronous HTTP
     point-writes and cannot see silence at all (main.go:79); this is
@@ -1494,41 +1261,7 @@ def streaming_gap_outage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    replay = _scratch_dir(prefix="gotsdb_stream_gap_")
-    ev = load_table(spark, "events", sf_dir)
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-    mx_ts = ev.agg(F.max("ts").alias("mx")).collect()[0]["mx"]  # 1-row bound
-    sentinel = (
-        spark.createDataFrame(
-            [(10**9, None, 0, "sentinel", 0.0, "{}")],
-            "event_id long, ts timestamp, user_id long,"
-            " event_type string, value double, props string",
-        )
-        .withColumn("ts", F.lit(mx_ts) + F.expr("INTERVAL 3 DAYS"))
-    )
-    per_min = (
-        read_events_stream(spark, replay, 2)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 minute").alias("w"), "event_type")
-        .agg(F.count("*").cast("long").alias("n"))
-        .select(F.col("w.start").alias("m"), "event_type")
-    )
-    name = f"itg_gap_{os.getpid()}_{next(_counter)}"
-    ev.orderBy(F.hash("event_id")).select(cols).repartition(4).write.mode(
-        "append"
-    ).parquet(replay)
-    with _replay_partitions(spark):
-        q = run_stream_to_memory(per_min, name, output_mode="append")
-        try:
-            q.processAllAvailable()
-            _append_sentinel_rows(replay, sentinel)
-            q.processAllAvailable()
-            out = spark.table(name).collect()
-        finally:
-            q.stop()
-    emitted = spark.createDataFrame(
-        out, "m timestamp, event_type string"
-    ).localCheckpoint(eager=False)
+    emitted = _per_minute_counts(spark, sf_dir)
     gaps = emitted.select(
         "event_type",
         "m",

@@ -11,12 +11,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-# Names whose registration is environment-gated (e.g. on an optional
-# runtime dependency): present in QUERIES only where the dependency
-# exists. Ledger tooling and consistency tests treat these as known on
-# every host so the ledger is identical everywhere.
-GATED_QUERIES: set[str] = set()
-
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a named query; ``oracle`` is equivalent DuckDB SQL.

@@ -415,15 +415,14 @@ def test_registry_ledger_consistency():
     import json
     import os
 
-    from gotsdb_spark.operators import GATED_QUERIES, ORACLES, QUERIES
+    from gotsdb_spark.operators import ORACLES, QUERIES
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(here, "tools", "verify_ledger.json")) as fh:
         ledger = json.load(fh)
     missing = [n for n in QUERIES if n not in ledger]
     assert not missing, f"queries absent from ledger (run tools/update_coverage.py): {missing}"
-    # gated names stay ledgered even on hosts where they don't register
-    stale = [n for n in ledger if n not in QUERIES and n not in GATED_QUERIES]
+    stale = [n for n in ledger if n not in QUERIES]
     assert not stale, f"ledger names no longer registered: {stale}"
     orphans = [n for n in ORACLES if n not in QUERIES]
     assert not orphans, f"oracles without queries: {orphans}"
@@ -853,9 +852,9 @@ def _registry_plan_sweep(spark):
 
     # Batch queries build (and, for eager operators, run tiny sf0.001
     # jobs) independently -> small driver thread pool (guide §2.6).
-    # Integration-module entries REPLAY real streams and pin session
-    # conf for the replay's lifetime (_replay_partitions), so they stay
-    # serial — conf save/restore must not interleave.
+    # Integration-module entries REPLAY real streams and cap session
+    # conf for the replay's lifetime (inside integration._replay), so
+    # they stay serial — conf save/restore must not interleave.
     from concurrent.futures import ThreadPoolExecutor
 
     items = list(QUERIES.items())

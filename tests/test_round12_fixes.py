@@ -119,7 +119,7 @@ def test_eviction_audit_ledger_is_executor_side():
     from gotsdb_spark.operators import integration
 
     src = inspect.getsource(integration.streaming_session_eviction_audit)
-    sink = src.split("def ledger", 1)[1].split("wave1.select", 1)[0]
+    sink = src.split("def ledger", 1)[1].split("_replay(", 1)[0]
     assert ".collect()" not in sink, "the sink must never collect rows"
     assert ".parquet(store)" in sink
     collects = [

@@ -188,21 +188,24 @@ def test_checkpoint_restart_replay_matches_batch(spark):
 
 
 def test_streaming_topk_sink_is_executor_side():
-    """Scale-design structure pin (round-13, VERDICT r12 #5): the
-    leaderboard foreachBatch sink must MERGE each micro-batch into a
-    keyed parquet state table executor-side — the last driver-held
-    dict store is retired; the only driver state is the path string."""
+    """Scale-design structure pin: the leaderboard foreachBatch sink
+    must MERGE each micro-batch into a keyed parquet state table
+    executor-side; the only driver state is the path string. The query
+    runs on the shared keyed-upsert sink, so both are pinned."""
     import inspect
 
     from gotsdb_spark.operators import integration
 
-    src = inspect.getsource(integration.streaming_topk_trending)
-    assert ".collect()" not in src, (
-        "streaming_topk_trending must not collect batch rows to the "
-        "driver"
-    )
-    assert "full_outer" in src and ".parquet(" in src
-    assert "spark.read.parquet(state_path[0])" in src
+    query_src = inspect.getsource(integration.streaming_topk_trending)
+    sink_src = inspect.getsource(integration._replay_upsert)
+    assert "_replay_upsert(" in query_src
+    for src in (query_src, sink_src):
+        assert ".collect()" not in src, (
+            "streaming_topk_trending must not collect batch rows to the "
+            "driver"
+        )
+    assert "full_outer" in sink_src and ".parquet(" in sink_src
+    assert "spark.read.parquet(state_path[0])" in sink_src
 
 
 # --------------------------------- prefix-filter pair-budget guard

@@ -545,25 +545,29 @@ def test_streaming_ab_matches_batch_operator(spark):
 
 
 def test_streaming_ab_sink_is_executor_side():
-    """Scale-design structure pin (round-12, VERDICT r11 #1): the
-    foreachBatch sink must MERGE each micro-batch into a keyed parquet
-    state table executor-side — never batch_df.collect() into a
-    driver-side dict, which grows with users x days and is a driver
-    OOM at scale. The only driver-held state is the store path string."""
+    """Scale-design structure pin: the foreachBatch sink must MERGE
+    each micro-batch into a keyed parquet state table executor-side —
+    never batch_df.collect() into a driver-side dict, which grows with
+    users x days and is a driver OOM at scale. The only driver-held
+    state is the store path string. The query runs on the shared
+    keyed-upsert sink, so both are pinned."""
     import inspect
 
     from gotsdb_spark.operators import integration
 
-    src = inspect.getsource(integration.streaming_ab_conversion_live)
-    assert ".collect()" not in src, (
-        "streaming_ab_conversion_live must not collect batch rows to "
-        "the driver"
-    )
+    query_src = inspect.getsource(integration.streaming_ab_conversion_live)
+    sink_src = inspect.getsource(integration._replay_upsert)
+    assert "_replay_upsert(" in query_src
+    for src in (query_src, sink_src):
+        assert ".collect()" not in src, (
+            "streaming_ab_conversion_live must not collect batch rows to "
+            "the driver"
+        )
     # The sink performs the delta-wins keyed MERGE and persists it.
-    assert "full_outer" in src and ".parquet(" in src
+    assert "full_outer" in sink_src and ".parquet(" in sink_src
     # And the final readout is loaded back from the executor-side
     # store, not rebuilt from driver memory.
-    assert "spark.read.parquet(state_path[0])" in src
+    assert "spark.read.parquet(state_path[0])" in sink_src
 
 
 # ---------------------------------------------------------------------------

@@ -141,6 +141,53 @@ def test_stream_stream_interval_join_matches_batch_on_small_replay(spark, tmp_pa
     assert got == want and len(want) > 0
 
 
+def test_left_outer_interval_join_emits_nulls_on_small_replay(spark, tmp_path):
+    """The left-outer interval join on the replay driver: a purchase
+    with no error in its preceding hour emits once with a NULL e_id,
+    after a sentinel wave moves both watermarks past its window and a
+    nudge wave runs the batch that emits it. The result equals the
+    batch left join over the same rows."""
+    import os
+
+    from gotsdb_spark.operators.integration import _replay_to_memory, _utc_us
+    from gotsdb_spark.streaming.ingest import join_purchases_with_recent_errors
+
+    ev = load_table(spark, "events", SF)
+    purchases = ev.where(F.col("event_type") == "purchase")
+    errors = ev.where(F.col("event_type") == "error")
+    p_dir, e_dir = str(tmp_path / "p"), str(tmp_path / "e")
+    for d in (p_dir, e_dir):
+        os.makedirs(d)
+    waves = [[(p_dir, purchases, 1), (e_dir, errors, 1)]]
+    for k, day in enumerate(["2024-03-01", "2024-03-02"]):
+        sentinel = [(20_000_000 + k, _utc_us(day), -1, "sentinel", 0.0, None)]
+        waves.append([(p_dir, sentinel, 1), (e_dir, sentinel, 1)])
+    joined = join_purchases_with_recent_errors(
+        read_events_stream(spark, p_dir, 64),
+        read_events_stream(spark, e_dir, 64),
+        "1 hour",
+        how="leftOuter",
+    ).select("p_id", "e_id")
+    got = {
+        (r["p_id"], r["e_id"])
+        for r in _replay_to_memory(
+            spark, joined, waves, "p_id long, e_id long", partitions=4
+        )
+        .where(F.col("p_id") < 20_000_000)
+        .collect()
+    }
+    want = {
+        (r["p_id"], r["e_id"])
+        for r in join_purchases_with_recent_errors(
+            purchases, errors, "1 hour", how="leftOuter"
+        )
+        .select("p_id", "e_id")
+        .collect()
+    }
+    assert got == want
+    assert any(e_id is None for _, e_id in got)
+
+
 @pytest.mark.slow
 def test_stream_stream_interval_join_matches_batch(spark, replay_dir):
     from gotsdb_spark.streaming.ingest import join_purchases_with_recent_errors
@@ -336,8 +383,9 @@ def test_sentinel_rows_land_as_one_utc_file(spark, tmp_path):
     from gotsdb_spark.streaming.ingest import EVENT_SCHEMA
 
     ts = dt.datetime(2024, 1, 1, 12, 30, tzinfo=dt.timezone.utc)
+    ts_us = int(ts.timestamp()) * 1_000_000
+    _append_sentinel_rows(str(tmp_path), [(7, ts_us, 3, "view", 1.5, "p")])
     rows = spark.createDataFrame([(7, ts, 3, "view", 1.5, "p")], EVENT_SCHEMA)
-    _append_sentinel_rows(str(tmp_path), rows)
     (name,) = os.listdir(tmp_path)
     assert name.startswith("part-") and name.endswith(".parquet")
     ts_type = pq.read_schema(tmp_path / name).field("ts").type

@@ -14,7 +14,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from gotsdb_spark.operators import GATED_QUERIES, ORACLES, QUERIES  # noqa: E402
+from gotsdb_spark.operators import ORACLES, QUERIES  # noqa: E402
 
 
 def update_ledger() -> None:
@@ -35,14 +35,11 @@ def update_ledger() -> None:
     except (OSError, ValueError):
         ledger = {}
     gen = max(ledger.values(), default=0) + 1
-    # Environment-gated names are ledgered on every host (their
-    # registration varies by runtime deps, the ledger must not).
-    known = set(QUERIES) | set(GATED_QUERIES)
-    added = [n for n in known if n not in ledger]
+    added = [n for n in QUERIES if n not in ledger]
     for n in added:
         ledger[n] = gen
-    # drop names no longer registered anywhere
-    ledger = {k: v for k, v in ledger.items() if k in known}
+    # drop names no longer registered
+    ledger = {k: v for k, v in ledger.items() if k in QUERIES}
     with open(path, "w") as fh:
         json.dump(ledger, fh, indent=0, sort_keys=True)
     if added:
