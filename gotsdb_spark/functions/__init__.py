@@ -1,8 +1,6 @@
 from gotsdb_spark.functions.exprs import (
     cosine,
     dot,
-    half_up_round,
-    md5_bucket,
     norm,
     word_shingles,
 )
@@ -12,6 +10,4 @@ __all__ = [
     "dot",
     "norm",
     "word_shingles",
-    "md5_bucket",
-    "half_up_round",
 ]

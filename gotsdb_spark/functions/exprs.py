@@ -4,12 +4,7 @@ library.
 Everything here is a pure Column→Column combinator over built-in
 pyspark.sql.functions: JVM-evaluated, usable in batch and streaming,
 and (by construction) reproducible in ANSI SQL for oracle checks.
-The conventions:
-
-- Hashing uses md5 only (portable across engines, no seed state).
-- Rounding is explicit half-up via floor(x*s+0.5)/s (Spark's round()
-  half-up vs DuckDB's half-even makes bare round() non-portable).
-- Vector math uses zip_with/aggregate — no Python in the hot path.
+Vector math uses zip_with/aggregate — no Python in the hot path.
 """
 
 from __future__ import annotations
@@ -58,18 +53,3 @@ def word_shingles(text: Column, k: int = 3, sep: str = " ") -> Column:
         )
     )
 
-
-def md5_bucket(ident: Column, n_hex_digits: int = 1) -> Column:
-    """Deterministic hash bucket from a row identity: the first
-    n_hex_digits of md5(ident), i.e. 16**n buckets.
-
-    The portable sampling/bucketing primitive: no RNG, no seed,
-    identical in any engine with md5."""
-    return F.substring(F.md5(ident.cast("string")), 1, n_hex_digits)
-
-
-def half_up_round(x: Column, digits: int = 2) -> Column:
-    """Half-up rounding, bit-identical across Spark and DuckDB
-    (both engines' round() disagree on ties)."""
-    scale = 10**digits
-    return F.floor(x * scale + F.lit(0.5)) / scale

@@ -34,7 +34,11 @@ Spark-native design (SURVEY.md §1.3) — not a translation:
   ``part-<uuid>.snappy.parquet`` file of small row groups, written
   under a hidden ``.``-prefixed name and renamed into place, so a
   reader of the dir (Spark skips ``.``/``_`` names) sees the whole
-  segment or none of it.
+  segment or none of it. A flush that leaves more than ``_MAX_SEGMENTS``
+  files then merges the smallest ones, up to ``materialize_threshold``
+  rows, into one key-sorted file on the driver — a size-tiered merge,
+  as in an LSM tree — so a log that is never compacted still promotes
+  from a bounded number of files.
   The engine therefore needs a data dir the driver can reach as a local
   (POSIX) path, as `_recover`, `compact` and `list_cold` already do.
 - `compact()` is the explicit log rewrite: one row per key. A log of at
@@ -99,6 +103,10 @@ _SEGMENT_ENCODING = {
 # large collection decodes at most one group of this many rows per
 # segment. Smaller groups make that read cheaper and the file larger.
 _SEGMENT_ROW_GROUP_ROWS = 4096
+# A flush that leaves more log files than this merges the smallest ones
+# (`Engine._merge_small_segments`), so a driver-sized log is promoted
+# from at most this many files however often it is flushed.
+_MAX_SEGMENTS = 4
 # Row-group size in bytes of a file of a Spark compaction. Its rows are
 # sorted by key too, so a point read decodes at most one group of about
 # this size per file instead of Spark's default 128 MiB group.
@@ -445,9 +453,8 @@ class Engine:
     def _compacted(self, df: DataFrame) -> DataFrame:
         """Latest value per key: the log-compaction view.
 
-        At 100 TB this is one shuffle on `key`; with the log bucketed by
-        key (write path below) AQE keeps partitions balanced and the
-        window never sees more than one key's history per task.
+        One shuffle on `key`: each task's window sees only the history
+        of the keys hashed to it.
         """
         w = W.partitionBy("key").orderBy(F.desc("write_ts"), F.desc("seq"))
         return (
@@ -473,7 +480,10 @@ class Engine:
         """The collection's current latest-per-key view (base ⊎ pending).
 
         This is the DataFrame handle analytics run against — the KV API
-        below is point lookups on top of it.
+        below is point lookups on top of it. It reads the log files
+        listed at promotion, so once a merging flush or compact() of
+        the same collection has deleted them, an action on it fails
+        instead of reading stale data.
         """
         with self._lock:
             if id not in self._hot_dict:
@@ -555,7 +565,9 @@ class Engine:
         ``_SEGMENT_ROW_GROUP_ROWS`` rows, its seqs continue strictly
         above every seq in the log, and all its rows share one
         ``write_ts``. An empty auto-created collection is persisted as
-        a zero-row segment."""
+        a zero-row segment. If the log then has more than
+        ``_MAX_SEGMENTS`` files, its small segments are merged
+        (`_merge_small_segments`), also without a Spark job."""
         with self._lock:
             if id not in self._hot_dict:
                 raise _err_not_found_hot(id)
@@ -580,6 +592,34 @@ class Engine:
                 )
                 self._seq_floor[id] = floor + n
             self._evict(id)
+            self._merge_small_segments(path)
+
+    def _merge_small_segments(self, path: str) -> None:
+        """If the log at ``path`` has more than ``_MAX_SEGMENTS`` files,
+        fold its smallest files whose rows, counted from the footers,
+        sum to at most ``materialize_threshold`` into one key-sorted
+        file, if there are at least two such files.
+
+        `_fold` keeps the row of each key that can win over the whole
+        log, so any subset of files may be folded. The inputs are
+        deleted only after the merged file is renamed into place: a
+        crash in between leaves duplicates of rows, which fold as one.
+        """
+        if len(_log_files(path)) <= _MAX_SEGMENTS:
+            return
+        chosen, rows = [], 0
+        for f, meta in sorted(_log_footers(path), key=lambda fm: fm[1].num_rows):
+            rows += meta.num_rows
+            if rows > self.materialize_threshold:
+                break
+            chosen.append((f, meta))
+        if len(chosen) < 2:
+            return
+        write_parquet_atomic(
+            path, _fold_log(chosen), row_group_size=_SEGMENT_ROW_GROUP_ROWS, **_SEGMENT_ENCODING
+        )
+        for f, _ in chosen:
+            os.unlink(f)
 
     def _evict(self, id: str) -> None:
         """Drop a hot collection's state (engine.go:121)."""

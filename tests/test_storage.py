@@ -827,3 +827,118 @@ def test_spark_compaction_writes_key_sorted_row_groups_a_probe_prunes(spark, tmp
     assert probe.read_key("c", f"k{key:06d}") == f"v1-{key:06d}-{key * 2654435761 % 2**32:08x}"
     assert read and all(len(groups) == 1 for groups in read)
     assert len(read) <= len(names)
+
+
+def test_flush_bounds_the_segment_count_without_spark_jobs(spark, tmp_path):
+    """20 write+flush rounds on a driver-sized collection: every flush
+    leaves at most _MAX_SEGMENTS log files and no temp file, starts no
+    Spark job and raises the seq floor; reads through the same and a
+    fresh engine equal a dict model after every round."""
+    from gotsdb_spark.storage.engine import _MAX_SEGMENTS
+
+    data = tmp_path / "data"
+    e = Engine(spark, str(data))
+    tracker = spark.sparkContext.statusTracker()
+    model, floors = {}, []
+    for r in range(20):
+        for j in range(5):
+            k = f"k{(r * 7 + j * 3) % 30:02d}"
+            e.write_key("c", k, f"v{r}.{j}")
+            model[k] = f"v{r}.{j}"
+        before = set(tracker.getJobIdsForGroup())
+        e.flush_collection("c")
+        assert set(tracker.getJobIdsForGroup()) == before
+        files, hidden = _segments(data / "c")
+        assert len(files) <= _MAX_SEGMENTS and hidden == []
+        fresh = Engine(spark, str(data))
+        assert {k: e.read_key("c", k) for k in model} == model
+        assert {k: fresh.read_key("c", k) for k in model} == model
+        assert fresh._log_seq_floor("c") == e._log_seq_floor("c")
+        floors.append(e._log_seq_floor("c"))
+    assert all(a < b for a, b in zip(floors, floors[1:]))
+
+
+def test_crash_between_merge_and_unlinks_leaves_readable_duplicates(spark, tmp_path, monkeypatch):
+    """A crash after the merged segment is renamed into place and before
+    its inputs are deleted leaves duplicate rows: a fresh engine's reads
+    and snapshot() still equal the model, and the next flush merges the
+    log back within the bound."""
+    from gotsdb_spark.storage.engine import _MAX_SEGMENTS
+
+    data = tmp_path / "data"
+    e = Engine(spark, str(data))
+    model = {}
+
+    def write_and_flush(n):
+        for i in range(3):
+            e.write_key("c", f"k{(n + i) % 6}", f"v{n}.{i}")
+            model[f"k{(n + i) % 6}"] = f"v{n}.{i}"
+        e.flush_collection("c")
+
+    for n in range(_MAX_SEGMENTS):
+        write_and_flush(n)
+    assert len(_segments(data / "c")[0]) == _MAX_SEGMENTS
+
+    def crash(path):
+        raise OSError("simulated crash before unlink")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "unlink", crash)
+        with pytest.raises(OSError, match="simulated crash"):
+            write_and_flush(_MAX_SEGMENTS)
+    files, hidden = _segments(data / "c")
+    assert len(files) == _MAX_SEGMENTS + 2 and hidden == []
+
+    fresh = Engine(spark, str(data))
+    assert {k: fresh.read_key("c", k) for k in model} == model
+    assert {r["key"]: r["value"] for r in fresh.snapshot("c").collect()} == model
+
+    write_and_flush(_MAX_SEGMENTS + 1)
+    assert len(_segments(data / "c")[0]) <= _MAX_SEGMENTS
+    assert {k: Engine(spark, str(data)).read_key("c", k) for k in model} == model
+
+
+def test_flush_of_a_large_log_merges_only_its_small_tail(spark, tmp_path, monkeypatch):
+    """Above the threshold a flush merges only the small segments: the
+    large base segment stays as written, no Spark job starts, and a
+    point read still decodes one row group per file."""
+    import pyarrow.parquet as pq
+
+    from gotsdb_spark.storage import engine as engine_mod
+    from gotsdb_spark.storage.engine import _MAX_SEGMENTS, _SEGMENT_ROW_GROUP_ROWS
+
+    n = 2 * _SEGMENT_ROW_GROUP_ROWS + 5
+    data = tmp_path / "data"
+    e = Engine(spark, str(data), materialize_threshold=100)
+    for i in range(n):
+        e.write_key("c", f"k{i:06d}", f"v{i}")
+    e.flush_collection("c")
+    (base,) = _segments(data / "c")[0]
+    assert pq.read_metadata(data / "c" / base).num_row_groups == 3
+
+    model = {}
+    jobs = _job_ids(spark)
+    for r in range(2 * _MAX_SEGMENTS):
+        for j in range(4):
+            k = f"k{(r * 1031 + j * 2053) % n:06d}"
+            e.write_key("c", k, f"w{r}.{j}")
+            model[k] = f"w{r}.{j}"
+        e.flush_collection("c")
+        files = _segments(data / "c")[0]
+        assert len(files) <= _MAX_SEGMENTS and base in files
+    assert _job_ids(spark) == jobs
+
+    read = []
+    real = engine_mod._read_log
+    monkeypatch.setattr(
+        engine_mod, "_read_log", lambda p, m, groups=None: read.append(groups) or real(p, m, groups)
+    )
+    probe = Engine(spark, str(data), materialize_threshold=100)
+    probe.load_collection("c")
+    assert probe._hot_dict["c"] is None
+    for k, v in model.items():
+        read.clear()
+        assert probe.read_key("c", k) == v
+        assert read and all(len(groups) == 1 for groups in read)
+        assert len(read) <= len(files)
+    assert probe.read_key("c", f"k{n - 1:06d}") == f"v{n - 1}"
