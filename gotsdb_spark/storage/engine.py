@@ -38,7 +38,8 @@ Spark-native design (SURVEY.md §1.3) — not a translation:
   files then merges the smallest ones, up to ``materialize_threshold``
   rows, into one key-sorted file on the driver — a size-tiered merge,
   as in an LSM tree — so a log that is never compacted still promotes
-  from a bounded number of files.
+  from a bounded number of files. The streaming KV sink writes a
+  driver-sized micro-batch through the same `write_segment`.
   The engine therefore needs a data dir the driver can reach as a local
   (POSIX) path, as `_recover`, `compact` and `list_cold` already do.
 - `compact()` is the explicit log rewrite: one row per key. A log of at
@@ -117,16 +118,19 @@ _COMPACT_ROW_GROUP_BYTES = 1 << 20
 _ID_RE = re.compile(r"^[a-zA-Z0-9]+$")
 
 
-def write_parquet_atomic(directory: str, table: pa.Table, **options) -> None:
-    """Write ``table`` into ``directory`` as one new
-    ``part-<uuid>.snappy.parquet`` file.
+def write_parquet_atomic(
+    directory: str, table: pa.Table, name: str | None = None, **options
+) -> None:
+    """Write ``table`` into ``directory`` as one new file, ``name`` or
+    else ``part-<uuid>.snappy.parquet``.
 
     The file is written under a hidden ``.``-prefixed name in the same
     directory and renamed into place, so Spark readers and file-stream
     sources (which skip ``.``/``_`` names) never see a partial file;
-    a crash before the rename leaves only a hidden leftover. ``options``
-    go to `pyarrow.parquet.write_table`."""
-    name = f"part-{uuid.uuid4().hex}.snappy.parquet"
+    a crash before the rename leaves only a hidden leftover, and a file
+    already called ``name`` is replaced whole. ``options`` go to
+    `pyarrow.parquet.write_table`."""
+    name = name or f"part-{uuid.uuid4().hex}.snappy.parquet"
     tmp = os.path.join(directory, f".{name}.tmp")
     final = os.path.join(directory, name)
     pq.write_table(table, tmp, compression="snappy", **options)
@@ -159,14 +163,46 @@ def _read_log(
             t = pf.read(columns=present, use_threads=False)
         else:
             t = pf.read_row_groups(row_groups, columns=present, use_threads=False)
+    return _as_log_types(t)
+
+
+def _as_log_types(t: pa.Table) -> pa.Table:
+    """``t``'s log columns in log order, each cast to its
+    `_LOG_ARROW_SCHEMA` type; a missing column is nulls. The fields stay
+    nullable: a log may hold a null key (a stream's null input key), on
+    which ``Table.cast(_LOG_ARROW_SCHEMA)`` raises."""
     return pa.table(
         [
             t.column(c.name).cast(c.type)
-            if c.name in present
+            if c.name in t.column_names
             else pa.nulls(t.num_rows, c.type)
             for c in _LOG_ARROW_SCHEMA
         ],
         names=_LOG_ARROW_SCHEMA.names,
+    )
+
+
+def write_segment(directory: str, table: pa.Table, name: str | None = None) -> None:
+    """Write log rows as one segment file of ``directory``
+    (`write_parquet_atomic`, optionally as ``name``): the log types, in
+    ``_SEGMENT_ROW_GROUP_ROWS``-row groups with ``_SEGMENT_ENCODING``.
+    The caller passes the rows sorted by key, so the row groups cover
+    disjoint key ranges that `_probe_log` can prune. Flush, the
+    size-tiered merge, driver compaction and the streaming KV sink all
+    write through here.
+
+    A table that already has the log names and types is written as it
+    is: a flush then pays for no cast, and its non-null ``key`` and
+    ``seq`` stay required columns, with no definition levels."""
+    schema = table.schema
+    if schema.names != _LOG_ARROW_SCHEMA.names or schema.types != _LOG_ARROW_SCHEMA.types:
+        table = _as_log_types(table)
+    write_parquet_atomic(
+        directory,
+        table,
+        name=name,
+        row_group_size=_SEGMENT_ROW_GROUP_ROWS,
+        **_SEGMENT_ENCODING,
     )
 
 
@@ -560,7 +596,7 @@ class Engine:
         Unlike the reference's whole-collection rewrite (cold.go:140),
         this appends only the pending delta as one new log segment —
         O(unflushed writes), not O(collection) — written driver-side by
-        `write_parquet_atomic`, with no Spark job once the seq floor is
+        `write_segment`, with no Spark job once the seq floor is
         known. The segment is sorted by key in row groups of
         ``_SEGMENT_ROW_GROUP_ROWS`` rows, its seqs continue strictly
         above every seq in the log, and all its rows share one
@@ -587,9 +623,7 @@ class Engine:
                     schema=_LOG_ARROW_SCHEMA,
                 )
                 os.makedirs(path, exist_ok=True)
-                write_parquet_atomic(
-                    path, segment, row_group_size=_SEGMENT_ROW_GROUP_ROWS, **_SEGMENT_ENCODING
-                )
+                write_segment(path, segment)
                 self._seq_floor[id] = floor + n
             self._evict(id)
             self._merge_small_segments(path)
@@ -615,9 +649,7 @@ class Engine:
             chosen.append((f, meta))
         if len(chosen) < 2:
             return
-        write_parquet_atomic(
-            path, _fold_log(chosen), row_group_size=_SEGMENT_ROW_GROUP_ROWS, **_SEGMENT_ENCODING
-        )
+        write_segment(path, _fold_log(chosen))
         for f, _ in chosen:
             os.unlink(f)
 
@@ -663,12 +695,7 @@ class Engine:
             footers = _log_footers(path)
             if self._driver_sized(footers):
                 os.makedirs(tmp)
-                write_parquet_atomic(
-                    tmp,
-                    _fold_log(footers),
-                    row_group_size=_SEGMENT_ROW_GROUP_ROWS,
-                    **_SEGMENT_ENCODING,
-                )
+                write_segment(tmp, _fold_log(footers))
                 open(os.path.join(tmp, "_SUCCESS"), "wb").close()
             else:
                 df = self._compacted(self.spark.read.schema(LOG_SCHEMA).parquet(path))

@@ -12,16 +12,24 @@ Scale notes:
 - Watermarks bound state: the windowed aggregations keep only windows
   newer than (max event time − delay); at 100 TB/day this is the only
   viable stateful design (state is O(open windows × groups), not O(events)).
-- A replayed epoch re-runs its foreachBatch sink; the KV-log sink stays
-  correct because the engine's fold, not the file append, is
+- A replayed epoch re-runs its foreachBatch sink. The KV-log sink
+  writes a driver-sized epoch as one file named by its checkpoint and
+  epoch, so the replay replaces that file; a Spark-written epoch is
+  appended again and stays correct only because the engine's fold is
   idempotent (see stream_into_collection_log).
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
+
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from gotsdb_spark.storage.engine import _COMPACT_ROW_GROUP_BYTES, write_segment
 
 # Post-conversion event schema (ts already a µs timestamp — streaming
 # replays read data re-written by gotsdb_spark, not the raw ns fixture).
@@ -103,6 +111,17 @@ def dedup_events(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     )
 
 
+def _fits_driver(df: DataFrame) -> bool:
+    """Spark's own test for a relation small enough to collect to the
+    driver: the optimized plan's size estimate is at most a positive
+    ``spark.sql.autoBroadcastJoinThreshold``. Starts no job; a source
+    without file statistics estimates huge and does not fit."""
+    limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if limit <= 0:
+        return False
+    return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() <= limit
+
+
 def stream_into_collection_log(
     events: DataFrame,
     log_path: str,
@@ -113,26 +132,55 @@ def stream_into_collection_log(
     """Micro-batch upsert into a KV collection log (the streaming analog
     of the reference's HTTP write path, engine.go:175-185).
 
-    foreachBatch appends (key, value, write_ts, seq=epoch) rows to the
+    foreachBatch writes (key, value, write_ts, seq=epoch) rows to the
     same Parquet log format storage.Engine compacts — so a collection
-    can be fed by a stream and read through the KV API.
+    can be fed by a stream and read through the KV API. A micro-batch
+    that fits the driver (`_fits_driver`) is collected with ``toArrow``
+    and written on the driver as one key-sorted segment (`write_segment`)
+    named ``part-<checkpoint hash>-e<epoch>.snappy.parquet``; a larger
+    one is a Spark append of key-sorted files in
+    ``_COMPACT_ROW_GROUP_BYTES`` row groups. Either way `_probe_log` can
+    prune the files by key.
 
-    The file appends are NOT idempotent: an epoch replayed after a
-    failure between the sink write and the checkpoint commit appends a
-    second copy of its rows. Only the engine's fold is: the copies carry
-    the same ``seq`` (the epoch id) and ``write_ts``, so the latest-per-
-    key rule picks an identical row whichever copy it keeps.
+    A replayed epoch (a failure between the sink write and the checkpoint
+    commit) re-runs the sink. A driver-written epoch then replaces its
+    own file, so the log holds each row once; the checkpoint hash keeps
+    two streams writing into one log apart. A Spark-written epoch is
+    appended a second time, and a driver-written file that an Engine
+    merge or compaction has already folded is written again beside the
+    fold: there only the engine's fold is idempotent, because the copies
+    carry the same ``seq`` (the epoch id) and ``write_ts``, so the
+    latest-per-key rule picks an identical row whichever copy it keeps.
+
+    ``write_ts`` is the event time, while a KV-API flush writes the wall
+    clock, so a streamed row loses to a later ``write_key`` + flush of
+    its key unless its event time is later than that flush.
     """
+    tag = hashlib.sha1(os.path.abspath(checkpoint).encode()).hexdigest()[:16]
 
     def sink(batch: DataFrame, epoch_id: int) -> None:
-        (
-            batch.select(
-                F.col(key_col).cast("string").alias("key"),
-                F.col(value_col).cast("string").alias("value"),
-                F.col("ts").alias("write_ts"),
-                F.lit(epoch_id).cast("long").alias("seq"),
-            ).write.mode("append").parquet(log_path)
+        rows = batch.select(
+            F.col(key_col).cast("string").alias("key"),
+            F.col(value_col).cast("string").alias("value"),
+            F.col("ts").alias("write_ts"),
+            F.lit(epoch_id).cast("long").alias("seq"),
         )
+        if not _fits_driver(rows):
+            (
+                rows.sortWithinPartitions("key")
+                .write.mode("append")
+                .option("parquet.block.size", _COMPACT_ROW_GROUP_BYTES)
+                .parquet(log_path)
+            )
+            return
+        t = rows.toArrow()
+        if t.num_rows:
+            os.makedirs(log_path, exist_ok=True)
+            write_segment(
+                log_path,
+                t.take(pc.sort_indices(t, [("key", "ascending")])),
+                name=f"part-{tag}-e{epoch_id:012d}.snappy.parquet",
+            )
 
     return (
         events.writeStream.foreachBatch(sink)

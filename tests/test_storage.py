@@ -286,6 +286,36 @@ def test_each_flush_adds_one_segment_and_no_temp_file(spark, tmp_path):
     assert Engine(spark, str(data)).list_cold() == ["c", "empty"]
 
 
+def test_write_segment_casts_to_log_types_and_keeps_a_null_key(spark, tmp_path):
+    """write_segment casts other column types to the log types, keeps a
+    null key (``Table.cast`` of the log schema would raise on it) and
+    replaces a file written under the same ``name``; the engine then
+    reads the key back."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gotsdb_spark.storage.engine import _LOG_ARROW_SCHEMA, write_segment
+
+    path = tmp_path / "data" / "c"
+    path.mkdir(parents=True)
+    ts = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    for value in ("first", "second"):
+        t = pa.table({
+            "key": ["a", None],
+            "value": [value, "null-key"],
+            "write_ts": pa.array([ts, ts], pa.timestamp("ms", tz="Europe/Berlin")),
+            "seq": pa.array([3, 3], pa.int32()),
+        })
+        write_segment(str(path), t, name="part-e3.snappy.parquet")
+    (name,) = _segments(path)[0]
+    back = pq.read_table(path / name)
+    assert back.schema.types == _LOG_ARROW_SCHEMA.types
+    assert back.column("key").to_pylist() == ["a", None]
+    assert Engine(spark, str(tmp_path / "data")).read_key("c", "a") == "second"
+
+
 def test_stray_temp_segment_is_invisible(spark, tmp_path, monkeypatch):
     """A crash between write and rename leaves the segment under its
     hidden ``.``-prefixed temp name; it must not reach promotion, reads
@@ -316,9 +346,9 @@ def test_stray_temp_segment_is_invisible(spark, tmp_path, monkeypatch):
 
 
 def test_last_writer_wins_over_spark_and_driver_segments(spark, tmp_path):
-    """LWW through a fresh Engine over a log mixing Spark-written
-    segments (a streaming KV-sink batch and the Spark compaction of a
-    log above the threshold) with driver-written flush segments."""
+    """LWW through a fresh Engine over a log mixing a Spark-written
+    segment (the Spark compaction of a log above the threshold) with
+    driver-written segments (a streaming KV-sink batch and flushes)."""
     import datetime as dt
     import os
     import re
@@ -397,11 +427,12 @@ def test_small_log_promotion_and_next_flush_start_no_spark_job(spark, tmp_path):
 
 
 def _mixed_log(spark, tmp_path):
-    """Collection ``mix`` over a streaming-sink batch, the Spark output
-    of compact() above the threshold, driver segments, a segment without
-    a write_ts column (nulls: the row loses to any timestamped row) and
-    one key at equal write_ts with different seqs in separate segments.
-    Returns (data dir, latest value per key)."""
+    """Collection ``mix`` over a driver-written streaming-sink batch, the
+    Spark output of compact() above the threshold, driver flush
+    segments, a segment without a write_ts column (nulls: the row loses
+    to any timestamped row) and one key at equal write_ts with different
+    seqs in two Spark-appended segments. Returns (data dir, latest value
+    per key)."""
     import datetime as dt
 
     import pyarrow as pa

@@ -392,3 +392,186 @@ def test_sentinel_rows_land_as_one_utc_file(spark, tmp_path):
     assert ts_type == pa.timestamp("us", tz="UTC")
     back = spark.read.schema(EVENT_SCHEMA).parquet(str(tmp_path)).collect()
     assert back == rows.collect()
+
+
+# -- the foreachBatch KV-log sink ------------------------------------------
+
+_T0_US = 1_704_067_200_000_000  # 2024-01-01T00:00:00Z
+
+
+def _write_events(path, rows):
+    """One event file of (event_id, ts µs, props) rows, written with
+    pyarrow so the test starts no Spark job for its input."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    ids, ts, props = zip(*rows)
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(ids, pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("us", tz="UTC")),
+            "user_id": pa.array([1] * len(ids), pa.int64()),
+            "event_type": pa.array(["view"] * len(ids)),
+            "value": pa.array([1.0] * len(ids)),
+            "props": pa.array(props),
+        }),
+        path,
+    )
+
+
+def _drain_kv_sink(spark, src, log, ck):
+    """Run the KV sink over ``src`` one file per micro-batch, to the
+    end of the input; returns the finished query."""
+    q = stream_into_collection_log(
+        read_events_stream(spark, src, max_files_per_trigger=1), log, ck
+    ).trigger(availableNow=True).start()
+    try:
+        assert q.awaitTermination(180)
+    finally:
+        q.stop()
+    assert q.exception() is None
+    return q
+
+
+def test_kv_sink_replayed_epoch_replaces_its_file(spark, tmp_path):
+    """An epoch replayed after its commit is lost writes its file again
+    under the same name, so the raw log holds each input row once and
+    one file per epoch; a second stream (another checkpoint) into the
+    same log writes files of its own."""
+    import os
+
+    from gotsdb_spark.storage.engine import _log_files
+
+    src, log = str(tmp_path / "src"), str(tmp_path / "data" / "c")
+    for f in range(2):
+        _write_events(
+            f"{src}/events-{f}.parquet",
+            [(f * 400 + i, _T0_US + f * 10**9 + i, f"p{f}.{i}") for i in range(400)],
+        )
+    ck = str(tmp_path / "ck")
+    _drain_kv_sink(spark, src, log, ck)
+    assert len(_log_files(log)) == 2
+    commits = os.path.join(ck, "commits")
+    newest = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for n in (str(newest), f".{newest}.crc"):
+        if os.path.exists(os.path.join(commits, n)):
+            os.remove(os.path.join(commits, n))
+
+    q = _drain_kv_sink(spark, src, log, ck)
+    assert [p["batchId"] for p in q.recentProgress if p["numInputRows"]] == [newest]
+    assert spark.read.parquet(log).count() == 800
+    assert len(_log_files(log)) == 2
+
+    _drain_kv_sink(spark, src, log, str(tmp_path / "ck2"))
+    assert spark.read.parquet(log).count() == 1600
+    assert len(_log_files(log)) == 4
+
+
+def _gate_input(src):
+    """Two event files of 5,000 rows: file 1 rewrites every third key of
+    file 0 at a later time, and each file has a null event_id. Returns
+    the latest value per key, the null key included."""
+    model = {}
+    for f in range(2):
+        ids = range(5000) if f == 0 else range(0, 15000, 3)
+        rows = [(i, _T0_US + f * 10**10 + i, f"v{f}.{i}") for i in ids][:4999]
+        rows.append((None, _T0_US + f * 10**10, f"null{f}"))
+        _write_events(f"{src}/events-{f}.parquet", rows)
+        model.update({(None if i is None else str(i)): v for i, _, v in rows})
+    return model
+
+
+def _assert_kv_log_matches(spark, data, model):
+    from gotsdb_spark.storage.engine import Engine
+
+    keys = [k for k in model if k is not None]
+    for engine in (Engine(spark, data), Engine(spark, data, materialize_threshold=1)):
+        assert {k: engine.read_key("c", k) for k in keys} == {k: model[k] for k in keys}
+        assert {r["key"]: r["value"] for r in engine.snapshot("c").collect()} == model
+
+
+def test_kv_sink_writes_driver_segments_and_keeps_a_spark_path(spark, tmp_path):
+    """At the default spark.sql.autoBroadcastJoinThreshold a micro-batch
+    fits the driver: it becomes one key-sorted segment of
+    _SEGMENT_ROW_GROUP_ROWS-row groups with disjoint key ranges, with no
+    Hadoop commit files, and its only Spark job is the collect. With the
+    threshold disabled the sink is a Spark write. Both logs read back
+    as the latest value per input key, the null key included."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from gotsdb_spark.storage.engine import (
+        _SEGMENT_ROW_GROUP_ROWS,
+        _log_files,
+        _row_group_ranges,
+    )
+
+    src = str(tmp_path / "src")
+    model = _gate_input(src)
+
+    data = str(tmp_path / "driver")
+    q = _drain_kv_sink(spark, src, f"{data}/c", str(tmp_path / "ck"))
+    batches = [p for p in q.recentProgress if p["numInputRows"]]
+    assert len(batches) == 2
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == len(batches)
+    entries = os.listdir(f"{data}/c")
+    assert not [n for n in entries if n.startswith(("_", ".")) or n.endswith(".crc")]
+    assert len(entries) == 2
+    for name in entries:
+        f = pq.ParquetFile(f"{data}/c/{name}")
+        sizes = [f.metadata.row_group(i).num_rows for i in range(f.metadata.num_row_groups)]
+        assert sizes == [_SEGMENT_ROW_GROUP_ROWS, 5000 - _SEGMENT_ROW_GROUP_ROWS]
+        keys = f.read(columns=["key"]).column("key")
+        assert keys.null_count == 1 and keys[-1].as_py() is None
+        assert keys.to_pylist()[:-1] == sorted(keys.to_pylist()[:-1])
+        ranges = _row_group_ranges(f.metadata, "key")
+        assert all(hi < lo for (_, _, hi), (_, lo, _) in zip(ranges, ranges[1:]))
+    _assert_kv_log_matches(spark, data, model)
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        data = str(tmp_path / "spark")
+        _drain_kv_sink(spark, src, f"{data}/c", str(tmp_path / "ck_spark"))
+    finally:
+        spark.conf.set(key, old)
+    entries = os.listdir(f"{data}/c")
+    assert "_SUCCESS" in entries
+    for f in _log_files(f"{data}/c"):
+        keys = pq.read_table(f, columns=["key"]).column("key")
+        valid = pc.drop_null(keys).to_pylist()
+        assert valid == sorted(valid)
+    _assert_kv_log_matches(spark, data, model)
+
+
+def test_kv_sink_event_time_against_a_kv_api_flush(spark, tmp_path):
+    """The sink's write_ts is the event time and a flush's is the wall
+    clock: a streamed row with a past event time loses to a later
+    write_key + flush of its key, and one with an event time after
+    that flush wins."""
+    import time
+
+    from gotsdb_spark.storage.engine import Engine
+
+    src, data = str(tmp_path / "src"), str(tmp_path / "data")
+    ck = str(tmp_path / "ck")
+    _write_events(f"{src}/events-0.parquet", [(1, _T0_US, "stream-past")])
+    _drain_kv_sink(spark, src, f"{data}/c", ck)
+    assert Engine(spark, data).read_key("c", "1") == "stream-past"
+
+    e = Engine(spark, data)
+    e.write_key("c", "1", "kv-api")
+    e.flush_collection("c")
+    assert Engine(spark, data).read_key("c", "1") == "kv-api"
+
+    future_us = int((time.time() + 86_400) * 1_000_000)
+    _write_events(f"{src}/events-1.parquet", [(1, future_us, "stream-future")])
+    _drain_kv_sink(spark, src, f"{data}/c", ck)
+    assert Engine(spark, data).read_key("c", "1") == "stream-future"
